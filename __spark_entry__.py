@@ -33,6 +33,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalent for each oracle-checkable query,
-    in the same priority order as queries()."""
+    in registration order, like queries()."""
     ordered = load_all_queries()
     return {n: ORACLES[n] for n in ordered if n in ORACLES}

@@ -258,20 +258,16 @@ def exact_jaccard_scores(
     (set semantics — the union size is computed as |a|+|b|-|a∩b|);
     output adds lang_a/lang_b/jaccard.
 
-    ``min_jaccard`` applies the caller's threshold INSIDE the helper,
-    behind an evaluation barrier (optimization r14, guide §4.4): a
-    threshold applied by the caller on the ``jaccard`` alias gets pushed
-    below the projection by alias substitution — Catalyst folded it into
-    the fetch join's condition, where the condition names the
-    intersection twice and the output projection twice more, so every
-    surviving candidate paid up to 4 array-hash-set intersections. With
-    the barrier the intersection is computed exactly once per candidate
-    and the threshold compares cheap integer arithmetic on that column.
-    ``same_lang`` pre-filters cross-language pairs BELOW the barrier
-    (where the predicate can still reach the join), replacing the
-    caller-side lang_a = lang_b filter that the barrier would otherwise
-    strand above the projection. Results are identical either way —
-    filters are conjunctive and deterministic.
+    ``min_jaccard`` applies the caller's threshold inside the helper and
+    ``same_lang`` adds the lang_a = lang_b filter. Catalyst substitutes
+    the ``_inter`` alias into the threshold and pushes both predicates
+    into the fetch join's condition. The optimized plan computes the
+    intersection twice per candidate in that condition (numerator and
+    denominator) and once more per surviving pair in the projection
+    above it. The language equality comes first in the condition, so a
+    cross-language pair is rejected before any intersection. A size
+    filter that rejects impossible pairs before any intersection is the
+    open fix.
 
     Join strategy: the token-set side goes through the SIZE-GATED
     broadcast hint (plans/hints.py) — one row per DISTINCT document,
@@ -311,9 +307,6 @@ def exact_jaccard_scores(
     # jaccard doubles -> identical output under the oracle hash.
     joined = cand.join(a, "doc_a").join(b, "doc_b")
     if same_lang:
-        # below the barrier projection, so Catalyst can still fold the
-        # equality into the fetch joins / evaluate it before the
-        # intersection is ever computed
         joined = joined.where(F.col("lang_a") == F.col("lang_b"))
     inter = F.size(F.array_intersect("_sa", "_sb"))
     if min_jaccard is None:
@@ -321,15 +314,11 @@ def exact_jaccard_scores(
         return joined.select(
             "doc_a", "doc_b", "lang_a", "lang_b", jac.alias("jaccard")
         )
-    # threshold path: intersection behind an eval_once barrier in its own
-    # projection; the threshold and the jaccard arithmetic reference the
-    # _inter COLUMN (cheap), so the expensive set intersection runs
-    # exactly once per candidate pair (guide §4.4 — see docstring)
-    from ..plans.hints import eval_once
-
+    # threshold path: Catalyst inlines _inter into the threshold, which
+    # lands in the fetch join's condition (see docstring)
     with_inter = joined.select(
         "doc_a", "doc_b", "lang_a", "lang_b", "_na", "_nb",
-        eval_once(inter).alias("_inter"),
+        inter.alias("_inter"),
     )
     jac = F.col("_inter").cast("double") / (
         F.col("_na") + F.col("_nb") - F.col("_inter")
@@ -729,8 +718,8 @@ def capped_bucket_pairs(
     chunk = md5-prefix mod ceil(bsz / ``chain_chunk_rows``) — see the
     CHAIN_CHUNK_ROWS note — so the widest sort any single task performs
     is ~chain_chunk_rows rows no matter how degenerate the bucket.
-    Probed at a synthetic 1,000,000-member bucket
-    (scripts/probe_megabucket.py; numbers in NOTES_r11)."""
+    Measured at a synthetic 1,000,000-member bucket (numbers in
+    NOTES_r11)."""
     sizes = buckets.groupBy("band", "bucket").agg(
         F.count("*").alias("bsz"), F.min("doc_id").alias("hub")
     )
@@ -1136,22 +1125,18 @@ def k_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("tset").alias("_nb"),
         )
     )
-    # The >= 0.95 gate referenced _ca/_cb aliases, which Catalyst pushed
-    # below the projection by substitution — the intersection evaluated
-    # once in the pushed filter and again per surviving output column.
-    # eval_once (guide §4.4) pins it to exactly one evaluation per
-    # candidate; the per-doc set sizes ride the (tiny) doc sides like the
-    # Jaccard scorer's (optimization r14). Same integer ratios ->
-    # identical output.
-    from ..plans.hints import eval_once
-
+    # Catalyst substitutes _inter into the >= 0.95 gate and pushes it into
+    # the fetch join's condition, so the optimized plan computes the
+    # intersection twice there (once per containment ratio) and once
+    # more in the projection above. The per-doc set sizes ride the
+    # (tiny) doc sides like the Jaccard scorer's.
     inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
     cont_a = F.col("_inter") / F.col("_na")
     cont_b = F.col("_inter") / F.col("_nb")
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .select("doc_a", "doc_b", "_na", "_nb", eval_once(inter).alias("_inter"))
+        .select("doc_a", "doc_b", "_na", "_nb", inter.alias("_inter"))
         .withColumn("_ca", cont_a)
         .withColumn("_cb", cont_b)
         .where(F.greatest("_ca", "_cb") >= 0.95)

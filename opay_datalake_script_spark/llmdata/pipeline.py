@@ -333,10 +333,12 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(64, F.col("doc_a"))
     )
     # Exact verify via the shared scorer (optimization r14): same joins and
-    # gated hints as the old inline form, but the intersection runs behind
-    # the §4.4 eval_once barrier (exactly once per candidate) and the union
-    # size is the |a|+|b|-|a∩b| arithmetic (tset is array_distinct output,
-    # so the ratios — and therefore the >= 0.6 edge set — are identical).
+    # gated hints as the old inline form, and the union size is the
+    # |a|+|b|-|a∩b| arithmetic (tset is array_distinct output, so the
+    # ratios — and therefore the >= 0.6 edge set — are identical). Only
+    # doc_a/doc_b are kept, so the optimized plan computes the
+    # intersection twice per candidate, both times in the fetch join's
+    # condition (the threshold's numerator and denominator).
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -481,8 +483,7 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
     # shared exact scorer (optimization r14): same equi-joins, plus the
-    # size-gated broadcast hint, the |a|+|b|-|a∩b| union arithmetic and
-    # the §4.4 eval_once barrier the other verify stages already carry
+    # size-gated broadcast hint and the |a|+|b|-|a∩b| union arithmetic
     # (tset is array_distinct output, so the ratios are identical)
     from .dedup import exact_jaccard_scores
 
@@ -1072,16 +1073,14 @@ def k_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("t").alias("tb"),
                           F.size("t").alias("_nb")))
     # |a ∪ b| as |a|+|b|-|a∩b| (t is array_distinct output — exact), with
-    # the sizes computed once per doc on the tiny fetch sides, and the
-    # intersection behind the §4.4 eval_once barrier so the threshold
-    # predicate (which names it twice: numerator and denominator) costs
-    # ONE array-hash-set build per candidate, not two (optimization r14,
-    # same shape as exact_jaccard_scores).
-    from ..plans.hints import eval_once
-
+    # the sizes computed once per doc on the tiny fetch sides (same shape
+    # as exact_jaccard_scores). Catalyst substitutes _inter into the
+    # threshold and pushes it into the fetch join's condition, so the
+    # optimized plan computes the intersection twice per candidate there
+    # (numerator and denominator); the projection is pruned.
     inter = F.size(F.array_intersect("ta", "tb"))
     scored = cross.join(a, "new_id").join(b, "old_id").select(
-        "new_id", "_na", "_nb", eval_once(inter).alias("_inter")
+        "new_id", "_na", "_nb", inter.alias("_inter")
     )
     jac = F.col("_inter").cast("double") / (
         F.col("_na") + F.col("_nb") - F.col("_inter")
@@ -1251,8 +1250,8 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
     # shared exact scorer (optimization r14): identical joins and gated
-    # hint, plus the union arithmetic + §4.4 barrier — see
-    # k_corpus_dedup_pipeline's note; tset is array_distinct output
+    # hint, plus the union arithmetic — see k_corpus_dedup_pipeline's
+    # note; tset is array_distinct output
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -1655,14 +1654,13 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("tset").alias("_nb"),
         F.size("sset").alias("_nsb"),
     ))
-    # Both set intersections behind the §4.4 eval_once barrier, sizes from
-    # the per-doc fetch sides, |a ∪ b| as |a|+|b|-|a∩b| (tset/sset are
-    # array_distinct output — exact): the OR-of-thresholds predicate then
-    # compares integer arithmetic, paying exactly one token-intersect and
-    # one shingle-intersect per candidate instead of token-intersect +
-    # token-union + shingle-intersect (optimization r14).
-    from ..plans.hints import eval_once
-
+    # Sizes from the per-doc fetch sides, |a ∪ b| as |a|+|b|-|a∩b|
+    # (tset/sset are array_distinct output — exact), so no token union is
+    # built (optimization r14). Catalyst substitutes _jint/_cint into the
+    # OR-of-thresholds predicate and pushes it into the fetch join's
+    # condition: the optimized plan computes the token intersection twice
+    # and the shingle intersection once per candidate, all in that
+    # condition; the projection is pruned.
     jint = F.size(F.array_intersect("ta", "tb"))
     cint = F.size(F.array_intersect("sa", "sb"))
     scored = (
@@ -1671,8 +1669,8 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("lang_a") == F.col("lang_b"))
         .select(
             "doc_a", "doc_b", "_na", "_nb", "_nsa", "_nsb",
-            eval_once(jint).alias("_jint"),
-            eval_once(cint).alias("_cint"),
+            jint.alias("_jint"),
+            cint.alias("_cint"),
         )
     )
     jac = F.col("_jint").cast("double") / (

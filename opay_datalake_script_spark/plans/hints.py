@@ -66,38 +66,6 @@ def _default_gate_bytes() -> int:
     return VERIFY_FETCH_BROADCAST_MAX_BYTES
 
 
-def eval_once(col):
-    """Evaluation barrier for an EXPENSIVE deterministic expression whose
-    alias a downstream filter references (guide §4.4).
-
-    Catalyst pushes a filter below a projection by SUBSTITUTING the
-    column's defining expression into the predicate, so an expensive
-    expression (a per-row set intersection over token arrays, say) is
-    evaluated once in the pushed-down filter/join condition and AGAIN in
-    the projection that produces the column — and codegen does not do
-    cross-operator common-subexpression elimination, so every surviving
-    row pays twice (the LSH verify stage paid up to 4x: the threshold
-    predicate folded into the fetch join's condition, which names the
-    intersection twice, plus twice more in the output projection).
-
-    Wrapping the expression in a vacuously-true NONDETERMINISTIC
-    conditional makes the projection non-substitutable: Catalyst may not
-    push filters through, duplicate, or collapse projections containing
-    nondeterministic expressions (PushPredicateThroughNonJoin /
-    CollapseProject both require determinism). Value-identical: rand() is
-    uniform on [0, 1), so ``rand() > -1`` is always true and the branch
-    always yields ``col`` — under task retries included.
-
-    Alias the result ONCE in its own select() and have every consumer
-    (the filter, the arithmetic) reference the resulting COLUMN: column
-    references are deterministic, so downstream predicates on derived
-    arithmetic still push down **to** (but not through) the barrier
-    projection, and the wrapped expression is evaluated exactly once per
-    row. Apply to expensive expressions only — the barrier also blocks
-    legitimate pushdown of other filters through the same projection."""
-    return F.when(F.rand(0) > F.lit(-1.0), col)
-
-
 def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's size estimate for the frame's optimized logical plan,
     in bytes. Driver-side metadata only — triggers no job."""

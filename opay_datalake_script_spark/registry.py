@@ -40,198 +40,13 @@ _QUERY_MODULES = (
     "opay_datalake_script_spark.llmdata.pipeline",
 )
 
-# The driver's per-round correctness run verifies only the first ~50
-# registry entries, so registration order decides which queries get
-# driver-verified evidence. Derive the order from the CORRECTNESS_r*
-# files the driver leaves in the repo root (a hand-maintained snapshot
-# went stale by round 2 — see ADVICE.md):
-#   1. queries whose LATEST driver row FAILED (they carry fixes that
-#      need re-proof),
-#   2. queries listed in _RECHECK (code or oracle changed this round) —
-#      changed code needs re-proof MORE than new code needs first proof
-#      (round-5 lesson: its changed queries lost every window slot to
-#      earlier-registered never-checked IDs and went un-reproven),
-#   3. queries with no driver row at all, registration order,
-#   4. everything else, stalest driver evidence first (ascending round
-#      of the latest row) — older rows were taken against older fixture
-#      generations (the events.ts encoding changed between rounds), so
-#      refreshing the oldest evidence first keeps the whole registry
-#      anchored to current fixtures,
-# with registration order as the tiebreaker within each tier.
-# A recheck is SATISFIED once the entry has a non-failed driver row at
-# round >= its proof round; satisfied entries fall back to the stale-
-# refresh tier instead of crowding the window again next round (round-8
-# lesson: the 13 round-7 re-proofs, all green in CORRECTNESS_r07, were
-# still sorting into tier 1 and would have displaced 7 of the 8 spilled
-# first-rows).
-_RECHECK_PROOF_ROUND = 12
-_RECHECK = (
-    # Round-12 wave (VERDICT r11 item 5): t_q02's per-part keeper —
-    # the last UNBOUNDED-width keeper window — converted to groupBy-min +
-    # join-back after measuring that the synthetic fixtures violate the
-    # TPC-H 4-suppliers/part construction (max 52 at sf0.1, growing
-    # with SF). Catalyst folds the mn-equality into the join, so the
-    # keeper runs as a composite-key (s_acctbal, p_partkey) equi-join
-    # (pinned in test_plans under both broadcast regimes). Hash-green
-    # at sf0.01+sf0.001 with a determinism double-run. t_q02 was
-    # already in the r12 window (r4 stale slot), so this recheck
-    # displaces nothing. (The whole 25-ID r11 wave landed green in
-    # CORRECTNESS_r11 and is cleared — see git for the list.)
-    "t_q02_min_cost_supplier",
-)
-
-# New IDs registered THIS round whose first driver row is deliberately
-# deferred behind higher-priority entries (VERDICT r6 item 7 precedent).
-# They order after every plain never-checked entry but before the
-# stale-evidence tier — deferral yields slots to OTHER first-rows and
-# to active rechecks, NOT to stale-refresh entries (tier (2,1) still
-# sorts before (3,*)). Empty in round 12: the r11 defer
-# (k_corpus_dedup_winnow) landed its green first row in
-# CORRECTNESS_r11, and r12 registers new IDs only within the ≤3
-# budget printed by scripts/forecast_window.py.
-_DEFER_FIRST_ROW: frozenset[str] = frozenset()
-
-# Deferred-recheck wave: IDs whose changed code is locally verified but
-# whose driver re-proof waits one round because a higher-priority wave
-# owns the current window. Self-activating once a COMPLETE CORRECTNESS
-# file for round >= _RECHECK_NEXT_AFTER_ROUND exists (see r7/r8 history
-# in git). Empty this round: the r11 recheck wave (11 banding
-# consumers) fits the window with room for the stale tail.
-_RECHECK_NEXT_AFTER_ROUND = 11
-_RECHECK_NEXT_PROOF_ROUND = 12
-_RECHECK_NEXT: tuple[str, ...] = ()
-
-
-def _driver_history() -> tuple[dict[str, tuple[int, dict]], int]:
-    """(latest (round, row) per query ID, max COMPLETE round) across all
-    CORRECTNESS_r*.json. A partial file from a crashed-and-resumed run
-    must not activate the deferred-recheck wave mid-round (it would
-    displace the first-rows it exists to protect). Completeness is
-    DERIVED, not hardcoded (ADVICE r7): any round older than the newest
-    file is final by construction (the driver never appends to a past
-    round), and the newest file is complete once it reaches the LARGEST
-    finished round's window size (fallback 50 when no history exists).
-    The max — not the single most recent finished round's size — is the
-    bar (ADVICE r8): if the most recent finished round was itself
-    crash-abandoned small, its size would let a genuinely partial
-    newest file count as complete and activate the deferred-recheck
-    wave mid-round, displacing the first-rows it exists to protect.
-    The max of finished sizes can only come from a round the driver
-    actually completed at that window size, so it cannot under-count;
-    a future driver window PERMANENTLY smaller than history would need
-    this constant revisited (documented trade-off, loud in review)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, tuple[int, dict]] = {}
-    sizes: dict[int, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        sizes[rnd] = len(rows)
-        for name, row in rows.items():
-            latest[name] = (rnd, row)
-    max_complete = 0
-    if sizes:
-        max_rnd = max(sizes)
-        finished = [r for r in sizes if r < max_rnd]
-        if finished:
-            max_complete = max(finished)
-        threshold = max(sizes[r] for r in finished) if finished else 50
-        if sizes[max_rnd] >= threshold:
-            max_complete = max_rnd
-    return latest, max_complete
-
-
-def _row_failed(row: dict) -> bool:
-    """A driver row counts as FAILED when a comparison explicitly
-    mismatched (an explicit False is a failure no matter what err says
-    — even 'no_oracle' must not mask it), or when a non-benign harness
-    exception (truthy err) prevented the VALUE-hash check from passing
-    — rows_match alone is not enough, since an exception between the
-    row-count check and the hash comparison leaves an unverified value
-    hash. Benign markers ('no_oracle' today; any future marker
-    accompanying a full hash pass) must not promote green queries to
-    tier 0 and crowd the ~50-slot window (ADVICE r6 + r7 review).
-
-    Shared by `_reorder` and scripts/forecast_window.py — the forecast
-    must predict with the SAME failure definition the driver-facing
-    ordering uses, or it silently forecasts a different window."""
-    return (
-        row.get("rows_match") is False
-        or row.get("hash_match") is False
-        or (
-            bool(row.get("err"))
-            and row.get("err") != "no_oracle"
-            and row.get("hash_match") is not True
-        )
-    )
-
-
-def _evidence_tier(
-    name: str, hit: tuple[int, dict] | None, next_wave_active: bool
-) -> tuple[int, int, str]:
-    """The evidence-freshness tier of one registry entry: (major, minor,
-    label). `_reorder` sorts on (major, minor) and the forecast script
-    prints the label, so prediction and ordering cannot drift apart.
-
-    Tier order: FAILED rows re-prove first; then active rechecks (a
-    recheck whose re-proof already LANDED — non-failed row at round >=
-    its proof round — must NOT keep its tier-1 slot: it would crowd the
-    next window and displace the first-rows behind it, observed round 8
-    when 13 green r7 re-proofs left room for only 1 of 8 spilled
-    first-rows); then the deferred recheck wave once its round arrives;
-    then never-checked first-rows (deferred ones last); then stalest
-    evidence, oldest round first."""
-    if hit is not None and _row_failed(hit[1]):
-        return (0, 0, "FAILED-reproof")
-    if name in _RECHECK and (hit is None or hit[0] < _RECHECK_PROOF_ROUND):
-        return (1, 0, "recheck")
-    if name in _RECHECK_NEXT and (
-        hit is None or hit[0] < _RECHECK_NEXT_PROOF_ROUND
-    ):
-        # deferred re-proof wave: behind current rechecks once its
-        # round arrives, behind all first-rows until then
-        if next_wave_active:
-            return (1, 1, "recheck-next")
-        return (2, 2, "recheck-next-deferred")
-    if hit is None:
-        if name in _DEFER_FIRST_ROW:
-            return (2, 1, "first-row-deferred")
-        return (2, 0, "first-row")
-    return (3, hit[0], "stale-refresh")
-
-
-def _reorder(mapping: dict) -> dict:
-    """Order the registry so the driver's ~50-entry window lands on the
-    queries whose evidence is most in need of (re)freshening."""
-    history, max_complete_round = _driver_history()
-    reg_pos = {n: i for i, n in enumerate(mapping)}
-    next_wave_active = max_complete_round >= _RECHECK_NEXT_AFTER_ROUND
-
-    def key(name: str):
-        major, minor, _label = _evidence_tier(
-            name, history.get(name), next_wave_active
-        )
-        return (major, minor, reg_pos[name])
-
-    return {n: mapping[n] for n in sorted(mapping, key=key)}
-
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query builder under a §2 query ID.
 
     ``oracle`` is the DuckDB-runnable ANSI SQL equivalent; omit it for
-    ops that are not SQL-expressible (the driver then records a weaker
-    rows-only check).
+    ops that are not SQL-expressible (tests then run a weaker rows-only
+    check).
 
     Duplicate IDs raise: last-wins silently dropped an operator out of
     the registry for a full round (`c_join_interval_overlap` shadowed
@@ -262,8 +77,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def load_all_queries() -> dict[str, QueryFn]:
-    """Import every query module (idempotent) and return the registry,
-    ordered so driver-unverified queries come first (see _PRIORITY)."""
+    """Import every query module (idempotent) and return the registry in
+    registration order: module order in ``_QUERY_MODULES``, then
+    definition order within each module."""
     for mod in _QUERY_MODULES:
         import_module(mod)
-    return _reorder(QUERIES)
+    return QUERIES

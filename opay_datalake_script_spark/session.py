@@ -15,6 +15,10 @@ expressed as their Spark equivalents (SURVEY.md §4 table). Config choices:
 * dynamic partition overwrite: the Spark equivalent of Hive
   ``INSERT OVERWRITE ... PARTITION`` the reference used for idempotent
   daily reloads.
+* driver heap sized to the host (``driver_heap``): in local mode the
+  driver JVM is the whole engine, and a heap larger than the memory the
+  host or its cgroup grants gets the JVM OOM-killed instead of spilling.
+  ``extra_conf={"spark.driver.memory": ...}`` overrides it.
 """
 
 from __future__ import annotations
@@ -24,6 +28,36 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Share of the host's memory given to the driver heap. The rest covers
+# the JVM's off-heap use (metaspace, Arrow and shuffle buffers), the
+# Python workers of pandas UDFs and the page cache of spill files.
+HEAP_SHARE = 0.4
+
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def host_memory_bytes() -> int:
+    """Physical memory, capped by the cgroup memory limit if one is set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_LIMITS:
+        try:
+            with open(path) as fh:
+                raw = fh.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            total = min(total, int(raw))
+    return total
+
+
+def driver_heap() -> str:
+    """``spark.driver.memory`` for this host: HEAP_SHARE of its memory,
+    in whole GiB, at least 1g (6g on a 15.7 GiB host)."""
+    return f"{max(1, int(host_memory_bytes() * HEAP_SHARE) >> 30)}g"
 
 
 def get_spark(
@@ -77,7 +111,7 @@ def get_spark(
         # rejects; read it as long and convert in io.load (ns -> us).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", "64g")
+        .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,18 +1,18 @@
 #!/usr/bin/env python
-"""Generic one-off sf-differential for a named family of registry IDs
-(generalizes scripts/diff_sf01_banding.py — VERDICT r12 item 3 wants
-the deterministic-ML family run at sf0.1, and future rounds will want
-other families). Runs each ID's Spark query vs its DuckDB oracle at the
-given fixture dir with the same comparator pytest uses (driver-parity
-hash semantics) and prints one line per ID.
+"""sf-differential for a named family of registry IDs. Runs each ID's
+Spark query vs its DuckDB oracle at the given fixture dir with the same
+comparator pytest uses and prints one line per ID.
 
 Usage: python scripts/diff_sf_family.py [--sf SF_DIR] ID [ID ...]
        python scripts/diff_sf_family.py --family ml   # built-in lists
 
 Built-in families:
-  ml      the r11 deterministic-ML conversions (Lloyd fit et al.) —
-          never previously run against DuckDB at sf0.1's 2,000x64-d
-          embeddings (verified at sf0.01/sf0.001 only)
+  ml       the r11 deterministic-ML conversions (Lloyd fit et al.) —
+           never previously run against DuckDB at sf0.1's 2,000x64-d
+           embeddings (verified at sf0.01/sf0.001 only)
+  banding  every job on the shared LSH banding helper; sf0.1's
+           3921-wide bucket is the one fixture that exercises the
+           star + chunked-chain path above the chunk/cap knobs
 """
 
 import argparse
@@ -41,6 +41,20 @@ FAMILIES = {
         "k_ann_ivf",
         "k_ann_ivf_stats",
         "k_centroid_per_label",
+    ],
+    "banding": [
+        "k_jaccard_pairs",
+        "k_near_dedup_lsh",
+        "k_lsh_band_candidates",
+        "k_ngram_jaccard",
+        "k_containment_dedup",
+        "k_minhash_jaccard_estimate",
+        "k_edit_distance_pairs",
+        "k_winnow_candidates",
+        "k_image_ahash_dedup",
+        "k_incremental_dedup",
+        "k_corpus_build_pipeline",
+        "k_corpus_dedup_winnow",
     ],
 }
 

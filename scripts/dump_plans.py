@@ -1,7 +1,6 @@
 """Dump .explain("formatted") for named queries to plans/<round>/ files.
 
-Usage: python scripts/dump_plans.py <outdir> <suffix> [query ...]
-       (no query names -> the bench.py headline set)
+Usage: python scripts/dump_plans.py <outdir> <suffix> query [query ...]
 
 Driver-side only: builds each DataFrame and captures its formatted
 physical plan; no job runs, so it is safe to run on a loaded machine.
@@ -19,12 +18,9 @@ from opay_datalake_script_spark.registry import QUERIES, load_all_queries
 
 
 def main() -> None:
-    outdir, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
-    if not names:
-        import bench
-
-        names = list(bench.BENCH_QUERIES)
+    if len(sys.argv) < 4:
+        sys.exit(__doc__.strip().splitlines()[2])
+    outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="plan-dump")
     load_all_queries()

@@ -21,3 +21,19 @@ def test_contract_shapes(spark):
     oracles = entrymod.oracle_sql()
     assert set(oracles) <= set(qs)
     assert "d_agg_basic" in oracles
+
+
+def test_driver_heap_fits_the_host(spark):
+    """The session's heap is sized to the host, never more than
+    HEAP_SHARE of its memory: a heap above what the host or its cgroup
+    grants gets the JVM OOM-killed instead of spilling."""
+    from opay_datalake_script_spark.session import (
+        HEAP_SHARE,
+        driver_heap,
+        host_memory_bytes,
+    )
+
+    heap = driver_heap()
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == heap
+    heap_bytes = int(heap.removesuffix("g")) << 30
+    assert heap_bytes <= max(1 << 30, host_memory_bytes() * HEAP_SHARE)

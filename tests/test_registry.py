@@ -1,93 +1,55 @@
-"""Tests for the registry's driver-window ordering — the mechanism that
-decides which ~50 queries get driver-verified evidence each round.
-Round 5 lost every re-proof slot to a tiebreak bug in this ordering,
-so the tier contract is pinned here with synthetic history:
-
-  tier 0: latest driver row FAILED (incl. harness exceptions),
-  tier 1: in _RECHECK (code/oracle changed this round),
-  tier 2: never driver-checked, registration order,
-  tier 3: stalest evidence first (ascending round).
-"""
+"""Registry contract tests: registration order, the duplicate-ID guard,
+the banding-oracle mirror tripwire and the plan audit's window detector."""
 
 from __future__ import annotations
 
+import builtins
 import importlib.util
+import json
 import os
 
+import __spark_entry__ as entry
 from opay_datalake_script_spark import registry
 
-
-def _order_with(history, recheck, names, monkeypatch, max_complete=None):
-    # default: every round present in history counts as complete (the
-    # common case for these synthetic histories)
-    if max_complete is None:
-        max_complete = max((rnd for rnd, _ in history.values()), default=0)
-    monkeypatch.setattr(
-        registry, "_driver_history", lambda: (history, max_complete)
-    )
-    monkeypatch.setattr(registry, "_RECHECK", recheck)
-    mapping = {n: (lambda s, d: None) for n in names}
-    return list(registry._reorder(mapping))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def test_reorder_tier_contract(monkeypatch):
-    names = ["q_stale_r1", "q_never_b", "q_failed", "q_recheck",
-             "q_stale_r3", "q_never_a", "q_errored"]
-    history = {
-        "q_stale_r1": (1, {"rows_match": True, "hash_match": True, "err": None}),
-        "q_stale_r3": (3, {"rows_match": True, "hash_match": True, "err": None}),
-        "q_failed": (4, {"rows_match": True, "hash_match": False, "err": None}),
-        # harness exception: matches null, err set -> must count as failed
-        "q_errored": (4, {"rows_match": None, "hash_match": None,
-                          "err": "Traceback ..."}),
-        "q_recheck": (4, {"rows_match": True, "hash_match": True, "err": None}),
-    }
-    got = _order_with(history, ("q_recheck",), names, monkeypatch)
-    assert got == [
-        "q_failed", "q_errored",          # tier 0, registration order
-        "q_recheck",                       # tier 1: changed this round
-        "q_never_b", "q_never_a",         # tier 2: registration order
-        "q_stale_r1", "q_stale_r3",       # tier 3: stalest first
-    ]
+def test_registry_order_is_registration_order(tmp_path, monkeypatch):
+    """load_all_queries() returns QUERIES in registration order, opens no
+    file, and so cannot be reordered by a result file an earlier run left
+    in the repo root or the working directory; oracle_sql() keeps the
+    same order."""
+    registry.load_all_queries()
+    expected = list(registry.QUERIES)
+    failed_row = {expected[-1]: {"rows_match": False, "hash_match": False,
+                                 "err": "mismatch"}}
+    leftovers = [os.path.join(_ROOT, "CORRECTNESS_r999.json"),
+                 str(tmp_path / "CORRECTNESS_r999.json")]
+    monkeypatch.chdir(tmp_path)
+    try:
+        for path in leftovers:
+            with open(path, "w") as fh:
+                json.dump(failed_row, fh)
 
+        def no_open(*args, **kwargs):
+            raise AssertionError(f"load_all_queries() opened {args[:1]}")
 
-def test_recheck_beats_never_checked(monkeypatch):
-    """The round-5 regression: a changed query with OLD green evidence
-    must outrank a never-checked query registered earlier."""
-    names = ["q_never_first", "q_changed_later"]
-    history = {
-        "q_changed_later": (2, {"rows_match": True, "hash_match": True,
-                                "err": None}),
-    }
-    got = _order_with(history, ("q_changed_later",), names, monkeypatch)
-    assert got == ["q_changed_later", "q_never_first"]
-
-
-def test_no_oracle_err_is_not_a_failure(monkeypatch):
-    """rows-only-by-design queries record err='no_oracle'; that is
-    evidence, not a failure — they must sort by staleness, not tier 0."""
-    names = ["q_rows_only", "q_green"]
-    history = {
-        "q_rows_only": (2, {"rows_match": True, "hash_match": None,
-                            "err": "no_oracle"}),
-        "q_green": (1, {"rows_match": True, "hash_match": True, "err": None}),
-    }
-    got = _order_with(history, (), names, monkeypatch)
-    assert got == ["q_green", "q_rows_only"]  # r1 evidence is staler than r2
-
-
-def test_recheck_ids_all_exist_in_registry():
-    """A typo in _RECHECK silently wastes a window slot — every entry
-    must name a registered query."""
-    queries = registry.load_all_queries()
-    missing = [n for n in registry._RECHECK if n not in queries]
-    assert not missing, missing
+        with monkeypatch.context() as m:
+            m.setattr(builtins, "open", no_open)
+            got = list(registry.load_all_queries())
+        assert got == expected
+        assert list(entry.oracle_sql()) == [
+            n for n in expected if n in registry.ORACLES
+        ]
+    finally:
+        for path in leftovers:
+            if os.path.exists(path):
+                os.remove(path)
 
 
 def _load_plan_audit():
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "plan_audit", os.path.join(root, "scripts", "plan_audit.py")
+        "plan_audit", os.path.join(_ROOT, "scripts", "plan_audit.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -116,169 +78,6 @@ def test_plan_audit_window_detector():
         "specifiedwindowframe(...)) AS _we0#9L], [_pid#8 ASC NULLS FIRST]\n"
     )
     assert len(flagged) == 1 and "mx#3" in flagged[0], flagged
-
-
-def test_defer_first_row_orders_after_other_never_checked(monkeypatch):
-    """A new ID in _DEFER_FIRST_ROW (k_ann_grid this round) must sort
-    after EVERY plain never-checked entry — even later-registered ones —
-    but before the stale-evidence tier, so it cannot displace the older
-    backlog's first driver rows (VERDICT r6 item 7)."""
-    names = ["q_deferred_new", "q_never_later", "q_stale"]
-    history = {
-        "q_stale": (1, {"rows_match": True, "hash_match": True, "err": None}),
-    }
-    monkeypatch.setattr(registry, "_DEFER_FIRST_ROW", frozenset({"q_deferred_new"}))
-    got = _order_with(history, (), names, monkeypatch)
-    assert got == ["q_never_later", "q_deferred_new", "q_stale"]
-
-
-def test_benign_err_with_rows_pass_is_not_a_failure(monkeypatch):
-    """ADVICE r6: a future benign err marker (or empty string) on a row
-    whose comparisons passed must NOT promote the query to tier 0 and
-    crowd the window; only a truthy err WITHOUT a rows_match pass (or an
-    explicit matches-False) counts as failed."""
-    names = ["q_marker_green", "q_empty_err", "q_marker_no_rows", "q_green"]
-    history = {
-        "q_marker_green": (2, {"rows_match": True, "hash_match": True,
-                               "err": "some_future_marker"}),
-        "q_empty_err": (2, {"rows_match": True, "hash_match": True, "err": ""}),
-        # truthy err AND no rows pass -> genuinely failed
-        "q_marker_no_rows": (2, {"rows_match": None, "hash_match": None,
-                                 "err": "connection_reset"}),
-        "q_green": (1, {"rows_match": True, "hash_match": True, "err": None}),
-    }
-    got = _order_with(history, (), names, monkeypatch)
-    assert got[0] == "q_marker_no_rows"  # only the real failure in tier 0
-    assert got[1:] == ["q_green", "q_marker_green", "q_empty_err"]
-
-
-def test_explicit_mismatch_not_masked_and_post_rows_exception_fails(monkeypatch):
-    """r7 review: (a) err='no_oracle' must not mask an explicit
-    rows_match/hash_match False; (b) an exception AFTER the row-count
-    check passed (rows True, hash null, truthy err) leaves the value
-    hash unverified and must count as failed."""
-    names = ["q_false_with_no_oracle", "q_post_rows_exception", "q_green"]
-    history = {
-        "q_false_with_no_oracle": (3, {"rows_match": False, "hash_match": None,
-                                       "err": "no_oracle"}),
-        "q_post_rows_exception": (3, {"rows_match": True, "hash_match": None,
-                                      "err": "connection_reset"}),
-        "q_green": (1, {"rows_match": True, "hash_match": True, "err": None}),
-    }
-    got = _order_with(history, (), names, monkeypatch)
-    assert got == ["q_false_with_no_oracle", "q_post_rows_exception", "q_green"]
-
-
-def test_recheck_next_ids_all_exist_in_registry():
-    queries = registry.load_all_queries()
-    missing = [n for n in registry._RECHECK_NEXT if n not in queries]
-    assert not missing, missing
-    # and none is simultaneously in the current-round recheck list
-    assert not set(registry._RECHECK_NEXT) & set(registry._RECHECK)
-
-
-def test_satisfied_recheck_retires_to_stale_tier(monkeypatch):
-    """Round-8 lesson: a _RECHECK entry whose re-proof LANDED (green row
-    at round >= _RECHECK_PROOF_ROUND) must drop out of tier 1 — the 13
-    green r7 re-proofs were otherwise crowding the r8 window and
-    displacing 7 of the 8 spilled first-rows. A FAILED row at the proof
-    round still goes to tier 0, and a pre-proof-round row keeps tier 1."""
-    names = ["q_satisfied", "q_unproven", "q_failed_at_proof", "q_never"]
-    monkeypatch.setattr(registry, "_RECHECK_PROOF_ROUND", 7)
-    green = {"rows_match": True, "hash_match": True, "err": None}
-    history = {
-        "q_satisfied": (7, dict(green)),
-        "q_unproven": (5, dict(green)),
-        "q_failed_at_proof": (7, {"rows_match": True, "hash_match": False,
-                                  "err": None}),
-    }
-    got = _order_with(
-        history, ("q_satisfied", "q_unproven", "q_failed_at_proof"),
-        names, monkeypatch,
-    )
-    assert got == ["q_failed_at_proof",  # tier 0: failure always first
-                   "q_unproven",          # tier 1: still awaiting proof
-                   "q_never",             # tier 2: first-row no longer displaced
-                   "q_satisfied"]         # tier 3: retired to stale refresh
-
-
-def test_satisfied_recheck_next_retires_too(monkeypatch):
-    """Same retirement rule for the deferred wave: once an entry has a
-    green row at round >= _RECHECK_NEXT_PROOF_ROUND it must not re-enter
-    tier 1 in later rounds."""
-    names = ["q_wave_proved", "q_wave_pending", "q_never"]
-    monkeypatch.setattr(registry, "_RECHECK_NEXT",
-                        ("q_wave_proved", "q_wave_pending"))
-    monkeypatch.setattr(registry, "_RECHECK_NEXT_AFTER_ROUND", 7)
-    monkeypatch.setattr(registry, "_RECHECK_NEXT_PROOF_ROUND", 8)
-    green = {"rows_match": True, "hash_match": True, "err": None}
-    history = {"q_wave_proved": (8, dict(green)),
-               "q_wave_pending": (6, dict(green))}
-    got = _order_with(history, (), names, monkeypatch)
-    assert got == ["q_wave_pending", "q_never", "q_wave_proved"]
-
-
-def test_driver_history_completeness_is_derived(tmp_path, monkeypatch):
-    """ADVICE r7: the completeness threshold must derive from observed
-    window sizes, not a hardcoded 50 — a driver window resized to 40
-    must still complete, and any round older than the newest file is
-    final by construction."""
-    import json
-
-    green = {"rows_match": True, "hash_match": True, "err": None}
-    # r7: finished 40-row window; r8 (newest): 40 rows -> complete at
-    # the observed threshold even though < 50
-    (tmp_path / "CORRECTNESS_r07.json").write_text(
-        json.dumps({f"q{i}": green for i in range(40)}))
-    (tmp_path / "CORRECTNESS_r08.json").write_text(
-        json.dumps({f"p{i}": green for i in range(40)}))
-    fake_pkg = tmp_path / "pkg"
-    fake_pkg.mkdir()
-    monkeypatch.setattr(
-        registry, "__file__", str(fake_pkg / "registry.py"), raising=False
-    )
-    _, max_complete = registry._driver_history()
-    assert max_complete == 8
-    # newest file partial (5 rows < threshold 40) -> only r7 complete
-    (tmp_path / "CORRECTNESS_r08.json").write_text(
-        json.dumps({f"p{i}": green for i in range(5)}))
-    _, max_complete = registry._driver_history()
-    assert max_complete == 7
-    # r8 review: the threshold is the MOST RECENT finished round's size,
-    # so one historically small round (r7's 40) cannot poison the bar —
-    # after a full 50-row r8, a 40-row partial r9 must NOT be complete
-    (tmp_path / "CORRECTNESS_r08.json").write_text(
-        json.dumps({f"p{i}": green for i in range(50)}))
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({f"z{i}": green for i in range(40)}))
-    _, max_complete = registry._driver_history()
-    assert max_complete == 8
-
-
-def test_recheck_next_wave_self_activates(monkeypatch):
-    """The deferred display-exactness wave must sort AFTER all
-    first-rows while the activation round's CORRECTNESS file is absent
-    (this round's driver run), then directly after _RECHECK once it
-    lands (next round) — no builder edit required in between."""
-    names = ["q_wave", "q_recheck", "q_never", "q_stale"]
-    monkeypatch.setattr(registry, "_RECHECK_NEXT", ("q_wave",))
-    monkeypatch.setattr(registry, "_RECHECK_NEXT_AFTER_ROUND", 7)
-    green = {"rows_match": True, "hash_match": True, "err": None}
-    # before: latest round is 6 -> wave sorts behind never-checked
-    history = {"q_wave": (5, dict(green)), "q_recheck": (6, dict(green)),
-               "q_stale": (6, dict(green))}
-    got = _order_with(history, ("q_recheck",), names, monkeypatch)
-    assert got == ["q_recheck", "q_never", "q_wave", "q_stale"]
-    # a PARTIAL round-7 file (rows present but <50 -> not complete)
-    # must NOT activate the wave: a crashed-and-resumed r7 driver run
-    # would otherwise displace the first-rows mid-round
-    history["q_stale"] = (7, dict(green))
-    got = _order_with(history, ("q_recheck",), names, monkeypatch, max_complete=6)
-    assert got == ["q_recheck", "q_never", "q_wave", "q_stale"]
-    # after: round 7 COMPLETE -> wave jumps ahead of first-rows, still
-    # behind current rechecks
-    got = _order_with(history, ("q_recheck",), names, monkeypatch, max_complete=7)
-    assert got == ["q_recheck", "q_wave", "q_never", "q_stale"]
 
 
 def test_every_banding_oracle_carries_cap_and_chains():
@@ -336,25 +135,3 @@ def test_register_rejects_duplicate_ids():
     # idempotent path: re-decorating the registered function itself
     fn = QUERIES[existing]
     assert register(existing)(fn) is fn
-
-
-def test_every_registered_id_has_bounded_staleness():
-    """Freshness guardrail (VERDICT r12 item 6): every registered ID must
-    either already hold a driver row in the cumulative CORRECTNESS
-    record, or — for a registration made THIS round, which cannot have
-    one yet — sort inside the next driver window so it is guaranteed to
-    get its first row at end of round. An ID satisfying neither would
-    be registered-but-never-verifiable: invisible to the driver forever.
-    The judge previously computed this by hand each round."""
-    ordered = list(registry.load_all_queries())
-    history, _ = registry._driver_history()
-    window = 50  # the driver's per-round verification window
-    orphans = [
-        name
-        for rank, name in enumerate(ordered)
-        if name not in history and rank >= window
-    ]
-    assert not orphans, (
-        f"registered IDs with no driver evidence that also sort OUTSIDE "
-        f"the next {window}-slot driver window: {orphans}"
-    )
