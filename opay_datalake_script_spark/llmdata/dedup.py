@@ -244,88 +244,74 @@ def k_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def pair_sides(cand: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """Fetch each end's per-document data onto candidate pairs — the one
+    place a verify stage meets its per-doc side. ``cand`` carries
+    (doc_a, doc_b); ``per_doc`` carries doc_id plus any columns, and
+    each column ``c`` arrives as ``c_a``/``c_b``. Two inner equi-joins
+    keyed on doc_id (uniform), so a candidate whose doc is missing from
+    ``per_doc`` yields no row.
+
+    Join strategy: ``per_doc`` is one row per document — tiny next to
+    the candidate-pair stream at test scale, so shipping it to the pairs
+    avoids shuffling the wide candidate stream twice (measured 2.2x at
+    sf0.1: 232 s -> 107 s for 11M candidates). It is CORPUS-LINEAR,
+    though, so both sides carry the size-gated broadcast hint
+    (plans/hints.py), decided once on ``per_doc``: past the gate the
+    joins plan as doc_id-keyed shuffled equi-joins with the same
+    semantics and no code edit."""
+    hint = gated_hint(per_doc)
+    cols = [c for c in per_doc.columns if c != "doc_id"]
+
+    def side(s: str) -> DataFrame:
+        return hint(per_doc.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols],
+        ))
+
+    return cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+
+
 def exact_jaccard_scores(
     toks: DataFrame,
     cand: DataFrame,
     set_col: str,
-    min_jaccard: float | None = None,
+    min_jaccard: float,
     same_lang: bool = False,
 ) -> DataFrame:
-    """Score candidate (doc_a, doc_b) pairs with exact set Jaccard by
-    joining each side to the per-doc sets — two equi-joins keyed on
-    doc_id (uniform), never an all-pairs comparison. ``toks`` must have
-    (doc_id, lang, <set_col>) where <set_col> holds DISTINCT elements
-    (set semantics — the union size is computed as |a|+|b|-|a∩b|);
-    output adds lang_a/lang_b/jaccard.
+    """Candidate (doc_a, doc_b) pairs with exact set Jaccard >=
+    ``min_jaccard``, as (doc_a, doc_b, jaccard). ``toks`` has
+    (doc_id, <set_col>) — plus lang when ``same_lang`` keeps only
+    same-language pairs — and <set_col> holds DISTINCT elements, so
+    |a ∪ b| = |a| + |b| - |a ∩ b| exactly: the per-doc sizes are
+    computed once on the doc side, not per candidate, and the union is
+    never built (same integers -> bit-identical doubles).
 
-    ``min_jaccard`` applies the caller's threshold inside the helper and
-    ``same_lang`` adds the lang_a = lang_b filter. Catalyst substitutes
-    the ``_inter`` alias into the threshold and pushes both predicates
-    into the fetch join's condition. The optimized plan computes the
-    intersection twice per candidate in that condition (numerator and
-    denominator) and once more per surviving pair in the projection
-    above it. The language equality comes first in the condition, so a
-    cross-language pair is rejected before any intersection. A size
-    filter that rejects impossible pairs before any intersection is the
-    open fix.
-
-    Join strategy: the token-set side goes through the SIZE-GATED
-    broadcast hint (plans/hints.py) — one row per DISTINCT document,
-    tiny next to the candidate-pair stream at test scale, so shipping
-    the sets to the pairs avoids shuffling the wide candidate stream
-    twice (measured 2.2x at sf0.1: 232 s -> 107 s for 11M candidates).
-    The side is CORPUS-LINEAR, though, so the hint is attached only
-    while Catalyst's size estimate stays under the gate; past it the
-    join plans as the doc_id-keyed shuffled equi-join automatically —
-    same semantics, same uniform keys — with no human edit (VERDICT r8
-    retired the hard-coded hint as the last `weak` scale item)."""
-    hint = gated_hint(toks)
-    a = hint(
-        toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("lang").alias("lang_a"),
-            F.col(set_col).alias("_sa"),
-            F.size(set_col).alias("_na"),
-        )
+    Plan: Catalyst substitutes ``_inter`` into the threshold and pushes
+    it into the second fetch join's condition, after the language
+    equality. The optimized plan computes the intersection twice per
+    candidate there (numerator and denominator) and once more per
+    surviving pair in the projection above — or not at all there when
+    the caller keeps only doc_a/doc_b."""
+    per_doc = toks.select(
+        "doc_id",
+        *(["lang"] if same_lang else []),
+        F.col(set_col).alias("s"),
+        F.size(set_col).alias("n"),
     )
-    b = hint(
-        toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("lang").alias("lang_b"),
-            F.col(set_col).alias("_sb"),
-            F.size(set_col).alias("_nb"),
-        )
-    )
-    # |a ∪ b| = |a| + |b| - |a ∩ b| exactly, because every caller passes
-    # DISTINCT-element arrays (array_distinct / distinct shingles) — so
-    # the union's hash-set build over both arrays is replaced by two
-    # per-doc set sizes computed once on the (tiny) doc side instead of
-    # once per candidate pair (optimization round 13, guide §1.2 "per-
-    # task work": array_intersect+array_union were the two dominant
-    # per-row costs of the verify stage, evaluated over millions of
-    # candidates; this halves them). Same integers -> bit-identical
-    # jaccard doubles -> identical output under the oracle hash.
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
+    joined = pair_sides(cand, per_doc)
     if same_lang:
         joined = joined.where(F.col("lang_a") == F.col("lang_b"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    if min_jaccard is None:
-        jac = inter.cast("double") / (F.col("_na") + F.col("_nb") - inter)
-        return joined.select(
-            "doc_a", "doc_b", "lang_a", "lang_b", jac.alias("jaccard")
-        )
-    # threshold path: Catalyst inlines _inter into the threshold, which
-    # lands in the fetch join's condition (see docstring)
     with_inter = joined.select(
-        "doc_a", "doc_b", "lang_a", "lang_b", "_na", "_nb",
-        inter.alias("_inter"),
+        "doc_a", "doc_b", "n_a", "n_b",
+        F.size(F.array_intersect("s_a", "s_b")).alias("_inter"),
     )
     jac = F.col("_inter").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_inter")
+        F.col("n_a") + F.col("n_b") - F.col("_inter")
     )
     return (
         with_inter.where(jac >= F.lit(min_jaccard))
-        .select("doc_a", "doc_b", "lang_a", "lang_b", jac.alias("jaccard"))
+        .select("doc_a", "doc_b", jac.alias("jaccard"))
     )
 
 
@@ -486,11 +472,8 @@ def k_near_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-table near-perfect recall is required.
     """
     d = load(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.lit("").alias("lang"),  # unblocked: cross-language dups count
-        F.array_distinct(F.split("text", " ")).alias("tset"),
-    )
+    # no same_lang: cross-language dups count
+    toks = d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("tset"))
     scored = exact_jaccard_scores(
         toks, band_candidate_pairs(d), "tset", min_jaccard=0.6
     )
@@ -1105,38 +1088,23 @@ def k_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load(spark, sf_dir, "documents")
     cand = band_candidate_pairs(d.select("doc_id", "text"))
-    toks = d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("tset"))
-    # Broadcast the per-doc sets to the (much larger) candidate stream,
-    # and re-spread the AQE-coalesced candidate output before the
-    # scoring stage (pinned count — see exact_jaccard_scores).
+    toks = d.select(
+        "doc_id", F.array_distinct(F.split("text", " ")).alias("tset")
+    ).withColumn("n", F.size("tset"))
+    # AQE coalesces the candidate stream's exchange (two-long rows) into
+    # few partitions; the 64-way repartition by count, which AQE leaves
+    # alone, keeps the scoring stage wide.
     cand = cand.repartition(64, F.col("doc_a"))
-    hint = gated_hint(toks)
-    a = hint(
-        toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("tset").alias("_sa"),
-            F.size("tset").alias("_na"),
-        )
-    )
-    b = hint(
-        toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("tset").alias("_sb"),
-            F.size("tset").alias("_nb"),
-        )
-    )
     # Catalyst substitutes _inter into the >= 0.95 gate and pushes it into
-    # the fetch join's condition, so the optimized plan computes the
-    # intersection twice there (once per containment ratio) and once
-    # more in the projection above. The per-doc set sizes ride the
-    # (tiny) doc sides like the Jaccard scorer's.
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    cont_a = F.col("_inter") / F.col("_na")
-    cont_b = F.col("_inter") / F.col("_nb")
+    # the second fetch join's condition, so the optimized plan computes
+    # the intersection twice there (once per containment ratio) and once
+    # more in the projection above it.
+    inter = F.size(F.array_intersect("tset_a", "tset_b")).cast("double")
+    cont_a = F.col("_inter") / F.col("n_a")
+    cont_b = F.col("_inter") / F.col("n_b")
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", "_na", "_nb", inter.alias("_inter"))
+        pair_sides(cand, toks)
+        .select("doc_a", "doc_b", "n_a", "n_b", inter.alias("_inter"))
         .withColumn("_ca", cont_a)
         .withColumn("_cb", cont_b)
         .where(F.greatest("_ca", "_cb") >= 0.95)
@@ -1243,36 +1211,34 @@ def k_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calibration must compare like with like; the raw-token sets of
     k_jaccard_pairs measure a slightly different quantity).
 
-    Scale shape: candidates from the banded equi-join, signatures and
-    token sets fetched by doc_id-keyed joins (broadcast-hinted like
-    exact_jaccard_scores) — no all-pairs anywhere.
+    Scale shape: candidates from the banded equi-join, then one fetch of
+    each end's signature and token set (``pair_sides``) — no all-pairs
+    anywhere. Signatures meet token sets on the per-doc side, so the
+    candidate stream passes through two joins.
     """
     d = load(spark, sf_dir, "documents")
     sig = minhash_signatures(d)
-    cand = band_candidate_pairs(d)
-    hint = gated_hint(sig)
-    a = hint(sig.select(F.col("doc_id").alias("doc_a"),
-                        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_MINHASH_K)]))
-    b = hint(sig.select(F.col("doc_id").alias("doc_b"),
-                        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_MINHASH_K)]))
-    toks = d.select(
-        "doc_id", F.lit("x").alias("lang"),
-        F.array_distinct(F.split(normalized_text(), " ")).alias("tset"),
+    tsets = d.select(
+        "doc_id", F.array_distinct(F.split(normalized_text(), " ")).alias("tset")
     )
+    per_doc = sig.join(tsets, "doc_id").withColumn("n", F.size("tset"))
+    pairs = pair_sides(band_candidate_pairs(d), per_doc)
     matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        F.when(F.col(f"mh{i}_a") == F.col(f"mh{i}_b"), 1).otherwise(0)
         for i in range(_MINHASH_K)
     )
-    est = cand.join(a, "doc_a").join(b, "doc_b").select(
-        "doc_a", "doc_b", (matches / 16.0).alias("est_jaccard")
-    )
-    exact = exact_jaccard_scores(toks, cand, "tset").select(
-        "doc_a", "doc_b", "jaccard"
-    )
-    return est.join(exact, ["doc_a", "doc_b"]).select(
+    # |a ∪ b| = |a| + |b| - |a ∩ b|: tset is array_distinct output. With
+    # no threshold, the optimized plan computes the intersection twice
+    # per candidate (numerator and denominator), in the projection above
+    # the fetch joins.
+    inter = F.size(F.array_intersect("tset_a", "tset_b"))
+    jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
+    return pairs.select(
+        "doc_a", "doc_b", (matches / 16.0).alias("est_jaccard"), jac.alias("_j")
+    ).select(
         "doc_a", "doc_b", "est_jaccard",
-        F.round("jaccard", 6).alias("jaccard"),
-        F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 6).alias("abs_err"),
+        F.round("_j", 6).alias("jaccard"),
+        F.round(F.abs(F.col("est_jaccard") - F.col("_j")), 6).alias("abs_err"),
     )
 
 

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import quantize_e6
-from ..plans.hints import gated_hint
 from ..registry import register
 from ..sources.io import load
 
@@ -568,26 +567,18 @@ def k_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the MinHash bands and the winnow fingerprints) — migrated from a
     # verbatim copy in r10 so a cap/chain scheme change cannot
     # desynchronize the image family from the text families.
-    from .dedup import capped_bucket_pairs
+    from .dedup import capped_bucket_pairs, pair_sides
 
     cand = capped_bucket_pairs(bands, max_bucket_size=_CAP)
-    # Verify-stage fetch through the SIZE-GATED broadcast hint
-    # (plans/hints.py, SCALE_DESIGN §2 class (b)): the hash side is one
-    # 24-byte row per image — tiny next to the candidate-pair stream at
-    # test scale, but image-count-linear, so the hint detaches itself
-    # past the gate and the join falls back to the same doc_id-keyed
-    # shuffled equi-join with no human edit.
-    hint = gated_hint(hashes)
-    ha = hint(hashes.select(F.col("doc_id").alias("doc_a"),
-                            F.col("lo").alias("lo_a"), F.col("hi").alias("hi_a")))
-    hb = hint(hashes.select(F.col("doc_id").alias("doc_b"),
-                            F.col("lo").alias("lo_b"), F.col("hi").alias("hi_b")))
+    # Verify-stage fetch (dedup.pair_sides): the hash side is one 24-byte
+    # row per image, so it rides the size-gated broadcast hint. Hamming
+    # distance needs no set intersection.
     hamming = (
         F.bit_count(F.expr("lo_a ^ lo_b")).cast("long")
         + F.bit_count(F.expr("hi_a ^ hi_b")).cast("long")
     )
     return (
-        cand.join(ha, "doc_a").join(hb, "doc_b")
+        pair_sides(cand, hashes)
         .select("doc_a", "doc_b", hamming.alias("hamming"))
         .where(F.col("hamming") <= 3)
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.hints import gated_hint, maybe_broadcast
+from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -323,22 +323,18 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # borderline 0.6-similarity edges in the candidate set. The exact
     # verifier below re-scores candidates on true token sets, so a wider
     # net costs a few extra verifications, never a wrong edge.
-    # Pinned-count repartition + broadcast sets: the candidate stream's
-    # exchange coalesces to ~1 partition under AQE (two-long rows), which
-    # would serialize the exact-verify stage — same fix as
-    # exact_jaccard_scores (dedup.py).
+    # AQE coalesces the candidate stream's exchange (two-long rows) into
+    # few partitions; the 64-way repartition by count, which AQE leaves
+    # alone, keeps the exact-verify stage wide.
     cand = (
         lsh_candidate_pairs(spark, sf_dir, max_dist=0.5, num_tables=16)
         .select("doc_a", "doc_b")
         .repartition(64, F.col("doc_a"))
     )
-    # Exact verify via the shared scorer (optimization r14): same joins and
-    # gated hints as the old inline form, and the union size is the
-    # |a|+|b|-|a∩b| arithmetic (tset is array_distinct output, so the
-    # ratios — and therefore the >= 0.6 edge set — are identical). Only
-    # doc_a/doc_b are kept, so the optimized plan computes the
-    # intersection twice per candidate, both times in the fetch join's
-    # condition (the threshold's numerator and denominator).
+    # Exact verify via the shared scorer (tset is array_distinct output).
+    # Only doc_a/doc_b are kept, so the optimized plan computes the
+    # intersection twice per candidate, both times in the second fetch
+    # join's condition (the threshold's numerator and denominator).
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -1042,7 +1038,7 @@ def k_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on uniform md5 (at extreme history sizes, a bloom/broadcast
     prefilter of new-batch hashes cuts the shuffle).
     """
-    from .dedup import band_candidate_pairs, normalized_text
+    from .dedup import band_candidate_pairs, exact_jaccard_scores, normalized_text
 
     d = load(spark, sf_dir, "documents")
     is_new = F.col("doc_id") % 10 == 0
@@ -1058,36 +1054,20 @@ def k_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = band_candidate_pairs(d).where(
         (F.col("doc_a") % 10 == 0) != (F.col("doc_b") % 10 == 0)
     )
+    # doc_a is the new doc, doc_b the existing one
     cross = cand.select(
-        F.when(F.col("doc_a") % 10 == 0, F.col("doc_a")).otherwise(F.col("doc_b")).alias("new_id"),
-        F.when(F.col("doc_a") % 10 == 0, F.col("doc_b")).otherwise(F.col("doc_a")).alias("old_id"),
+        F.when(F.col("doc_a") % 10 == 0, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_a"),
+        F.when(F.col("doc_a") % 10 == 0, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_b"),
     )
     tsets = d.select(
         "doc_id", F.array_distinct(F.split(normalized_text(), " ")).alias("t")
     )
-    hint = gated_hint(tsets)
-    a = hint(tsets.select(F.col("doc_id").alias("new_id"),
-                          F.col("t").alias("ta"),
-                          F.size("t").alias("_na")))
-    b = hint(tsets.select(F.col("doc_id").alias("old_id"),
-                          F.col("t").alias("tb"),
-                          F.size("t").alias("_nb")))
-    # |a ∪ b| as |a|+|b|-|a∩b| (t is array_distinct output — exact), with
-    # the sizes computed once per doc on the tiny fetch sides (same shape
-    # as exact_jaccard_scores). Catalyst substitutes _inter into the
-    # threshold and pushes it into the fetch join's condition, so the
-    # optimized plan computes the intersection twice per candidate there
-    # (numerator and denominator); the projection is pruned.
-    inter = F.size(F.array_intersect("ta", "tb"))
-    scored = cross.join(a, "new_id").join(b, "old_id").select(
-        "new_id", "_na", "_nb", inter.alias("_inter")
-    )
-    jac = F.col("_inter").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_inter")
-    )
+    # Only the new doc's id is kept, so the optimized plan computes the
+    # intersection twice per candidate, both times in the second fetch
+    # join's condition.
     near_dup = (
-        scored.where(jac >= 0.6)
-        .select(F.col("new_id").alias("doc_id"))
+        exact_jaccard_scores(tsets, cross, "t", min_jaccard=0.6)
+        .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
 
@@ -1612,7 +1592,7 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     front on both engines (Spark would md5 them via concat_ws('');
     DuckDB's md5 propagates NULL — the r10 winnow divergence).
     """
-    from .dedup import band_candidate_pairs, winnow_candidate_pairs
+    from .dedup import band_candidate_pairs, pair_sides, winnow_candidate_pairs
 
     d = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     ch = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
@@ -1631,52 +1611,38 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .textstats import shingle_hashes
 
     shingles = F.array_distinct(shingle_hashes(F.col("text")))
-    toks = surv.select(
-        "doc_id",
-        "lang",
-        F.array_distinct(F.split("text", " ")).alias("tset"),
-        shingles.alias("sset"),
+    toks = (
+        surv.select(
+            "doc_id",
+            "lang",
+            F.array_distinct(F.split("text", " ")).alias("tset"),
+            shingles.alias("sset"),
+        )
+        .withColumn("nt", F.size("tset"))
+        .withColumn("ns", F.size("sset"))
     )
-    hint = gated_hint(toks)
-    a = hint(toks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("lang").alias("lang_a"),
-        F.col("tset").alias("ta"),
-        F.col("sset").alias("sa"),
-        F.size("tset").alias("_na"),
-        F.size("sset").alias("_nsa"),
-    ))
-    b = hint(toks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("lang").alias("lang_b"),
-        F.col("tset").alias("tb"),
-        F.col("sset").alias("sb"),
-        F.size("tset").alias("_nb"),
-        F.size("sset").alias("_nsb"),
-    ))
-    # Sizes from the per-doc fetch sides, |a ∪ b| as |a|+|b|-|a∩b|
-    # (tset/sset are array_distinct output — exact), so no token union is
-    # built (optimization r14). Catalyst substitutes _jint/_cint into the
-    # OR-of-thresholds predicate and pushes it into the fetch join's
-    # condition: the optimized plan computes the token intersection twice
-    # and the shingle intersection once per candidate, all in that
-    # condition; the projection is pruned.
-    jint = F.size(F.array_intersect("ta", "tb"))
-    cint = F.size(F.array_intersect("sa", "sb"))
+    # Token and shingle sets arrive in one fetch (pair_sides), |a ∪ b| as
+    # |a|+|b|-|a∩b| (tset/sset are array_distinct output — exact).
+    # Catalyst substitutes _jint/_cint into the OR-of-thresholds predicate
+    # and pushes it into the second fetch join's condition after the
+    # language equality: the optimized plan computes the token
+    # intersection twice and the shingle intersection once per
+    # candidate, all in that condition; the projection is pruned.
+    jint = F.size(F.array_intersect("tset_a", "tset_b"))
+    cint = F.size(F.array_intersect("sset_a", "sset_b"))
     scored = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        pair_sides(cand, toks)
         .where(F.col("lang_a") == F.col("lang_b"))
         .select(
-            "doc_a", "doc_b", "_na", "_nb", "_nsa", "_nsb",
+            "doc_a", "doc_b", "nt_a", "nt_b", "ns_a", "ns_b",
             jint.alias("_jint"),
             cint.alias("_cint"),
         )
     )
     jac = F.col("_jint").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_jint")
+        F.col("nt_a") + F.col("nt_b") - F.col("_jint")
     )
-    cont = F.col("_cint").cast("double") / F.least("_nsa", "_nsb")
+    cont = F.col("_cint").cast("double") / F.least("ns_a", "ns_b")
     pairs = (
         scored.where((jac >= 0.6) | (cont >= 0.5))
         .select("doc_a", "doc_b")

@@ -1247,11 +1247,8 @@ def test_lsh_chain_salts_reconnect_dense_family(spark, monkeypatch):
 
     def verified_components(cap):
         cand = dd.band_candidate_pairs(fam, max_bucket_size=cap)
-        sc = dd.exact_jaccard_scores(toks, cand, "tset")
-        pairs = [
-            (r["doc_a"], r["doc_b"])
-            for r in sc.where(F.col("jaccard") >= 0.6).collect()
-        ]
+        sc = dd.exact_jaccard_scores(toks, cand, "tset", min_jaccard=0.6)
+        pairs = [(r["doc_a"], r["doc_b"]) for r in sc.collect()]
         parent = {i: i for i in range(60)}
         def find(x):
             while parent[x] != x:
