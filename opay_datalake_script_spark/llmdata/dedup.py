@@ -22,7 +22,7 @@ def normalized_text(col: str = "text"):
     return F.regexp_replace(F.lower(F.trim(F.col(col))), r"\s+", " ")
 
 
-_MINHASH_K = 16  # signature width; 8 bands x 2 rows for banding
+_MINHASH_K = 16  # signature width
 
 def _mh_expr_sql(i: int) -> str:
     """DuckDB: 60-bit md5-derived hash of token `tok` under seed i."""
@@ -46,7 +46,13 @@ _MINHASH_ORACLE = f"""
     FROM toks GROUP BY doc_id
 """
 
+# Band schemes: each band is a tuple of signature indices, and a doc's
+# bucket in that band is md5 of those minhashes joined by ':'. _BANDS
+# (8 bands x 2 rows) is the scheme every banding oracle mirrors;
+# ONE_HASH_BANDS (16 bands x 1 row) misses a 0.6-Jaccard pair with
+# p = 0.4^16 ~ 4e-7 instead of (1 - 0.6^2)^8 ~ 2.8%.
 _BANDS = [(2 * j, 2 * j + 1) for j in range(_MINHASH_K // 2)]
+ONE_HASH_BANDS = [(i,) for i in range(_MINHASH_K)]
 
 # Skew guard for degenerate (band, bucket) groups (boilerplate-heavy
 # corpora): a bucket wider than this emits STAR pairs — (min doc_id in
@@ -56,20 +62,18 @@ _BANDS = [(2 * j, 2 * j + 1) for j in range(_MINHASH_K // 2)]
 # (1 + salts)·(B-1); at 100 TB a 1M-doc boilerplate bucket would
 # otherwise emit 5e11 pairs from one shuffle key.
 #
-# Why star + chains (measured at sf0.1, round 8): the capped bucket's
-# PAIR LIST is truncated by construction — a dense near-dup family has
-# a quadratic true-pair set, which no bounded-candidate scheme (and at
-# 1M docs, no engine) can list; pair-level recall inside oversized
-# buckets is therefore intentionally partial (sf0.1: 0.105 of the
-# 1.81M uncapped verified pairs). What MUST survive is CLUSTER
-# connectivity for the dedup/keep-one path — and the star alone does
-# not deliver it when the hub is not 0.6-similar to most members
-# (sf0.1 uncapped clusters: 407; star-only: 993 shattered). Each
-# salted chain gives every member 2 more independent similarity
-# probes per band; with p ~ 0.26 in-family edge density (sf0.1
-# measured), 8 bands x 4 salts leaves a member with no verified edge
-# with probability ~(1-p)^64 ~ 4e-9 — the family reconnects without
-# materializing its quadratic pair set.
+# The capped bucket's PAIR LIST is truncated by construction — a dense
+# near-dup family has a quadratic true-pair set, which no
+# bounded-candidate scheme can list; pair-level recall inside oversized
+# buckets is intentionally partial. Cluster connectivity is NOT kept
+# either. At sf0.1, against the exact all-pairs truth (same language,
+# token Jaccard >= 0.6: 1,822,326 pairs, 404 components), 8x2 banding
+# at cap 1024 verifies 195,312 pairs and 478 components, and 16x1
+# banding at the same cap 246,973 pairs and 468. The capped pipelines
+# (k_corpus_build_pipeline, k_corpus_dedup_winnow) match their oracles
+# because those oracles mirror the cap, not because the cap keeps
+# connectivity; the jobs whose oracles are exact components band
+# uncapped (pipeline._component_candidates).
 #
 # A drop cap (CCNet-style) would lose the whole bucket instead. 1024
 # is above the widest fixture bucket at sf0.01 (383 measured), so
@@ -387,54 +391,6 @@ def k_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def lsh_candidate_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_dist: float = 0.4,
-    num_tables: int = 8,
-    docs: DataFrame | None = None,
-) -> DataFrame:
-    """MinHash-LSH near-dup candidate pairs (doc_a < doc_b, seeded).
-
-    Tokenize -> HashingTF (binary=True: set semantics for Jaccard) ->
-    MinHashLSH approxSimilarityJoin on Jaccard *distance* <= max_dist.
-    Spark's MinHashLSH ORs `num_tables` single-hash tables: a true pair
-    of similarity s is missed with probability (1-s)^num_tables, so the
-    candidate recall is tunable per caller (8 tables -> 0.4^8 ~ 7e-4 miss
-    at the 0.6-similarity edge threshold; 16 -> 4e-7).
-
-    ``docs`` (doc_id, text) restricts banding to a subset — e.g. the
-    exact-dedup survivor set in k_corpus_dedup_pipeline, so the LSH pass
-    never re-hashes documents already eliminated upstream."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, Tokenizer
-
-    if docs is None:
-        docs = load(spark, sf_dir, "documents")
-    # The fixture lands as ONE parquet file -> one input partition, and
-    # every downstream ML transform plus the approxSimilarityJoin
-    # explode inherits that serial split (measured: candidate
-    # generation alone >590 s at sf0.1 on 1 task). Spread the docs
-    # before hashing; the join's own exchanges then stay wide too.
-    d = docs.select("doc_id", "text").repartition(64, "doc_id")
-    tokens = Tokenizer(inputCol="text", outputCol="tokens").transform(d)
-    tf = HashingTF(
-        inputCol="tokens", outputCol="features", numFeatures=1 << 18, binary=True
-    ).transform(tokens)
-    lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_tables, seed=42
-    )
-    model = lsh.fit(tf)
-    pairs = model.approxSimilarityJoin(tf, tf, max_dist, distCol="jaccard_dist")
-    return (
-        pairs.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("doc_a"),
-            F.col("datasetB.doc_id").alias("doc_b"),
-            F.round(F.col("jaccard_dist"), 6).alias("jaccard_dist"),
-        )
-    )
-
-
 @register(
     "k_near_dedup_lsh",
     oracle=f"""
@@ -458,18 +414,11 @@ def k_near_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs (Jaccard distance <= 0.4) via MinHash-LSH
     banding + exact verification — THE 100 TB dedup path as one op.
 
-    Round 4 ran Spark ML's fitted approxSimilarityJoin here, which was
-    rows-only-checkable (hash coefficients live inside the JVM model)
-    and emitted 68k candidates at sf0.01. This round swaps the candidate
-    source to the deterministic md5-MinHash banding
+    Candidates come from the deterministic md5-MinHash banding
     (`band_candidate_pairs`: 1.56x true-pair volume, 99.3% measured
-    recall) and verifies each candidate with exact token-set Jaccard —
-    so precision is 1.0, the distance column is exact rather than
-    TF-vector-approximate, and the whole op is now HASH-CHECKED against
-    a DuckDB twin of the identical banding (rows-only -> oracle
-    upgrade). The fitted-model path remains exercised by
-    `lsh_candidate_pairs` inside the dedup pipelines, where its
-    16-table near-perfect recall is required.
+    recall) and each is verified with exact token-set Jaccard — so
+    precision is 1.0, the distance column is exact, and the whole op is
+    HASH-CHECKED against a DuckDB twin of the identical banding.
     """
     d = load(spark, sf_dir, "documents")
     # no same_lang: cross-language dups count
@@ -587,13 +536,11 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
 @register("k_minhash_signature", oracle=_MINHASH_ORACLE)
 def k_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit k=16 MinHash signature per document — the deterministic,
-    engine-portable twin of Spark ML's MinHashLSH model (which keeps its
-    hash coefficients inside the fitted JVM model, so its output can
-    never be oracle-checked). Hash family: h_i(t) = 60-bit prefix of
-    md5(i ':' t) — md5 agrees bit-for-bit across engines, and seeding by
-    prefixing the index gives k independent hash functions from one
-    primitive.
+    """Explicit k=16 MinHash signature per document — deterministic and
+    engine-portable, so it is oracle-checked. Hash family: h_i(t) =
+    60-bit prefix of md5(i ':' t) — md5 agrees bit-for-bit across
+    engines, and seeding by prefixing the index gives k independent hash
+    functions from one primitive.
 
     Shape at 100 TB: one explode of distinct tokens (map-side), one
     hash aggregation computing all 16 minima in a single pass — the
@@ -609,10 +556,9 @@ def k_lsh_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-LSH candidate generation from explicit MinHash signatures:
     8 bands x 2 rows — two docs become a candidate pair iff some band of
     their signatures collides. This is the 100 TB dedup join written out
-    as DataFrame ops (vs the fitted-model variant `k_near_dedup_lsh`),
-    and — because the hash family is md5-derived — the exact candidate
-    set is hash-checked against DuckDB, giving the LSH path itself a
-    hard oracle instead of a recall bound.
+    as DataFrame ops, and — because the hash family is md5-derived —
+    the exact candidate set is hash-checked against DuckDB, giving the
+    LSH path itself a hard oracle instead of a recall bound.
 
     Plan shape: signatures (1 explode + 1 hash agg), band expansion by
     stack (map-side), then ONE equi-join keyed on (band, bucket) and a
@@ -621,24 +567,28 @@ def k_lsh_band_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     so only true near-dup clusters collide; buckets wider than
     LSH_BUCKET_CAP (a boilerplate-heavy corpus's degenerate clusters)
     are star+salted-chain-expanded rather than all-paired, bounding
-    the one remaining skew hazard at O(B) while keeping dense families
-    cluster-connected. The oracle mirrors the identical cap and chains.
+    the one remaining skew hazard at O(B) (at the price of some
+    connectivity — see the LSH_BUCKET_CAP note). The oracle mirrors the
+    identical cap and chains.
     """
     return band_candidate_pairs(load(spark, sf_dir, "documents"))
 
 
-def _banded_buckets(docs: DataFrame) -> DataFrame:
+def _banded_buckets(
+    docs: DataFrame, bands: list[tuple[int, ...]] = _BANDS
+) -> DataFrame:
     """(doc_id, band, bucket) banding relation: md5-MinHash signatures
-    expanded by stack into the 8x2 bands. The ONE place the banding
-    scheme lives engine-side — band_candidate_pairs and
+    expanded by stack into ``bands`` (see _BANDS). The ONE place the
+    banding scheme lives engine-side — band_candidate_pairs and
     band_bucket_stats both build on it, so a scheme change cannot
     desynchronize the monitor from the generator (r7 review)."""
     sig = minhash_signatures(docs)
-    stack_expr = ", ".join(
-        f"{j}L, md5(concat(mh{a}, ':', mh{b}))" for j, (a, b) in enumerate(_BANDS)
-    )
+    buckets = [
+        "md5(concat(" + ", ':', ".join(f"mh{i}" for i in band) + "))" for band in bands
+    ]
+    stack_expr = ", ".join(f"{j}L, {b}" for j, b in enumerate(buckets))
     return sig.selectExpr(
-        "doc_id", f"stack({len(_BANDS)}, {stack_expr}) AS (band, bucket)"
+        "doc_id", f"stack({len(bands)}, {stack_expr}) AS (band, bucket)"
     )
 
 
@@ -646,12 +596,14 @@ def band_candidate_pairs(
     docs: DataFrame,
     max_bucket_size: int = LSH_BUCKET_CAP,
     chain_chunk_rows: int = CHAIN_CHUNK_ROWS,
+    bands: list[tuple[int, ...]] = _BANDS,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (doc_a < doc_b, deterministic) over any
     (doc_id, text) DataFrame — signatures, band expansion, one
-    (band, bucket) equi-join, distinct. Measured on the sf0.01 fixture:
-    110,927 candidates vs 70,998 true >= 0.6-Jaccard pairs (1.56x
-    volume, 99.3% recall) — candidate work tracks true near-dup volume.
+    (band, bucket) equi-join, distinct. Measured on the sf0.01 fixture
+    with the default 8x2 ``bands``: 110,927 candidates vs 70,998 true
+    >= 0.6-Jaccard pairs (1.56x volume, 99.3% recall) — candidate work
+    tracks true near-dup volume.
 
     Skew guard: (band, bucket) groups wider than ``max_bucket_size``
     are STAR-expanded — each member pairs with the bucket's min doc_id
@@ -659,11 +611,9 @@ def band_candidate_pairs(
     members in md5(doc_id:salt) order pair up), so a degenerate bucket
     contributes (1+salts)·(B-1) candidates instead of B(B-1)/2. The
     star keeps the hub-similar core; the chains give every member
-    2·salts·bands independent similarity probes, which reconnects
-    dense near-dup families whose members are not hub-similar (the
-    sf0.1 measured failure of star-only — see the LSH_BUCKET_CAP note;
-    the family's quadratic PAIR list stays truncated by design, since
-    no bounded scheme can list it). The star guard is the oracle's own
+    2·salts·bands more similarity probes. Neither lists the family's
+    quadratic PAIR list, and neither keeps its connectivity (see the
+    LSH_BUCKET_CAP note). The star guard is the oracle's own
     `bsz <= cap OR doc_id = hub` predicate applied to the LEFT join
     side BEFORE the self-join: a small bucket keeps all its rows
     (all-pairs), an oversized bucket keeps only its hub probe row, so
@@ -672,7 +622,9 @@ def band_candidate_pairs(
     windows run on the oversized rows only and share the
     (band, bucket) shuffle key. Width stats for tuning/monitoring:
     `band_bucket_stats`."""
-    return capped_bucket_pairs(_banded_buckets(docs), max_bucket_size, chain_chunk_rows)
+    return capped_bucket_pairs(
+        _banded_buckets(docs, bands), max_bucket_size, chain_chunk_rows
+    )
 
 
 def capped_bucket_pairs(
@@ -763,7 +715,11 @@ def capped_bucket_pairs(
     return star.unionByName(chain).distinct()
 
 
-def band_bucket_stats(docs: DataFrame, max_bucket_size: int = LSH_BUCKET_CAP) -> DataFrame:
+def band_bucket_stats(
+    docs: DataFrame,
+    max_bucket_size: int = LSH_BUCKET_CAP,
+    bands: list[tuple[int, ...]] = _BANDS,
+) -> DataFrame:
     """Per-band monitoring for the bucket-width cap: how many (band,
     bucket) groups exist, how many exceed ``max_bucket_size`` (and thus
     get star-expanded by `band_candidate_pairs`), the widest bucket,
@@ -777,7 +733,7 @@ def band_bucket_stats(docs: DataFrame, max_bucket_size: int = LSH_BUCKET_CAP) ->
     hub-miss-rate ceiling). One extra aggregate over the banding
     relation — run it alongside a big dedup job to log what the cap is
     doing at corpus scale."""
-    sizes = _banded_buckets(docs).groupBy("band", "bucket").agg(
+    sizes = _banded_buckets(docs, bands).groupBy("band", "bucket").agg(
         F.count("*").alias("bsz")
     )
     over = F.col("bsz") > max_bucket_size
@@ -1393,17 +1349,15 @@ def k_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corruption budget.
 
     Plan shape inherits the banded scaffold: candidate stream
-    repartitioned by doc_a (the AQE-collapse fix), two doc_id-keyed
-    joins fetch the prefixes, then a map-only DP per pair.
+    repartitioned by doc_a (the AQE-collapse fix), the prefixes fetched
+    by `pair_sides`, then a map-only DP per pair.
     """
     d = load(spark, sf_dir, "documents")
     cand = band_candidate_pairs(d).repartition(64, "doc_a")
-    a = d.select(F.col("doc_id").alias("doc_a"), F.substring("text", 1, 80).alias("ta"))
-    b = d.select(F.col("doc_id").alias("doc_b"), F.substring("text", 1, 80).alias("tb"))
-    dist = F.levenshtein("ta", "tb")
+    prefix = d.select("doc_id", F.substring("text", 1, 80).alias("t"))
+    dist = F.levenshtein("t_a", "t_b")
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        pair_sides(cand, prefix)
         .where(dist <= 24)
         .select(
             "doc_a", "doc_b", dist.cast("long").alias("prefix_edit_dist")

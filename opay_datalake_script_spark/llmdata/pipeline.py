@@ -295,12 +295,10 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the step that turns pairwise dup hits into "keep one canonical doc
     per cluster". comp == doc_id identifies the keeper.
 
-    Edge generation is the 100 TB path: MinHash-LSH banding proposes
-    candidate pairs (band-bucket join, never all-pairs — 16 OR-ed hash
-    tables miss a true 0.6-Jaccard edge with p = 0.4^16 ~ 4e-7), then the
-    exact token-set Jaccard scorer verifies ONLY those candidates, so the
-    quadratic comparison the lang-blocked verifier (`k_jaccard_pairs`)
-    does per block never happens here.
+    Edge generation: MinHash-LSH banding proposes candidate pairs
+    (band-bucket join, all-pairs only inside a bucket; see
+    `_component_candidates`), then the exact token-set Jaccard scorer
+    verifies ONLY those candidates.
 
     Iterative min-label propagation: each round is one distributed
     join+union+min-aggregate; the driver only steers convergence (the
@@ -311,25 +309,15 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage each round — without it the plan re-executes from round 0.
     The DuckDB oracle computes the same fixed point with a recursive CTE.
     """
-    from .dedup import lsh_candidate_pairs
-
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # Candidate threshold 0.5 (not the edge's 0.4): approxSimilarityJoin
-    # measures Jaccard on HashingTF vectors, where rare bucket collisions
-    # jitter the distance around the true token-set value — a margin keeps
-    # borderline 0.6-similarity edges in the candidate set. The exact
-    # verifier below re-scores candidates on true token sets, so a wider
-    # net costs a few extra verifications, never a wrong edge.
     # AQE coalesces the candidate stream's exchange (two-long rows) into
     # few partitions; the 64-way repartition by count, which AQE leaves
     # alone, keeps the exact-verify stage wide.
-    cand = (
-        lsh_candidate_pairs(spark, sf_dir, max_dist=0.5, num_tables=16)
-        .select("doc_a", "doc_b")
-        .repartition(64, F.col("doc_a"))
+    cand = _component_candidates(d.select("doc_id", "text")).repartition(
+        64, F.col("doc_a")
     )
     # Exact verify via the shared scorer (tset is array_distinct output).
     # Only doc_a/doc_b are kept, so the optimized plan computes the
@@ -356,6 +344,18 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("doc_id").alias("comp")
     )
     return _propagate_min_labels(labels, edges)
+
+
+def _component_candidates(docs: DataFrame) -> DataFrame:
+    """Candidate pairs for the jobs whose oracles are all-pairs exact
+    components (k_dedup_components, k_corpus_dedup_pipeline), where a
+    missed edge splits a component: 16 one-hash bands, and no bucket
+    cap, because any cap breaks connectivity at sf0.1 (see
+    dedup.LSH_BUCKET_CAP). The price is the cap's skew guard: a
+    degenerate bucket of B docs emits all B(B-1)/2 pairs."""
+    from .dedup import ONE_HASH_BANDS, band_candidate_pairs
+
+    return band_candidate_pairs(docs, max_bucket_size=1 << 62, bands=ONE_HASH_BANDS)
 
 
 def _propagate_min_labels(labels: DataFrame, edges: DataFrame, max_rounds: int = 15) -> DataFrame:
@@ -448,8 +448,6 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     k_dedup_components. Exact dups inherit their keeper's component, so
     transitively-duplicate docs collapse to one canonical id.
     """
-    from .dedup import lsh_candidate_pairs
-
     d = load(spark, sf_dir, "documents")
     h = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     # Keeper via groupBy + NULL-SAFE join back, not min() OVER
@@ -467,14 +465,9 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keepmap = norm.join(keepers, F.expr("h <=> kh")).drop("kh")
     surv = keepmap.where(F.col("doc_id") == F.col("exact_keeper"))
 
-    # Band only the exact-dedup survivors (docs=surv): at scale the LSH
-    # pass must not re-hash documents already eliminated by the cheaper
-    # exact stage (round-4 advice — the old form banded ALL docs and let
-    # the survivor join discard the wasted work afterwards).
-    cand = lsh_candidate_pairs(
-        spark, sf_dir, max_dist=0.5, num_tables=16,
-        docs=surv.select("doc_id", "text"),
-    ).select("doc_a", "doc_b")
+    # Band only the exact-dedup survivors: at scale the LSH pass must not
+    # re-hash documents already eliminated by the cheaper exact stage.
+    cand = _component_candidates(surv.select("doc_id", "text"))
     toks = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )

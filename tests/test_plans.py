@@ -150,8 +150,12 @@ def test_lsh_recall_against_exact_jaccard(spark):
     all-pairs scorer (exact_jaccard_pairs_allpairs) — the registered ops
     are themselves banded now, so they cannot serve as their own truth.
     The md5 banding is fully deterministic; this pins recall against
-    silent regressions (fewer bands, a hash drift, tokenization drift)."""
+    silent regressions (fewer bands, a hash drift, tokenization drift).
+    The component jobs' candidates (uncapped 16 one-hash bands) must
+    cover every exact pair: their oracles are all-pairs components."""
     from opay_datalake_script_spark.llmdata.dedup import exact_jaccard_pairs_allpairs
+    from opay_datalake_script_spark.llmdata.pipeline import _component_candidates
+    from opay_datalake_script_spark.sources.io import load
 
     exact = {
         (r["doc_a"], r["doc_b"])
@@ -164,6 +168,11 @@ def test_lsh_recall_against_exact_jaccard(spark):
     assert exact, "fixture should contain high-jaccard pairs"
     recall = 1 - len(exact - lsh) / len(exact)
     assert recall >= 0.95, f"LSH recall {recall:.4f} below bound"
+
+    docs = load(spark, SF_DIR, "documents").select("doc_id", "text")
+    cand = {(r["doc_a"], r["doc_b"]) for r in _component_candidates(docs).collect()}
+    missed = exact - cand
+    assert not missed, f"component candidates miss {len(missed)} of {len(exact)}"
 
 
 def test_banded_jaccard_ops_have_no_allpairs_join(spark):

@@ -978,6 +978,7 @@ def test_lsh_bucket_cap_bounds_candidates_and_keeps_connectivity(spark):
     fixture's candidate set is identical to the uncapped one, and
     band_bucket_stats reports exactly the oversized buckets."""
     from opay_datalake_script_spark.llmdata.dedup import (
+        ONE_HASH_BANDS,
         band_bucket_stats,
         band_candidate_pairs,
     )
@@ -1021,6 +1022,11 @@ def test_lsh_bucket_cap_bounds_candidates_and_keeps_connectivity(spark):
         # hub-miss exposure: C(n-1, 2) member-member combinations per
         # oversized bucket are deferred to star/chain transitivity
         assert r["member_pairs_deferred"] == (n - 1) * (n - 2) // 2
+    # the stats follow the band scheme: 16 one-hash bands, each with the
+    # whole boilerplate family in one bucket
+    one_hash = band_bucket_stats(boiler, bands=ONE_HASH_BANDS).collect()
+    assert sorted(r["band"] for r in one_hash) == list(range(16))
+    assert all(r["max_width"] == n for r in one_hash)
 
     # fixture no-op at the default cap: same candidate set as uncapped
     from opay_datalake_script_spark.sources.io import load as _load
@@ -2701,6 +2707,61 @@ def test_grouped_row_number_null_group_matches_window(spark):
         ).collect()
     }
     assert got == want, (sorted(got), sorted(want))
+
+
+def test_embed_near_dup_matches_brute_force_on_planted_pairs(spark, tmp_path):
+    """k_embed_near_dup returns no rows on any fixture (every pair
+    cosine there is below 0.9), so its oracle check only proves the
+    output is empty. Plant pairs well above 0.9 (small perturbations,
+    a scaled copy) and well below (large perturbations, a negated
+    copy) and require exactly numpy's brute-force pair set."""
+    import numpy as np
+    import pandas as pd
+
+    from opay_datalake_script_spark.registry import QUERIES, load_all_queries
+    from opay_datalake_script_spark.schemas import SCHEMAS
+
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((48, 64))
+    noise = rng.standard_normal((10, 64))
+    vecs = np.vstack([
+        base,
+        base[:4] + 0.05 * noise[:4],   # cos ~0.999
+        base[4:8] + 1.2 * noise[4:8],  # cos ~0.64
+        3.0 * base[8:9],               # cos 1.0
+        -base[9:10],                   # cos -1.0
+    ]).astype(np.float32)
+    n = len(vecs)
+    ids = rng.permutation(10 * n)[:n].astype(np.int64)
+    pdf = pd.DataFrame({
+        "vec_id": ids,
+        "embedding": [v.tolist() for v in vecs],
+        "label": rng.integers(0, 5, n).astype(np.int32),
+    })
+    spark.createDataFrame(pdf, SCHEMAS["embeddings"]).write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+
+    unit = vecs.astype(np.float64)
+    unit /= np.linalg.norm(unit, axis=1, keepdims=True)
+    sims = unit @ unit.T
+    iu, ju = np.triu_indices(n, k=1)
+    pair_sims = sims[iu, ju]
+    assert not ((pair_sims > 0.8) & (pair_sims < 0.95)).any(), "no pair near 0.9"
+    want = {
+        (min(ids[i], ids[j]), max(ids[i], ids[j])): s
+        for i, j, s in zip(iu, ju, pair_sims)
+        if s >= 0.9
+    }
+    assert len(want) == 5
+
+    load_all_queries()
+    got = {
+        (r.vec_a, r.vec_b): r.sim
+        for r in QUERIES["k_embed_near_dup"](spark, str(tmp_path)).collect()
+    }
+    assert got.keys() == want.keys()
+    assert all(abs(got[k] - want[k]) <= 1e-5 for k in want)
 
 
 def test_semdedup_keeper_invariants(spark):
