@@ -718,7 +718,6 @@ def capped_bucket_pairs(
 def band_bucket_stats(
     docs: DataFrame,
     max_bucket_size: int = LSH_BUCKET_CAP,
-    bands: list[tuple[int, ...]] = _BANDS,
 ) -> DataFrame:
     """Per-band monitoring for the bucket-width cap: how many (band,
     bucket) groups exist, how many exceed ``max_bucket_size`` (and thus
@@ -732,8 +731,9 @@ def band_bucket_stats(
     and deferred/(deferred + emitted candidates) is the loggable
     hub-miss-rate ceiling). One extra aggregate over the banding
     relation — run it alongside a big dedup job to log what the cap is
-    doing at corpus scale."""
-    sizes = _banded_buckets(docs, bands).groupBy("band", "bucket").agg(
+    doing at corpus scale. It reads the default 8x2 scheme, the one
+    every capped caller bands with."""
+    sizes = _banded_buckets(docs).groupBy("band", "bucket").agg(
         F.count("*").alias("bsz")
     )
     over = F.col("bsz") > max_bucket_size
