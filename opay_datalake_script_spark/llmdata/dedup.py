@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.hints import gated_hint, maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -259,19 +258,18 @@ def pair_sides(cand: DataFrame, per_doc: DataFrame) -> DataFrame:
     Join strategy: ``per_doc`` is one row per document — tiny next to
     the candidate-pair stream at test scale, so shipping it to the pairs
     avoids shuffling the wide candidate stream twice (measured 2.2x at
-    sf0.1: 232 s -> 107 s for 11M candidates). It is CORPUS-LINEAR,
-    though, so both sides carry the size-gated broadcast hint
-    (plans/hints.py), decided once on ``per_doc``: past the gate the
+    sf0.1: 232 s -> 107 s for 11M candidates). It is CORPUS-LINEAR, so
+    it carries no hint: Catalyst broadcasts it while its optimized-plan
+    estimate is under ``autoBroadcastJoinThreshold``, and past that the
     joins plan as doc_id-keyed shuffled equi-joins with the same
-    semantics and no code edit."""
-    hint = gated_hint(per_doc)
+    semantics."""
     cols = [c for c in per_doc.columns if c != "doc_id"]
 
     def side(s: str) -> DataFrame:
-        return hint(per_doc.select(
+        return per_doc.select(
             F.col("doc_id").alias(f"doc_{s}"),
             *[F.col(c).alias(f"{c}_{s}") for c in cols],
-        ))
+        )
 
     return cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
 
@@ -914,7 +912,7 @@ def k_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         hashed.where(F.col("doc_id") % 97 != 0)
-        .join(maybe_broadcast(ev), "h")
+        .join(ev, "h")
         .select("doc_id", "lang", "h")
     )
 

@@ -571,8 +571,9 @@ def k_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cand = capped_bucket_pairs(bands, max_bucket_size=_CAP)
     # Verify-stage fetch (dedup.pair_sides): the hash side is one 24-byte
-    # row per image, so it rides the size-gated broadcast hint. Hamming
-    # distance needs no set intersection.
+    # row per image, which Catalyst broadcasts under
+    # autoBroadcastJoinThreshold. Hamming distance needs no set
+    # intersection.
     hamming = (
         F.bit_count(F.expr("lo_a ^ lo_b")).cast("long")
         + F.bit_count(F.expr("hi_a ^ hi_b")).cast("long")

@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -254,7 +253,7 @@ def k_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = sh.where(~is_eval)
     evals = sh.where(is_eval).select(F.col("doc_id").alias("eval_id"), "sh")
     return (
-        train.join(maybe_broadcast(evals), "sh")
+        train.join(evals, "sh")
         .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= 3)
@@ -472,8 +471,8 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
     # shared exact scorer (optimization r14): same equi-joins, plus the
-    # size-gated broadcast hint and the |a|+|b|-|a∩b| union arithmetic
-    # (tset is array_distinct output, so the ratios are identical)
+    # |a|+|b|-|a∩b| union arithmetic (tset is array_distinct output, so
+    # the ratios are identical)
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(
@@ -742,25 +741,22 @@ def k_tokenize_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the vocab is built with one token count agg and ranked
     with the distributed global_row_number (corpus-sublinear table, but
-    never a single-task window); the id lookup is a SIZE-GATED broadcast
-    join from tokens to vocab — a hand-curated vocab fits in memory, but
-    THIS vocab is every distinct corpus token, which grows by Heaps' law
+    never a single-task window); the id lookup is an UNHINTED join from
+    tokens to vocab — a hand-curated vocab fits in memory, but THIS
+    vocab is every distinct corpus token, which grows by Heaps' law
     (typos, URLs, numbers) and at web scale runs to billions of rows, so
-    a hard ``F.broadcast`` would force an executor OOM exactly like the
-    verify-stage fetches VERDICT r8 flagged (VERDICT r9's one `weak`
-    item). Under the gate the hint attaches (the local win); above it
-    the lookup plans as a uniform `tok`-keyed shuffled equi-join that
-    AQE may still runtime-promote. The sequence reassembly is one
-    doc_id-keyed collect_list wrapped in array_sort on (pos, id) —
-    deterministic order by construction, not by shuffle luck.
+    a hard ``F.broadcast`` would force an executor OOM. Catalyst
+    broadcasts the vocab while it is under ``autoBroadcastJoinThreshold``
+    (the local win); above it the lookup plans as a uniform `tok`-keyed
+    shuffled equi-join that AQE may still runtime-promote. The sequence
+    reassembly is one doc_id-keyed collect_list wrapped in array_sort on
+    (pos, id) — deterministic order by construction, not by shuffle luck.
     """
-    from ..plans.hints import maybe_broadcast
-
     d = load(spark, sf_dir, "documents")
     vocab = _ranked_vocab(_token_counts(d))
     pos = _doc_token_positions(d)
     return (
-        pos.join(maybe_broadcast(vocab), "tok")
+        pos.join(vocab, "tok")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
@@ -814,7 +810,7 @@ def k_tokenize_capped_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the cap makes the broadcast side bounded BY
     CONSTRUCTION — ≤ VOCAB_TOP_N rows regardless of corpus size — so
-    (unlike the uncapped sibling, whose vocab side must be size-gated)
+    (unlike the uncapped sibling, whose vocab side must stay unhinted)
     the hard `F.broadcast` hint is correct at any scale: class `cap` in
     the broadcast-site inventory. The top-N itself is selected with the
     distributed global_row_number + rank filter, never a single-task
@@ -1222,9 +1218,9 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tsets = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # shared exact scorer (optimization r14): identical joins and gated
-    # hint, plus the union arithmetic — see k_corpus_dedup_pipeline's
-    # note; tset is array_distinct output
+    # shared exact scorer (optimization r14): identical joins plus the
+    # union arithmetic — see k_corpus_dedup_pipeline's note; tset is
+    # array_distinct output
     from .dedup import exact_jaccard_scores
 
     pairs = exact_jaccard_scores(

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from .dedup import WINNOW_FPS_SQL_CTES as _WINNOW_CTES
 from ..registry import register
 from ..sources.io import load
@@ -97,7 +96,7 @@ def k_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = tok.groupBy("lang", "term").agg(F.count("*").alias("tf"))
     df = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
     n_docs = d.count()
-    scored = tf.join(maybe_broadcast(df), "term").select(
+    scored = tf.join(df, "term").select(
         "lang",
         "term",
         F.round(
@@ -534,7 +533,7 @@ def k_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("n12"))
     c1 = c12.groupBy("w1").agg(F.sum("n12").alias("n1"))
     return (
-        c12.join(maybe_broadcast(c1), "w1")
+        c12.join(c1, "w1")
         .where(F.col("n12") >= 5)
         .select(
             "w1",
@@ -701,12 +700,12 @@ def k_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     c12 = bg.groupBy("w1", "w2").agg(F.count("*").alias("n12"))
     c1 = c12.groupBy("w1").agg(F.sum("n12").alias("n1"))
     lm = (
-        c12.join(maybe_broadcast(c1), "w1")
+        c12.join(c1, "w1")
         .where(F.col("n12") >= 5)
         .select("w1", "w2", F.log(F.col("n12").cast("double") / F.col("n1")).alias("lp"))
     )
     sc = (
-        bg.join(maybe_broadcast(lm), ["w1", "w2"], "left")
+        bg.join(lm, ["w1", "w2"], "left")
         .groupBy("doc_id")
         .agg(
             F.round(F.avg("lp"), 6).alias("lm_score"),
@@ -1234,7 +1233,7 @@ def k_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("word")
     ).where(F.col("word") != "")
     return (
-        words.join(maybe_broadcast(enc), "word")
+        words.join(enc, "word")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_words"), F.sum("n_tok").alias("n_bpe_tokens"))
     )

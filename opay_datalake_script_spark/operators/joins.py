@@ -15,7 +15,6 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.exact import sql_sum_e4_2dp, sum_e4_2dp
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -49,11 +48,12 @@ def c_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def c_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hive auto-mapjoin analog: explicit broadcast of the dimension side —
-    no shuffle of the fact table at any scale."""
+    """Hive auto-mapjoin analog: Catalyst broadcasts the dimension side
+    while it is under ``autoBroadcastJoinThreshold``, so the fact table
+    is not shuffled; past it the join shuffles both sides."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
-    return li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey).select(
+    return li.join(p, li.l_partkey == p.p_partkey).select(
         "l_orderkey", "l_linenumber", "p_brand", "p_type"
     )
 
@@ -184,12 +184,12 @@ def c_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the customer's bucket is unique), so no dedup is needed.
 
     This is the shape that survives any scale: both sides shuffle on a
-    bounded-fan-out integer key instead of nesting loops. The size-gated
-    broadcast hint on the (3x-replicated) supplier side keeps the local
-    broadcast-hash plan at fixture scale; past the gate the SAME
-    equi-join simply shuffles — the graceful fallback a pure non-equi
-    condition cannot offer (r9 review: with no equi-key, detaching the
-    hint would have left CartesianProduct as the only plan)."""
+    bounded-fan-out integer key instead of nesting loops. Catalyst
+    broadcasts the (3x-replicated) supplier side at fixture scale, under
+    ``autoBroadcastJoinThreshold``; past it the SAME equi-join simply
+    shuffles — the graceful fallback a pure non-equi condition cannot
+    offer (with no equi-key, an unbroadcast side would leave
+    CartesianProduct as the only plan)."""
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     return banded_point_join(
@@ -215,17 +215,14 @@ def banded_point_join(
     to the <=3 buckets its interval can touch, and the exact BETWEEN runs
     as a residual filter. Floor monotonicity guarantees every matching
     point's bucket lies in the replicated range; the point bucket being
-    unique guarantees no pair matches twice (no dedup needed). The
-    size-gated hint keeps the broadcast-hash plan while the replicated
-    band side is small; above the gate the same join shuffles on the
-    integer bucket key.
+    unique guarantees no pair matches twice (no dedup needed). No hint:
+    Catalyst plans broadcast-hash while the replicated band side is
+    under ``autoBroadcastJoinThreshold``, and above it the same join
+    shuffles on the integer bucket key.
 
     Both sides pass through whole, so project each to the columns the
     caller needs FIRST: the output would otherwise carry duplicate
-    names (rejected below), and the size gate estimates the ``bands``
-    frame as passed — un-pruned wide columns inflate the estimate and
-    drop the hint long before the realized (pruned) broadcast would
-    stop fitting."""
+    names (rejected below)."""
     hw = float(half_width)
     if hw <= 0:
         raise ValueError(f"half_width must be positive, got {half_width}")
@@ -250,7 +247,7 @@ def banded_point_join(
     cond = pb[point_col].between(
         bb[center_col] - hw, bb[center_col] + hw
     )
-    return pb.join(maybe_broadcast(bb), "_bkt").where(cond).drop("_bkt")
+    return pb.join(bb, "_bkt").where(cond).drop("_bkt")
 
 
 @register(
@@ -340,15 +337,14 @@ def c_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-table star join: revenue by nation in ASIA (TPC-H Q5 shape).
 
-    One streaming pass over the fact table: the true dimension sides
-    (customer/nation/region) carry explicit broadcast hints, but the
-    lineitem-orders edge is deliberately UNhinted — orders is a fact table
-    that grows linearly with scale, and an explicit broadcast hint would
-    override the size threshold and OOM executors at 100 TB. Left to the
-    planner, orders still broadcasts at bench scale (it sits under the
-    64 MB autoBroadcastJoinThreshold) while at 100 TB the same plan
-    degrades gracefully to a shuffled hash join on l_orderkey for that
-    edge only; the dimension chain still broadcasts. The region filter
+    One streaming pass over the fact table: the bounded dimension sides
+    (nation/region) carry explicit broadcast hints, while the orders and
+    customer edges are UNhinted — both grow linearly with scale, and an
+    explicit broadcast hint would override the size threshold and OOM
+    executors at 100 TB. Left to the planner, they still broadcast at
+    bench scale (they sit under the 64 MB autoBroadcastJoinThreshold)
+    while at 100 TB those edges degrade gracefully to shuffled joins;
+    the nation/region chain still broadcasts. The region filter
     prunes before anything heavy runs — Catalyst pushes it below the
     joins.
     """
@@ -359,7 +355,7 @@ def c_join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")

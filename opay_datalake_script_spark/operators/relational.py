@@ -94,9 +94,9 @@ def grouped_row_number(
     group spreads across many range partitions, all sorting in
     parallel), then rank-within-group = global rank − the group's
     first global rank + 1. Group minima and sizes are ONE partial-
-    combining aggregate joined back through the size-gated broadcast
-    hint (one row per group; gated because group cardinality is the
-    caller's domain, not always bounded).
+    combining aggregate joined back with no hint (one row per group;
+    group cardinality is the caller's domain, not always bounded, so
+    Catalyst broadcasts it only under ``autoBroadcastJoinThreshold``).
 
     ``order_cols`` must make (group_cols + order_cols) a total order
     (unique tiebreaker) — same contract as global_row_number. NULL
@@ -111,8 +111,6 @@ def grouped_row_number(
     (group size, long)."""
     from functools import reduce
 
-    from ..plans.hints import maybe_broadcast
-
     ranked = global_row_number(df, *group_cols, *order_cols, parts=parts)
     stats = ranked.groupBy(*group_cols).agg(
         F.min("rn").alias("_rn0"), F.count(F.lit(1)).alias("gn")
@@ -125,7 +123,7 @@ def grouped_row_number(
         [F.col(c).eqNullSafe(F.col(f"_g_{c}")) for c in group_cols],
     )
     return (
-        ranked.join(maybe_broadcast(renamed), cond)
+        ranked.join(renamed, cond)
         .withColumn("grn", (F.col("rn") - F.col("_rn0") + 1).cast("long"))
         .drop("rn", "_rn0", *[f"_g_{c}" for c in group_cols])
     )

@@ -32,7 +32,6 @@ from ..functions.exact import (
     sql_sum_e4_2dp,
     sum_e4_2dp,
 )
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -61,7 +60,7 @@ def r_ads_daily_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     joined = (
-        o.join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .withColumn("dt", F.date_format("o_orderdate", "yyyy-MM-dd"))
     )

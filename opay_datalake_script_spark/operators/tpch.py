@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..sources.io import load
 
@@ -343,7 +342,7 @@ def t_q08_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal accumulator: per-year groups at 100 TB overflow int64
     vol = F.round(_rev() * 10000, 0).cast("decimal(20,0)").alias("volume_e4")
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -399,7 +398,7 @@ def t_q09_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -551,7 +550,7 @@ def t_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accumulator because a single global group at 100 TB passes int64.
     rev_e4 = F.round(_rev() * 10000, 0).cast("decimal(20,0)")
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             _round_div_e4(
                 F.sum(
@@ -641,7 +640,7 @@ def t_q16_part_supplier_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load(spark, sf_dir, "lineitem")
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -666,7 +665,7 @@ def t_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     w = W.partitionBy("l_partkey")
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .withColumn("avg_qty", F.avg("l_quantity").over(w))
         .where(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(_sum_e4_2dp(F.col("l_extendedprice"), denom=70000).alias("avg_yearly"))
@@ -751,7 +750,7 @@ def t_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("p_brand") == "Brand#3") & sz.between(1, 35) & q.between(20, 30))
     )
     return (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .where(cond)
         .agg(_sum_e4_2dp(_rev()).alias("revenue"))
     )
@@ -781,7 +780,7 @@ def t_q20_heavy_widget_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     heavy = (
-        li.join(maybe_broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
         .agg(F.sum("l_quantity").alias("sq"))
         .where(F.col("sq") > 400)
@@ -838,7 +837,7 @@ def t_q21_last_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         stats.where((F.col("n_supp") >= 2) & (F.col("supp_last") == F.col("ord_last")))
         .join(o, stats.l_orderkey == o.o_orderkey, "left_semi")
-        .join(maybe_broadcast(s), stats.l_suppkey == s.s_suppkey)
+        .join(s, stats.l_suppkey == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count("*").alias("numwait"))
     )
@@ -952,7 +951,7 @@ def t_q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
     cat = (
-        ps.join(maybe_broadcast(p), ps.partkey == p.p_partkey)
+        ps.join(p, ps.partkey == p.p_partkey)
         .join(s, ps.suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)

@@ -36,19 +36,8 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 
 
 def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
-
-
-def has_broadcast_hint(df: DataFrame) -> bool:
-    """True if any join in the OPTIMIZED LOGICAL plan carries an explicit
-    broadcast hint (`leftHint=/rightHint=(strategy=broadcast)`). Distinct
-    from `uses_broadcast_join`: Catalyst auto-broadcasts un-hinted sides
-    under autoBroadcastJoinThreshold (a demotable, size-aware choice),
-    while a hint is a command — the size-gated-hint tests must assert on
-    the hint itself, not on the physical join node."""
-    return "strategy=broadcast" in str(
-        df._jdf.queryExecution().optimizedPlan().toString()
-    )
+    plan = formatted_plan(df)
+    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
 def uses_take_ordered(df: DataFrame) -> bool:

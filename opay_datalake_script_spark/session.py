@@ -12,6 +12,13 @@ expressed as their Spark equivalents (SURVEY.md §4 table). Config choices:
 * shuffle.partitions=32 + AQE: at local/bench scale, 200 default shuffle
   partitions is pure scheduling overhead; AQE coalesces and re-plans at
   runtime, and at cluster scale handles skew joins.
+* autoBroadcastJoinThreshold=64MB: the Hive auto mapjoin setting and the
+  engine's single size-based broadcast policy. Catalyst broadcasts a
+  join side whose optimized-plan estimate is under it, and AQE
+  re-decides from runtime sizes. Explicit ``F.broadcast`` hints sit only
+  on sides bounded by something the estimate cannot see (region/nation,
+  scalar totals, offset maps, query vectors); the inventory in
+  ``tests/test_plans.py`` lists every one.
 * dynamic partition overwrite: the Spark equivalent of Hive
   ``INSERT OVERWRITE ... PARTITION`` the reference used for idempotent
   daily reloads.

@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..schemas import SCHEMAS
 
@@ -586,7 +585,7 @@ def a_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched = o.where(
         (F.col("o_orderkey") % 100 == 0) | (F.col("o_orderkey") % 100 == 50)
     ).select("o_orderkey")
-    survivors = o.join(maybe_broadcast(touched), "o_orderkey", "left_anti")
+    survivors = o.join(touched, "o_orderkey", "left_anti")
     return survivors.unionByName(upd).unionByName(ins)
 
 

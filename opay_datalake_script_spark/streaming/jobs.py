@@ -22,7 +22,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.hints import maybe_broadcast
 from ..registry import register
 from ..functions.exact import sql_sum_e4_2dp, sum_e4_2dp
 from ..sources.io import (
@@ -535,9 +534,7 @@ def i_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     c = load(spark, sf_dir, "customer")
-    return ev.join(
-        maybe_broadcast(c), ev.user_id == c.c_custkey
-    ).select(
+    return ev.join(c, ev.user_id == c.c_custkey).select(
         "event_id",
         "user_id",
         "event_type",
@@ -552,9 +549,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str):
 
     def build(events: DataFrame) -> DataFrame:
         c = load(spark, sf_dir, "customer")
-        return events.join(
-            maybe_broadcast(c), events.user_id == c.c_custkey
-        ).select(
+        return events.join(c, events.user_id == c.c_custkey).select(
             "event_id",
             "user_id",
             "event_type",

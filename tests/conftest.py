@@ -24,17 +24,6 @@ def spark():
     yield s
 
 
-@pytest.fixture(autouse=True)
-def _clear_broadcast_gate_env(monkeypatch):
-    """The gate tests pin behavior by monkeypatching
-    ``hints.VERIFY_FETCH_BROADCAST_MAX_BYTES`` — but a deployment-level
-    ``SPARK_GRAFT_BROADCAST_GATE_BYTES`` exported on the host takes
-    precedence over the module constant, which would flip every
-    gate-0/gate-default assertion spuriously (r10 review). Clear it for
-    every test; the override's own test sets it explicitly."""
-    monkeypatch.delenv("SPARK_GRAFT_BROADCAST_GATE_BYTES", raising=False)
-
-
 @pytest.fixture(scope="session")
 def oracle_con():
     con = duckdb.connect()

@@ -1059,16 +1059,13 @@ def test_topk_window_group_limit_and_knn_take_ordered(spark):
     assert "TakeOrderedAndProject" in knn, knn
 
 
-def test_size_gated_broadcast_hint(spark, monkeypatch):
-    """The verify-stage fetch sides (per-doc token sets / signatures /
-    image hashes) are CORPUS-LINEAR, so ``pair_sides``' broadcast hint
-    must be size-gated (VERDICT r8's one `weak` item): present while
-    Catalyst's estimate is under the gate, automatically ABSENT above
-    it — no human edit — with identical results either way. Every
-    verify stage relies on the fetch contract pinned here too: each
-    per-doc column ``c`` arrives as ``c_a``/``c_b``, and a candidate
-    whose doc is missing from the per-doc side yields no row."""
-    from opay_datalake_script_spark.plans import hints
+def test_pair_sides_fetch_contract(spark):
+    """Every verify stage fetches its per-doc side through ``pair_sides``:
+    each per-doc column ``c`` arrives as ``c_a``/``c_b``, and a candidate
+    whose doc is missing from the per-doc side yields no row. The
+    per-doc side carries no hint, so at fixture scale the fetch is a
+    broadcast join only because Catalyst's autoBroadcastJoinThreshold
+    chose it, and with the threshold off both fetch joins shuffle."""
     from opay_datalake_script_spark.llmdata.dedup import (
         normalized_text,
         pair_sides,
@@ -1081,34 +1078,33 @@ def test_size_gated_broadcast_hint(spark, monkeypatch):
         "doc_id", "lang",
         F.array_distinct(F.split(normalized_text(), " ")).alias("tset"),
     )
+    # checkpointed so the candidate side adds no join of its own to the
+    # fetch plan and every collect below sees the same 500 pairs
     cand = d.select(F.col("doc_id").alias("doc_a")).crossJoin(
         d.select(F.col("doc_id").alias("doc_b"))
-    ).where(F.col("doc_a") < F.col("doc_b")).orderBy("doc_a", "doc_b").limit(500)
+    ).where(F.col("doc_a") < F.col("doc_b")).orderBy(
+        "doc_a", "doc_b"
+    ).limit(500).localCheckpoint()
 
-    from opay_datalake_script_spark.plans.inspect import has_broadcast_hint
-
-    est = hints.plan_size_bytes(toks)
-    assert 0 < est < hints.VERIFY_FETCH_BROADCAST_MAX_BYTES, (
-        "fixture token-set side must sit under the default gate"
-    )
-    under = pair_sides(cand, toks)
-    assert has_broadcast_hint(under), "hint must be present under the gate"
+    joined = pair_sides(cand, toks)
+    assert uses_broadcast_join(joined), "fixture-scale fetch must broadcast"
     cols = ["doc_a", "doc_b", "lang_a", "lang_b", "tset_a", "tset_b"]
-    assert sorted(under.columns) == cols, under.columns
+    assert sorted(joined.columns) == cols, joined.columns
 
     def rows(df):
         return sorted(map(tuple, df.select(cols).collect()))
 
-    monkeypatch.setattr(hints, "VERIFY_FETCH_BROADCAST_MAX_BYTES", 0)
-    over = pair_sides(cand, toks)
-    assert not has_broadcast_hint(over), (
-        "hint must disappear above the gate with no code edit "
-        "(Catalyst may still AUTO-broadcast the small fixture side — "
-        "that demotable choice is exactly the desired fallback)"
-    )
-    a = rows(under)
-    assert a == rows(over), "gated fallback must be semantics-preserving"
+    a = rows(joined)
     assert len(a) == 500, len(a)
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled = pair_sides(cand, toks)
+        assert not uses_broadcast_join(shuffled), "the fetch carries a hint"
+        assert rows(shuffled) == a
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
     # inner joins: a doc missing from the per-doc side drops its pairs
     gone = sorted({r[0] for r in a})[:2] + sorted({r[1] for r in a})[-2:]
@@ -1120,104 +1116,82 @@ def test_size_gated_broadcast_hint(spark, monkeypatch):
     assert len(kept) < len(a)
 
 
-def test_gated_hints_attach_at_fixture_scale(spark, monkeypatch):
-    """Round 9 converted the SF-scaling / vocabulary-linear broadcast
-    sides (filtered TPC-H dims, CDC touched keys, textstats LM tables)
-    from hard ``F.broadcast`` to the size-gated ``maybe_broadcast``.
-    The conversion must be plan-IDENTICAL at fixture scale — the hint
-    still attaches, so no local perf is given up — and every gated hint
-    must vanish above the gate while the unconditional hints on
-    genuinely bounded sides (region/nation, scalar totals) remain.
-
-    Expected counts are probed facts: every converted side attaches at
-    fixture scale, including aggregate-derived ones (Catalyst shrinks
-    the size estimate through aggregates — a word-count table over the
-    sf0.01 documents scan estimates ~28 KB vs the scan's ~65 KB), so
-    each query pins exactly its number of maybe_broadcast call sites
-    (k_bigram_logprob has 1, k_perplexity_buckets 2, ...).
-
-    Version pin (ADVICE r9): the fixture-scale counts depend on
-    Catalyst's size estimation for aggregate-derived sides and were
-    probed against pyspark 4.1.x. A Spark upgrade that changes stats
-    estimation can flip a count with no repo bug — if this fails right
-    after an upgrade, re-probe the counts; the load-bearing invariant is
-    the gate-0 column (every gated hint vanishes, unconditional hints on
-    bounded sides remain), which is estimator-independent."""
-    import pyspark
-
-    assert pyspark.__version__.startswith("4.1."), (
-        f"fixture-scale hint counts were probed on pyspark 4.1.x; "
-        f"running {pyspark.__version__} — re-probe the `expected` table "
-        "(the gate-0 invariant below is version-independent)"
-    )
-    from opay_datalake_script_spark.plans import hints
-
-    def nhints(df):
-        return str(df._jdf.queryExecution().optimizedPlan().toString()).count(
-            "strategy=broadcast"
-        )
-
-    # qid -> (hints at fixture scale, hints with the gate forced to 0)
-    expected = {
-        "c_join_broadcast": (1, 0),
-        "c_join_range": (1, 0),
-        # r11 grouped rank: global_row_number's unconditional
-        # partition-bounded offsets map(s) stay at gate 0; the gated
-        # per-group stats side vanishes
-        "d_percentile_disc": (3, 2),
-        "c_join_multiway": (3, 2),
-        "t_q09_product_profit": (2, 1),
-        "t_q14_promo_effect": (1, 0),
-        "r_ads_daily_report": (2, 1),
-        "a_cdc_upsert": (1, 0),
-        "k_tfidf_topterms": (1, 0),
-        "k_bigram_logprob": (1, 0),
-        "k_perplexity_buckets": (2, 0),
-        "k_bpe_encode": (1, 0),
-        # 2 at fixture scale: the gated Heaps-law vocab side (vanishes
-        # at gate 0) + global_row_number's unconditional #partitions-row
-        # offsets broadcast (partition-bounded, correctly hard).
-        "k_tokenize_to_ids": (2, 1),
-    }
-    base = {q: nhints(QUERIES[q](spark, SF_DIR)) for q in expected}
-    monkeypatch.setattr(hints, "VERIFY_FETCH_BROADCAST_MAX_BYTES", 0)
-    gate0 = {q: nhints(QUERIES[q](spark, SF_DIR)) for q in expected}
-    got = {q: (base[q], gate0[q]) for q in expected}
-    assert got == expected, (
-        "size-gated hint counts moved: either a gated side stopped "
-        "hinting at fixture scale (local perf regression) or an "
-        "unconditional hint became gated/ungated unintentionally"
-    )
+def _broadcast_joins(df) -> int:
+    """BroadcastHashJoin + BroadcastNestedLoopJoin nodes in the frame's
+    physical plan (the initial plan: the frame is not executed)."""
+    plan = _plan_str(df)
+    return plan.count("BroadcastHashJoin") + plan.count("BroadcastNestedLoopJoin")
 
 
-def test_broadcast_gate_env_override(monkeypatch):
-    """``SPARK_GRAFT_BROADCAST_GATE_BYTES`` (ADVICE r9) takes precedence
-    over the 256 MB module default so smaller executor tiers tune the
-    gate without a code edit; an unparseable value raises loudly instead
-    of silently running with a gate the operator did not choose; empty
-    means unset. (The autouse conftest fixture clears the var for every
-    OTHER test so a host-level export cannot flip the gate-0/
-    gate-default assertions above.)"""
-    import pytest
+# qid -> (broadcast joins at the session threshold, broadcast joins with
+# autoBroadcastJoinThreshold=-1, i.e. the hard F.broadcast hints alone).
+# Every job here joins a side that grows with the corpus/SF and carries
+# no hint. Not listed: the jobs whose unhinted join runs inside the
+# build, behind a localCheckpoint, so the returned plan does not contain
+# it (a_snapshot_time_travel, k_interleave_sources,
+# k_cluster_size_histogram, k_dedup_components, k_dedup_keep_best,
+# k_corpus_dedup_pipeline, k_corpus_dedup_winnow,
+# k_corpus_build_pipeline); their oracle tests check the results.
+_UNHINTED_BROADCAST_COUNTS = {
+    "a_cdc_upsert": (1, 0),
+    "c_join_broadcast": (1, 0),
+    "c_join_multiway": (4, 2),
+    "c_join_range": (1, 0),
+    "d_percentile_disc": (3, 2),
+    "i_stream_static_join": (1, 0),
+    "k_bigram_logprob": (1, 0),
+    "k_bpe_encode": (1, 0),
+    "k_containment_dedup": (5, 0),
+    "k_contamination_check": (1, 0),
+    "k_cross_dedup": (1, 0),
+    "k_domain_mixture": (4, 3),
+    "k_edit_distance_pairs": (5, 0),
+    "k_image_ahash_dedup": (5, 0),
+    "k_incremental_dedup": (7, 0),
+    "k_jaccard_pairs": (5, 0),
+    "k_minhash_jaccard_estimate": (7, 0),
+    "k_near_dedup_lsh": (5, 0),
+    "k_ngram_jaccard": (5, 0),
+    "k_perplexity_buckets": (2, 0),
+    "k_temperature_mixture": (7, 6),
+    "k_tfidf_topterms": (1, 0),
+    "k_tokenize_to_ids": (2, 1),
+    "k_tokenizer_fertility": (2, 0),
+    "r_ads_daily_report": (2, 1),
+    "t_q02_min_cost_supplier": (8, 4),
+    "t_q08_market_share": (7, 3),
+    "t_q09_product_profit": (4, 1),
+    "t_q14_promo_effect": (1, 0),
+    "t_q16_part_supplier_breadth": (1, 0),
+    "t_q17_small_quantity_revenue": (1, 0),
+    "t_q19_discounted_revenue": (1, 0),
+    "t_q20_heavy_widget_shippers": (1, 0),
+    "t_q21_last_shipper": (2, 0),
+}
 
-    from opay_datalake_script_spark.plans import hints
 
-    assert hints._default_gate_bytes() == hints.VERIFY_FETCH_BROADCAST_MAX_BYTES
-    monkeypatch.setenv(hints._GATE_ENV, "1024")
-    assert hints._default_gate_bytes() == 1024
-    monkeypatch.setenv(hints._GATE_ENV, "256mb")
-    with pytest.raises(ValueError, match="integer byte count"):
-        hints._default_gate_bytes()
-    # negative (ADVICE r10): disables every gated broadcast exactly like
-    # 0 but is indistinguishable from a typo — must raise, not run
-    monkeypatch.setenv(hints._GATE_ENV, "-256")
-    with pytest.raises(ValueError, match="negative"):
-        hints._default_gate_bytes()
-    # explicit 0 stays the documented "gate off" setting
-    monkeypatch.setenv(hints._GATE_ENV, "0")
-    assert hints._default_gate_bytes() == 0
-    monkeypatch.setenv(hints._GATE_ENV, "")
-    assert hints._default_gate_bytes() == hints.VERIFY_FETCH_BROADCAST_MAX_BYTES
+def test_unhinted_sides_broadcast_under_the_session_threshold(spark):
+    """Corpus-growing join sides carry no broadcast hint: Catalyst's
+    autoBroadcastJoinThreshold (64 MB, session.py) is the one size-based
+    broadcast policy. At fixture scale it broadcasts those sides (first
+    column); with the threshold off, only the hard-hinted bounded sides
+    stay broadcast (second column) — an unconditional hint on a
+    corpus-growing side would keep its broadcast there and fail.
+
+    The counts depend on Catalyst's size estimates and join selection
+    and were probed on pyspark 4.1.x; after a Spark upgrade re-probe
+    them."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    got = {}
+    try:
+        for q in _UNHINTED_BROADCAST_COUNTS:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+            at_threshold = _broadcast_joins(QUERIES[q](spark, SF_DIR))
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            got[q] = (at_threshold, _broadcast_joins(QUERIES[q](spark, SF_DIR)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert got == _UNHINTED_BROADCAST_COUNTS
 
 
 # ---------------------------------------------------------------------------
@@ -1225,14 +1199,15 @@ def test_broadcast_gate_env_override(monkeypatch):
 # ---------------------------------------------------------------------------
 # An explicit ``F.broadcast`` is a COMMAND Catalyst obeys and AQE never
 # demotes, so every hard hint must sit on a side whose row count is
-# bounded by something that does NOT grow with the corpus/SF. The r9
-# size-gate campaign converted all corpus-growing sides to
-# ``maybe_broadcast`` — but the judge still found one missed site in
-# ~40 (the Heaps-law vocab in k_tokenize_to_ids), because the
+# bounded by something that does NOT grow with the corpus/SF. A
+# corpus-growing side takes NO hint: Catalyst's
+# autoBroadcastJoinThreshold (session.py) broadcasts it while its
+# estimate is small and shuffles past that. One such side once slipped
+# through in ~40 (the Heaps-law vocab in k_tokenize_to_ids) because the
 # classification lived in prose. This inventory makes it code: every
 # hard ``F.broadcast(`` call site in the package must appear below with
 # a boundedness class, and any NEW site fails the test until a human
-# classifies it (or uses ``maybe_broadcast``).
+# classifies it (or drops the hint).
 #
 # Taxonomy (the bound that keeps the side broadcast-safe at 100 TB):
 #   scalar    — O(1) rows: global aggregate totals, sketch rows, modes
@@ -1326,14 +1301,13 @@ _HARD_BROADCAST_SITES = {
 
 
 def _hard_broadcast_sites():
-    """AST-walk the package for every hard broadcast call site
-    (excluding plans/hints.py, which DEFINES the gated wrapper) keyed by
+    """AST-walk the package for every hard broadcast call site, keyed by
     (module relpath, enclosing function qualname, unparsed first arg).
     Line numbers are deliberately NOT part of the key — the inventory
     must not rot under unrelated edits.
 
     Matched spellings (r10 review: the literal ``F.broadcast`` filter
-    alone would let a renamed import bypass the gate): any
+    alone would let a renamed import bypass the inventory): any
     ``*.broadcast(...)`` attribute call (F./functions./sc. — a
     SparkContext broadcast VARIABLE is memory-bounded by the same
     argument, so it needs a class too), a bare ``broadcast(...)`` from
@@ -1354,8 +1328,6 @@ def _hard_broadcast_sites():
                 continue
             path = os.path.join(root, fn)
             rel = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
-            if rel == "plans/hints.py":
-                continue
             with open(path) as fh:
                 tree = ast.parse(fh.read())
 
@@ -1390,17 +1362,18 @@ def _hard_broadcast_sites():
 def test_every_hard_broadcast_site_is_classified_bounded():
     """Every hard ``F.broadcast`` call site must carry a boundedness
     class in ``_HARD_BROADCAST_SITES``. A new unclassified site fails
-    here until reviewed: if its side grows with the corpus/SF, it must
-    use ``plans.hints.maybe_broadcast`` instead (the k_tokenize_to_ids
-    lesson — VERDICT r9's one `weak` item); if genuinely bounded, add it
-    with the right class. Stale entries (site removed/renamed) fail too,
-    so the inventory is exact, not a lower bound."""
+    here until reviewed: if its side grows with the corpus/SF, drop the
+    hint and let autoBroadcastJoinThreshold decide (the
+    k_tokenize_to_ids lesson); if genuinely bounded, add it with the
+    right class. Stale entries (site removed/renamed) fail too, so the
+    inventory is exact, not a lower bound."""
     actual = _hard_broadcast_sites()
     unclassified = set(actual) - set(_HARD_BROADCAST_SITES)
     stale = set(_HARD_BROADCAST_SITES) - set(actual)
     assert not unclassified, (
         "NEW hard F.broadcast site(s) with no boundedness classification "
-        f"(use maybe_broadcast for corpus-growing sides): {sorted(unclassified)}"
+        "(a corpus-growing side takes no hint; autoBroadcastJoinThreshold "
+        f"decides): {sorted(unclassified)}"
     )
     assert not stale, (
         f"stale inventory entries for removed/renamed sites: {sorted(stale)}"

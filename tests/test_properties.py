@@ -2114,7 +2114,7 @@ def test_banded_point_join_input_guards(spark):
         banded_point_join(tainted, "p", bnds, "c", half_width=1.0)
 
 
-def test_banded_point_join_degenerate_skew(spark, monkeypatch, tmp_path):
+def test_banded_point_join_degenerate_skew(spark, tmp_path):
     """VERDICT r9 item 7: the band join's pathological distribution —
     constant / near-constant values that funnel EVERY point into ONE
     bucket. Three invariants make the shape survivable at scale:
@@ -2127,25 +2127,23 @@ def test_banded_point_join_degenerate_skew(spark, monkeypatch, tmp_path):
        data-dependent: each band row lands in at most
        floor((c+hw)/hw) - floor((c-hw)/hw) + 1 <= 3 buckets no matter
        how the values cluster — a constant column cannot amplify it.
-    3. The plan stays a bucket-keyed EQUI-join in both gate regimes:
-       broadcast-hash under the size gate (the probe/point side is
-       never shuffled, so one hot bucket cannot create a hot reducer),
-       and above the gate — with auto-broadcast disabled to simulate a
-       genuinely large band side — a shuffled SortMergeJoin, never
+    3. The plan stays a bucket-keyed EQUI-join in both regimes:
+       broadcast-hash under autoBroadcastJoinThreshold (the probe/point
+       side is never shuffled, so one hot bucket cannot create a hot
+       reducer), and past it — with auto-broadcast disabled to simulate
+       a genuinely large band side — a shuffled SortMergeJoin, never
        CartesianProduct: the partition-level skew that remains is
        exactly the shape AQE's OptimizeSkewedJoin subdivides at
        runtime, which no nested-loop plan offers.
     """
     from opay_datalake_script_spark.operators.joins import banded_point_join
-    from opay_datalake_script_spark.plans import hints
-    from opay_datalake_script_spark.plans.inspect import has_broadcast_hint
 
     hw = 1.0
     # 120 points all at (or within 1e-9 of) 0.0; 40 bands all at 0.25:
     # every pair matches, every point hashes to bucket 0 or -1.
     # Written to parquet and read back so Catalyst has REAL size stats —
-    # a createDataFrame local relation estimates as unknown/huge, which
-    # the gate (correctly) refuses to hint, leaving nothing to test.
+    # a createDataFrame over a Python list estimates as unknown/huge and
+    # never auto-broadcasts, leaving the broadcast regime untested.
     spark.createDataFrame(
         [(i, 0.0 if i % 3 else (1e-9 if i % 2 else -1e-9))
          for i in range(120)],
@@ -2178,7 +2176,7 @@ def test_banded_point_join_degenerate_skew(spark, monkeypatch, tmp_path):
         f"band replication {replicated} exceeds the 3x structural bound"
     )
 
-    # (1) exact parity with the naive theta join, under the gate.
+    # (1) exact parity with the naive theta join, broadcast regime.
     joined = banded_point_join(pts, "p", bnds, "c", half_width=hw)
     got = sorted(map(tuple, joined.select("pid", "bid").collect()))
     want = sorted(
@@ -2193,20 +2191,18 @@ def test_banded_point_join_degenerate_skew(spark, monkeypatch, tmp_path):
     assert got == want
     assert len(got) == 120 * 40, "degenerate case must be all-pairs"
 
-    # (3a) under the gate: broadcast-hash, point side never shuffled.
+    # (3a) under the threshold: broadcast-hash, point side never shuffled.
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan
 
-    # (3b) above the gate AND past auto-broadcast: the fallback is a
-    # shuffled equi-join on the bucket key — AQE-splittable — never a
-    # nested loop. Results identical.
-    monkeypatch.setattr(hints, "VERIFY_FETCH_BROADCAST_MAX_BYTES", 0)
+    # (3b) past auto-broadcast: the fallback is a shuffled equi-join on
+    # the bucket key — AQE-splittable — never a nested loop. Results
+    # identical.
     auto_prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         over = banded_point_join(pts, "p", bnds, "c", half_width=hw)
-        assert not has_broadcast_hint(over)
         oplan = over._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in oplan
         assert "BroadcastNestedLoopJoin" not in oplan
@@ -2216,7 +2212,7 @@ def test_banded_point_join_degenerate_skew(spark, monkeypatch, tmp_path):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto_prev)
-    assert got_over == want, "gate fallback must be semantics-preserving"
+    assert got_over == want, "shuffled fallback must be semantics-preserving"
 
 
 # Values spanning sign changes, bucket-boundary exactness (multiples of
