@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import round_div_e4, sql_round_div_e4
 from ..registry import register
-from ..sources.io import load
+from ..sources.io import load, local_rows
 
 
 @register(
@@ -144,7 +144,8 @@ def k_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.relational import grouped_row_number
 
     d = load(spark, sf_dir, "documents")
-    quota = spark.createDataFrame(
+    quota = local_rows(
+        spark,
         [("src0", 20), ("src1", 20), ("src2", 20), ("src3", 20), ("src4", 5)],
         "source string, n_keep int",
     )

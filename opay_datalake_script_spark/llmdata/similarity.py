@@ -4,13 +4,14 @@ bucketed ANN variant as the scale path.
 
 Design for 100 TB: the exact all-pairs path is block-PAIR-wise — the
 table is hashed into B blocks, every unordered block pair (bi <= bj)
-becomes one cogroup task, and each task computes its block x block
-similarity tile with a single numpy matmul (BLAS) and emits only its
-local top-k / above-threshold pairs. Nothing is ever materialized on the
-driver (round-1 used a driver-side toPandas + broadcast — a driver OOM
-at scale); the shuffle carries each row B+1 times (one copy per pair it
-participates in), which is O(n*B) rows, never the O(n^2) pair set. The
-ANN path cuts candidate generation to same-bucket joins.
+becomes one group of a single grouped map, and each group computes its
+block x block similarity tile with a single numpy matmul (BLAS) and
+emits only its local top-k / above-threshold pairs. Nothing is ever
+materialized on the driver (round-1 used a driver-side toPandas +
+broadcast — a driver OOM at scale); the one shuffle carries each row B
+times (one copy per block pair it belongs to), which is O(n*B) rows,
+never the O(n^2) pair set. The ANN path cuts candidate generation to
+same-bucket joins.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ from ..functions.exact import (
 )
 from ..registry import register
 from ..schemas import EMBEDDING_DIM
-from ..sources.io import load
+from ..sources.io import load, local_rows
 
 _TOPK_SCHEMA = "vec_a long, vec_b long, sim double"
 
@@ -118,51 +119,46 @@ def _auto_blocks(
     return b
 
 
-def _block_pair_scores(spark: SparkSession, emb: DataFrame, n_blocks: int, tile_fn):
+def _block_pair_scores(emb: DataFrame, n_blocks: int, tile_fn):
     """Distributed all-pairs cosine scaffold: hash rows into ``n_blocks``
-    blocks, fan out one cogroup task per unordered block pair, and let
-    ``tile_fn(diagonal, ids_a, ids_b, sims)`` reduce each similarity tile
-    to the rows worth keeping (local top-k, threshold filter, ...).
+    blocks, score every unordered block pair in one group of a grouped
+    map, and let ``tile_fn(diagonal, ids_a, ids_b, sims)`` reduce each
+    similarity tile to the rows worth keeping (local top-k, threshold
+    filter, ...).
 
-    Each unordered vector pair lands in exactly one task: both ids hash to
-    blocks, and the task for (min_blk, max_blk) scores it. On the diagonal
-    task (bi == bj) the tile contains each pair twice, so tile_fn must
-    keep the strict upper triangle there. Replication factor is B+1 per
-    row — the shuffle is O(n*B), not O(n^2), and no driver collect exists
-    anywhere on the path.
+    Each row of block ``blk`` is exploded on the JVM against every block
+    ``other`` and keyed ``(least, greatest)``, so it joins the B groups of
+    the pairs it belongs to, once each; the group (lo, hi) splits back
+    into its ``blk == lo`` and ``blk == hi`` sides, the same rows on the
+    diagonal (lo == hi), where the tile holds each pair twice and tile_fn
+    must keep the strict upper triangle. Every unordered vector pair is
+    scored in exactly one group, a group holds at most two blocks, and the
+    one shuffle carries B copies of each row: O(n*B), not O(n^2), with no
+    driver collect anywhere on the path.
     """
-    pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-    pair_meta = {pid: p for pid, p in enumerate(pairs)}
-    a_map = spark.createDataFrame(
-        [(i, pid) for pid, (i, _) in pair_meta.items()], "blk int, pair_id int"
-    )
-    b_map = spark.createDataFrame(
-        [(j, pid) for pid, (_, j) in pair_meta.items()], "blk int, pair_id int"
-    )
-    e = emb.withColumn("blk", F.pmod(F.hash("vec_id"), F.lit(n_blocks)).cast("int"))
-    a_side = e.join(F.broadcast(a_map), "blk").select("pair_id", "vec_id", "embedding")
-    # the b side renames its columns: both sides share the same lineage and
-    # Spark's cogroup resolver rejects duplicate attribute ids otherwise
-    b_side = e.join(F.broadcast(b_map), "blk").select(
-        "pair_id", F.col("vec_id").alias("vid"), F.col("embedding").alias("emb")
+    blk = F.pmod(F.hash("vec_id"), F.lit(n_blocks)).cast("int")
+    other = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+    keyed = emb.select(
+        "vec_id", "embedding", blk.alias("blk"), other.alias("other")
+    ).select(
+        F.least("blk", "other").alias("lo"),
+        F.greatest("blk", "other").alias("hi"),
+        "blk",
+        "vec_id",
+        "embedding",
     )
 
-    def score_tile(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
+    def score_tile(key, rows):
+        lo, hi = key
+        side_a, side_b = rows[rows["blk"] == lo], rows[rows["blk"] == hi]
+        if side_a.empty or side_b.empty:
             return _EMPTY_PAIRS
-        bi, bj = pair_meta[key[0]]
-        ids_a, mat_a = _normalized_matrix(left)
-        ids_b, mat_b = _normalized_matrix(
-            right.rename(columns={"vid": "vec_id", "emb": "embedding"})
-        )
+        ids_a, mat_a = _normalized_matrix(side_a)
+        ids_b, mat_b = _normalized_matrix(side_b)
         sims = mat_a @ mat_b.T  # one BLAS call per tile
-        return tile_fn(bi == bj, ids_a, ids_b, sims)
+        return tile_fn(lo == hi, ids_a, ids_b, sims)
 
-    return (
-        a_side.groupby("pair_id")
-        .cogroup(b_side.groupby("pair_id"))
-        .applyInPandas(score_tile, schema=_TOPK_SCHEMA)
-    )
+    return keyed.groupBy("lo", "hi").applyInPandas(score_tile, schema=_TOPK_SCHEMA)
 
 
 @register(
@@ -179,14 +175,15 @@ def _block_pair_scores(spark: SparkSession, emb: DataFrame, n_blocks: int, tile_
 def k_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 most-similar embedding pairs by cosine.
 
-    Block-pair exact search (see _block_pair_scores): each cogroup task
-    scores one block x block tile with a single BLAS matmul and keeps its
-    local top-k straight off the score matrix — the O(n^2) candidate set
-    never materializes as rows, and (unlike round 1) nothing is collected
-    to the driver. The global TakeOrderedAndProject sees at most
-    k * n_tasks rows. B is data-dependent (`_auto_blocks`: ~4096 rows
-    per block), so the same shape holds at 100x the vectors, or
-    swap in the IVF bucket path (k_ann_ivf) for candidate pruning.
+    Block-pair exact search (see _block_pair_scores): each group of one
+    grouped map scores one block x block tile with a single BLAS matmul
+    and keeps its local top-k straight off the score matrix — the O(n^2)
+    candidate set never materializes as rows, and (unlike round 1)
+    nothing is collected to the driver. The global TakeOrderedAndProject
+    sees at most k rows per block pair. B is data-dependent
+    (`_auto_blocks`: ~4096 rows per block), so the same shape holds at
+    100x the vectors, or swap in the IVF bucket path (k_ann_ivf) for
+    candidate pruning.
     """
     k = 10
 
@@ -213,7 +210,7 @@ def k_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     local = _block_pair_scores(
-        spark, emb, n_blocks=_auto_blocks(emb, cache_key=sf_dir), tile_fn=tile_topk
+        emb, n_blocks=_auto_blocks(emb, cache_key=sf_dir), tile_fn=tile_topk
     )
     return (
         local.withColumn("sim", F.round("sim", 6))
@@ -300,7 +297,7 @@ def k_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     local = _block_pair_scores(
-        spark, emb, n_blocks=_auto_blocks(emb, cache_key=sf_dir), tile_fn=tile_near_dup
+        emb, n_blocks=_auto_blocks(emb, cache_key=sf_dir), tile_fn=tile_near_dup
     )
     return local.withColumn("sim", F.round("sim", 6))
 
@@ -770,7 +767,7 @@ def k_ann_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("qbucket"),
         F.col("nrm").alias("qnrm"),
     )
-    masks = spark.createDataFrame([(m,) for m in _ANN_MASKS], "mask int")
+    masks = local_rows(spark, [(m,) for m in _ANN_MASKS], "mask int")
     probes = q.crossJoin(masks).select(
         "q_id", "qv", "qnrm",
         F.col("qbucket").bitwiseXOR(F.col("mask")).alias("bucket"),

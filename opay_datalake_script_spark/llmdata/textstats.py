@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from .dedup import WINNOW_FPS_SQL_CTES as _WINNOW_CTES
 from ..registry import register
-from ..sources.io import load
+from ..sources.io import load, local_rows
 
 
 @register(
@@ -1147,9 +1147,7 @@ def k_bpe_train(spark: SparkSession, sf_dir: str, n_merges: int = 3) -> DataFram
     SQL, so the merge table is value-hash-checked end to end.
     """
     rows, _ = _bpe_merge_rounds(spark, sf_dir, n_merges)
-    return spark.createDataFrame(
-        rows, "rnd int, pair string, merged string, w_count long"
-    )
+    return local_rows(spark, rows, "rnd int, pair string, merged string, w_count long")
 
 
 def _bpe_merge_rounds(spark: SparkSession, sf_dir: str, n_merges: int):

@@ -33,7 +33,7 @@ from ..functions.exact import (
     sum_e4_2dp,
 )
 from ..registry import register
-from ..sources.io import load
+from ..sources.io import load, local_rows
 
 
 @register(
@@ -839,7 +839,8 @@ def r_observed_load_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o.write.mode("overwrite").parquet(out)  # the action that feeds obs
     m = obs.get
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(m["n_rows"], int(m["revenue_e4"]), m["n_open"], m["max_price"])],
         "n_rows long, revenue_e4 long, n_open long, max_price double",
     )

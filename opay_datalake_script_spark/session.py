@@ -26,6 +26,11 @@ expressed as their Spark equivalents (SURVEY.md §4 table). Config choices:
   driver JVM is the whole engine, and a heap larger than the memory the
   host or its cgroup grants gets the JVM OOM-killed instead of spilling.
   ``extra_conf={"spark.driver.memory": ...}`` overrides it.
+* Python workers run from the engine's daemon (``pyworker``), which
+  keeps each task from re-parsing the unchanged Spark zip archives on
+  the worker's path, and the package's parent directory is on the
+  workers' ``PYTHONPATH``, so the daemon and every UDF that pickles a
+  package function import from any working directory.
 """
 
 from __future__ import annotations
@@ -40,6 +45,9 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # the JVM's off-heap use (metaspace, Arrow and shuffle buffers), the
 # Python workers of pandas UDFs and the page cache of spill files.
 HEAP_SHARE = 0.4
+
+# The directory that holds the package, for the Python workers' path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _CGROUP_LIMITS = (
     "/sys/fs/cgroup/memory.max",  # cgroup v2 ("max" when unlimited)
@@ -120,6 +128,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", driver_heap())
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "opay_datalake_script_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

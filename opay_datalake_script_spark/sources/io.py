@@ -120,6 +120,25 @@ def load_stream(spark: SparkSession, sf_dir: str, table: str = "events") -> Data
     return _convert_nanos(df, nanos)
 
 
+def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small constant relation (``rows`` of tuples, ``schema`` a DDL
+    string such as ``"source string, n_keep int"``) built on the JVM.
+
+    ``spark.createDataFrame(<python list>)`` ships its rows through a
+    Python RDD, so every job over it starts a Python worker task; this is
+    one ``inline`` of a literal array of structs over ``spark.range``,
+    which runs in the JVM alone and carries a size estimate Catalyst can
+    use. An empty ``rows`` gives an empty relation of the same schema."""
+    fields = T.DataType.fromDDL(schema).fields
+    structs = [
+        F.struct(
+            *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(row, fields, strict=True)]
+        )
+        for row in rows or [(None,) * len(fields)]
+    ]
+    return spark.range(1 if rows else 0).select(F.inline(F.array(*structs)))
+
+
 def scratch_path(*parts: str) -> str:
     path = os.path.join(SCRATCH_DIR, *parts)
     os.makedirs(os.path.dirname(path), exist_ok=True)

@@ -260,18 +260,20 @@ def test_band_candidate_volume_tracks_true_pairs(spark):
 
 
 def test_similarity_is_distributed_block_pairs(spark):
-    """The exact-cosine ops must run as cogrouped block-pair tiles on the
+    """The exact-cosine ops must run as grouped block-pair tiles on the
     executors — round 1 collected the whole embeddings table to the driver
     (toPandas + broadcast), which OOMs the driver at scale. The physical
-    plan must show the Arrow cogroup operator and the final top-k must be
-    a TakeOrderedAndProject (k rows per partition, no global sort)."""
-    from opay_datalake_script_spark.plans.inspect import formatted_plan
+    plan must show the Arrow grouped-map operator behind one shuffle, and
+    the final top-k must be a TakeOrderedAndProject (k rows per
+    partition, no global sort)."""
+    from opay_datalake_script_spark.plans.inspect import count_shuffles, formatted_plan
 
     topk = QUERIES["k_similarity_topk"](spark, SF_DIR)
-    assert "FlatMapCoGroupsInPandas" in formatted_plan(topk)
+    assert "FlatMapGroupsInPandas" in formatted_plan(topk)
     assert uses_take_ordered(topk)
     near = QUERIES["k_embed_near_dup"](spark, SF_DIR)
-    assert "FlatMapCoGroupsInPandas" in formatted_plan(near)
+    assert "FlatMapGroupsInPandas" in formatted_plan(near)
+    assert count_shuffles(near) == 1
 
 
 def test_pipeline_ops_plan_shapes(spark):
@@ -1216,8 +1218,7 @@ def test_unhinted_sides_broadcast_under_the_session_threshold(spark):
 #               sources (stratum maps carry the loud 10k cap,
 #               sampling.py)
 #   partition — O(#shuffle-partitions) rows: prefix-count offset maps
-#   cap       — bounded by an explicit code constant: block-pair maps
-#               (<= 256 blocks -> <= 32.9k pair rows), Misra-Gries
+#   cap       — bounded by an explicit code constant: Misra-Gries
 #               candidates (est >= total/64 threshold), DSIR hash
 #               buckets, count-min cells (w*d), ANN probe list (k*p),
 #               bloom/theta/KMV sketch aggregates
@@ -1239,10 +1240,8 @@ _HARD_BROADCAST_SITES = {
     ("llmdata/sampling.py", "k_temperature_mixture", "quota"): "domain",
     ("llmdata/sampling.py", "k_temperature_mixture", "tot"): "scalar",
     ("llmdata/sampling.py", "k_temperature_mixture", "tw"): "scalar",
-    ("llmdata/similarity.py", "_block_pair_scores", "a_map"): "cap",
     ("llmdata/similarity.py", "_kmeans_assign", "packed"): "cap",
     ("llmdata/similarity.py", "semdedup", "cents"): "cap",
-    ("llmdata/similarity.py", "_block_pair_scores", "b_map"): "cap",
     ("llmdata/similarity.py", "k_ann_grid", "probes"): "cap",
     ("llmdata/similarity.py", "k_ann_ivf", "q"): "query",
     ("llmdata/similarity.py", "k_hard_negatives", "q"): "query",

@@ -2754,6 +2754,54 @@ def test_embed_near_dup_matches_brute_force_on_planted_pairs(spark, tmp_path):
     assert all(abs(got[k] - want[k]) <= 1e-5 for k in want)
 
 
+def test_block_pairing_scores_every_pair_exactly_once(spark):
+    """`_block_pair_scores` with a tile function that keeps every pair
+    scores each unordered pair vec_a < vec_b in exactly one tile, for
+    block counts 1-5 (with 3 vectors, some blocks are empty, so some
+    block pairs have one empty side), and its cosines equal numpy's
+    brute force."""
+    import collections
+
+    import numpy as np
+    import pandas as pd
+
+    from opay_datalake_script_spark.llmdata.similarity import _block_pair_scores
+
+    def tile_all(diagonal, ids_a, ids_b, sims):
+        va = np.repeat(ids_a, len(ids_b))
+        vb = np.tile(ids_b, len(ids_a))
+        sv = sims.ravel()
+        if diagonal:
+            keep = va < vb
+            va, vb, sv = va[keep], vb[keep], sv[keep]
+        return pd.DataFrame(
+            {"vec_a": np.minimum(va, vb), "vec_b": np.maximum(va, vb), "sim": sv}
+        )
+
+    rng = np.random.default_rng(5)
+    for n in (3, 37):
+        vecs = rng.standard_normal((n, 8))
+        ids = rng.permutation(1000)[:n].astype(np.int64)
+        emb = spark.createDataFrame(
+            [(int(i), v.tolist()) for i, v in zip(ids, vecs)],
+            "vec_id long, embedding array<double>",
+        )
+        unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+        sims = unit @ unit.T
+        want = {
+            (min(ids[i], ids[j]), max(ids[i], ids[j])): sims[i, j]
+            for i in range(n)
+            for j in range(i + 1, n)
+        }
+        for n_blocks in range(1, 6):
+            rows = _block_pair_scores(emb, n_blocks, tile_all).collect()
+            seen = collections.Counter((r.vec_a, r.vec_b) for r in rows)
+            assert set(seen) == set(want), (n, n_blocks)
+            assert max(seen.values()) == 1, (n, n_blocks)
+            for r in rows:
+                assert abs(r.sim - want[(r.vec_a, r.vec_b)]) <= 1e-9, (n, n_blocks)
+
+
 def test_semdedup_keeper_invariants(spark):
     """Pins the SemDeDup keeper semantics independent of the oracle:
     (1) exactly one output row per input vector, (2) within every
