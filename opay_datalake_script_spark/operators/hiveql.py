@@ -196,30 +196,34 @@ def s_hiveql_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
     p1 = scratch_path("multi_insert", tag, "by_type", "_")[: -len("/_")]
     p2 = scratch_path("multi_insert", tag, "by_user", "_")[: -len("/_")]
+    by_type = f"""
+              SELECT event_type, count(*) AS cnt,
+                     {spark_sql_sum_e4_2dp("value")} AS val
+              GROUP BY event_type"""
+    by_user = f"""
+              SELECT user_id, count(*) AS cnt,
+                     {spark_sql_sum_e4_2dp("value")} AS val
+              GROUP BY user_id"""
     spark.sql("CACHE TABLE events")
     try:
         spark.sql(
             f"""
             FROM events
-            INSERT OVERWRITE DIRECTORY '{p1}' USING parquet
-              SELECT event_type, count(*) AS cnt,
-                     {spark_sql_sum_e4_2dp("value")} AS val
-              GROUP BY event_type
-            INSERT OVERWRITE DIRECTORY '{p2}' USING parquet
-              SELECT user_id, count(*) AS cnt,
-                     {spark_sql_sum_e4_2dp("value")} AS val
-              GROUP BY user_id
+            INSERT OVERWRITE DIRECTORY '{p1}' USING parquet {by_type}
+            INSERT OVERWRITE DIRECTORY '{p2}' USING parquet {by_user}
             """
         )
     finally:
         spark.sql("UNCACHE TABLE events")
-    a = spark.read.parquet(p1).select(
+    # Each landed table reads back with the schema of its branch: the
+    # same SELECT over events, analysed but never run.
+    a = spark.read.schema(spark.sql(f"FROM events {by_type}").schema).parquet(p1).select(
         F.lit("by_type").alias("branch"),
         F.col("event_type").cast("string").alias("key"),
         "cnt",
         "val",
     )
-    b = spark.read.parquet(p2).select(
+    b = spark.read.schema(spark.sql(f"FROM events {by_user}").schema).parquet(p2).select(
         F.lit("by_user").alias("branch"),
         F.col("user_id").cast("string").alias("key"),
         "cnt",

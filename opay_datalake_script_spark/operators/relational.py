@@ -612,4 +612,4 @@ def f_global_sort_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out)
+    return spark.read.schema(ranked.schema).parquet(out)

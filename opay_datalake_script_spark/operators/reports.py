@@ -240,19 +240,18 @@ def r_incremental_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not inherited from the session: under a caller-built session with the
     # default 'static' mode the one-day rerun would truncate every other
     # partition and the landed table would hold a single day.
-    daily(ev).write.partitionBy("dt").option(
+    full = daily(ev)
+    full.write.partitionBy("dt").option(
         "partitionOverwriteMode", "dynamic"
     ).mode("overwrite").parquet(out)
     rerun_day = "2024-01-15"
     daily(ev.where(F.col("dt") == rerun_day)).write.partitionBy("dt").option(
         "partitionOverwriteMode", "dynamic"
     ).mode("overwrite").parquet(out)
-    landed = spark.read.parquet(out)
-    # partition-directory values infer as DATE on read; the differential
-    # contract emits report dates as strings (module docstring).
-    return landed.select(
-        F.col("dt").cast("string").alias("dt"), "event_type", "n", "v"
-    )
+    # Read back with the written schema, so `dt` stays the string the
+    # differential contract emits report dates as (module docstring).
+    landed = spark.read.schema(full.schema).parquet(out)
+    return landed.select("dt", "event_type", "n", "v")
 
 
 @register(

@@ -97,7 +97,13 @@ class QualityReport:
 
 
 def run_gates(df: DataFrame, gates: Sequence[Gate]) -> QualityReport:
-    """Evaluate every gate in a single aggregation job over df."""
+    """Evaluate every gate in one aggregation over df: one scan, every
+    metric side by side. Without a distinct count the plan is a partial
+    aggregate, one shuffle to a single partition and the final aggregate,
+    which AQE runs as 2 Spark jobs (the map stage and the result). A
+    ``unique_key`` gate's count(DISTINCT key) adds a shuffle on the key
+    ahead of that one, so the pass is 3 Spark jobs: two map stages and
+    the result."""
     aggs = [metric.alias(f"g{i}") for i, (_, metric, _) in enumerate(gates)]
     row = df.agg(*aggs).collect()[0]
     return QualityReport(

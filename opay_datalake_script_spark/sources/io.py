@@ -17,11 +17,13 @@ from __future__ import annotations
 import glob
 import os
 import uuid
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..quality import Gate, run_gates
 from ..registry import register
 from ..schemas import SCHEMAS
 
@@ -313,8 +315,8 @@ def a_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     one_month.write.partitionBy("dt").option(
         "partitionOverwriteMode", "dynamic"
     ).mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
-    return back.select("o_orderkey", "o_custkey", F.col("dt").cast("string").alias("dt"))
+    back = spark.read.schema(orders.schema).parquet(out)
+    return back.select("o_orderkey", "o_custkey", "dt")
 
 
 @register(
@@ -415,12 +417,9 @@ def a_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dt", F.date_format("o_orderdate", "yyyy-MM")
     )
     orders.write.partitionBy("dt").mode("overwrite").parquet(out)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(orders.schema).parquet(out)
     return back.where(F.col("dt").isin("1996-06", "1997-06")).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.col("dt").cast("string").alias("dt"),
+        "o_orderkey", "o_custkey", "o_totalprice", "dt"
     )
 
 
@@ -648,11 +647,12 @@ def a_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1p = scratch_dir("snapshots", tag, "v1")
     v2p = scratch_dir("snapshots", tag, "v2")
     base.write.mode("overwrite").parquet(v1p)
-    a_cdc_upsert(spark, sf_dir).write.mode("overwrite").parquet(v2p)
-    s1 = spark.read.parquet(v1p).select(
+    v2 = a_cdc_upsert(spark, sf_dir)
+    v2.write.mode("overwrite").parquet(v2p)
+    s1 = spark.read.schema(base.schema).parquet(v1p).select(
         "o_orderkey", F.col("o_orderstatus").alias("status_before")
     )
-    s2 = spark.read.parquet(v2p).select(
+    s2 = spark.read.schema(v2.schema).parquet(v2p).select(
         "o_orderkey", F.col("o_orderstatus").alias("status_after")
     )
     diff = s1.join(s2, "o_orderkey", "full_outer").where(
@@ -728,13 +728,13 @@ def a_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     compacted = scratch_path("compact", f"compacted_{fixture_tag(sf_dir)}")
     # Simulate micro-batch litter: 64 splinter files for one table.
     src.repartition(64).write.mode("overwrite").parquet(fragmented)
-    spark.read.parquet(fragmented).repartition(4).write.mode(
+    spark.read.schema(src.schema).parquet(fragmented).repartition(4).write.mode(
         "overwrite"
     ).parquet(compacted)
     n_frag = len(glob.glob(os.path.join(fragmented, "*.parquet")))
     n_comp = len(glob.glob(os.path.join(compacted, "*.parquet")))
     assert n_comp < n_frag, (n_comp, n_frag)
-    return spark.read.parquet(compacted).select(
+    return spark.read.schema(src.schema).parquet(compacted).select(
         "event_id", "user_id", "event_type", "value"
     )
 
@@ -817,7 +817,7 @@ def a_cluster_by_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(out)
     )
-    clustered = spark.read.parquet(out)
+    clustered = spark.read.schema(li.schema).parquet(out)
     return clustered.where(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     ).select(
@@ -875,7 +875,7 @@ def a_snapshot_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for i in (2, 3):
         part = (
-            spark.read.parquet(v[i])
+            spark.read.schema(base.schema).parquet(v[i])
             .agg(F.count("*").alias("n_rows"))
             .select(F.lit(f"v{i}").alias("version"), "n_rows")
         )
@@ -918,7 +918,7 @@ def a_scan_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dt", F.date_format("o_orderdate", "yyyy-MM")
     )
     orders.write.partitionBy("dt").mode("overwrite").parquet(out)
-    fact = spark.read.parquet(out)
+    fact = spark.read.schema(orders.schema).parquet(out)
 
     months = spark.sql(
         "SELECT explode(sequence(to_date('1992-01-01'), to_date('1998-12-01'),"
@@ -932,7 +932,7 @@ def a_scan_dynamic_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = months.where(F.col("qtr") == "1996-Q2")
     return (
         fact.join(F.broadcast(dim), "dt")
-        .groupBy(F.col("dt").cast("string").alias("dt"))
+        .groupBy("dt")
         .agg(
             F.count("*").alias("n_orders"),
             # decimal accumulator (the e4() rule): month groups are a fixed
@@ -1123,6 +1123,30 @@ def a_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def write_audit_publish(df: DataFrame, root: str, gates: Sequence[Gate]) -> DataFrame:
+    """Write-Audit-Publish one table under ``root``: (1) WRITE ``df`` to
+    ``root/_stage``, a path no reader knows about; (2) AUDIT the staged
+    files with the quality ``gates`` (quality.run_gates); (3) PUBLISH by
+    renaming the stage to ``root/published`` only if every gate passed,
+    keeping the previous version as ``root/_prev``. A failed gate raises
+    an AssertionError that names it and leaves ``root/published``
+    untouched. Returns the published table, read back with the schema
+    it was written with."""
+    import shutil
+
+    spark = df.sparkSession
+    stage = f"{root}/_stage"
+    published = f"{root}/published"
+    df.write.mode("overwrite").parquet(stage)  # 1. WRITE (invisible)
+    staged = spark.read.schema(df.schema).parquet(stage)
+    run_gates(staged, gates).raise_if_failed()  # 2. AUDIT the landed files
+    if os.path.exists(published):  # 3. PUBLISH (atomic swap)
+        shutil.rmtree(f"{root}/_prev", ignore_errors=True)
+        os.replace(published, f"{root}/_prev")
+    os.replace(stage, published)
+    return spark.read.schema(df.schema).parquet(published)
+
+
 @register(
     "a_write_audit_publish",
     oracle="""
@@ -1135,14 +1159,13 @@ def a_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-Audit-Publish (WAP) — the production landing discipline the
     ACID-table world calls branch-and-merge, expressed on plain
-    directories: (1) WRITE the derived table to a staging path no
-    reader knows about; (2) AUDIT the staged files with the declarative
-    quality gates (quality.run_gates — row floor, key not-null +
-    unique, accepted status domain — ONE aggregation pass over the
-    staged data, the fail-the-DAG analog); (3) PUBLISH atomically by
-    directory rename only if every gate passed, so consumers only ever
-    see audited data. A failed audit leaves the previous published
-    version untouched and raises — bad data cannot be half-visible.
+    directories by :func:`write_audit_publish`: the derived table lands
+    in a staging path, the declarative quality gates (row floor, key
+    not-null + unique, accepted status domain) audit the staged files
+    in one scan, and the stage is renamed into place only if every gate
+    passed, so consumers only ever see audited data. A failed audit
+    leaves the previous published version untouched and raises — bad
+    data cannot be half-visible.
 
     The oracle compares the PUBLISHED read-back against the source
     projection row-for-row: a gate that silently mutated data, a
@@ -1152,15 +1175,7 @@ def a_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     table-format commit (a_snapshot_time_travel's version flip); the
     audit cost stays one scan of the new partition only.
     """
-    import os as _os
-    import shutil as _shutil
-
-    from ..quality import accepted_values, not_null, row_count, run_gates, unique_key
-
-    tag = fixture_tag(sf_dir)
-    root = scratch_dir("wap", tag)
-    stage = f"{root}/_stage"
-    published = f"{root}/published"
+    from ..quality import accepted_values, not_null, row_count, unique_key
 
     derived = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1168,11 +1183,9 @@ def a_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 10000, 0).cast("long").alias("price_e4"),
         F.date_format("o_orderdate", "yyyy-MM").alias("dt"),
     )
-    derived.write.mode("overwrite").parquet(stage)  # 1. WRITE (invisible)
-
-    staged = spark.read.parquet(stage)
-    report = run_gates(  # 2. AUDIT the actual landed files
-        staged,
+    return write_audit_publish(
+        derived,
+        scratch_dir("wap", fixture_tag(sf_dir)),
         [
             row_count(min_rows=1),
             not_null("o_orderkey"),
@@ -1180,14 +1193,6 @@ def a_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             accepted_values("o_orderstatus", ["F", "O", "P"]),
         ],
     )
-    report.raise_if_failed()
-
-    if _os.path.exists(published):  # 3. PUBLISH (atomic swap)
-        _shutil.rmtree(f"{root}/_prev", ignore_errors=True)
-        _os.replace(published, f"{root}/_prev")
-    _os.replace(stage, published)
-
-    return spark.read.parquet(published)
 
 
 @register(
@@ -1281,14 +1286,13 @@ def a_zorder_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = bxy.withColumn("z", F.expr(morton_bits)).withColumn(
         "od_us", F.unix_micros("o_orderdate")
     )
-    (
+    clustered = (
         z.repartitionByRange(16, "z")
         .sortWithinPartitions("z")
         .drop("bx", "by", "z", "o_orderdate")
-        .write.mode("overwrite")
-        .parquet(out)
     )
-    back = spark.read.parquet(out).withColumn(
+    clustered.write.mode("overwrite").parquet(out)
+    back = spark.read.schema(clustered.schema).parquet(out).withColumn(
         "o_orderdate", F.timestamp_micros(F.col("od_us"))
     )
     bounds = o.agg(

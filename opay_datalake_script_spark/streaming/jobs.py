@@ -21,9 +21,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import register
 from ..functions.exact import sql_sum_e4_2dp, sum_e4_2dp
+from ..schemas import SCHEMAS
 from ..sources.io import (
     fixture_tag,
     load,
@@ -208,9 +210,10 @@ def i_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     run = scratch_dir("foreach_batch", fixture_tag(sf_dir), f"run_{uuid.uuid4().hex}")
     out = os.path.join(run, "events_by_day")
     ckpt = os.path.join(run, "ckpt")
+    landed: dict[str, StructType] = {}
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        write_day_epoch_partition(batch_df, epoch_id, out)
+        landed["schema"] = write_day_epoch_partition(batch_df, epoch_id, out)
 
     q = (
         load_stream(spark, sf_dir, "events")
@@ -220,27 +223,27 @@ def i_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out).select(
-        "event_id", "user_id", "event_type", "value", F.col("dt").cast("string").alias("dt")
+    return spark.read.schema(landed["schema"]).parquet(out).select(
+        "event_id", "user_id", "event_type", "value", "dt"
     )
 
 
-def write_day_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> None:
+def write_day_epoch_partition(batch_df: DataFrame, epoch_id: int, path: str) -> StructType:
     """Land a micro-batch under (dt, epoch) partitions with dynamic
     overwrite: dt gives the daily-reload partition layout readers prune
     on; epoch scopes each batch to its own slice so concurrent-day
     batches never clobber each other and an at-least-once replay
     replaces only itself (see write_epoch_partition for the epoch-key
-    rationale). Tested directly by
+    rationale). Returns the schema of the landed rows, partition
+    columns included, for reading ``path`` back. Tested directly by
     test_day_epoch_write_multi_batch_and_replay."""
-    (
-        batch_df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-        .withColumn("epoch", F.lit(int(epoch_id)))
-        .write.partitionBy("dt", "epoch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(path)
+    landed = batch_df.withColumn("dt", F.date_format("ts", "yyyy-MM-dd")).withColumn(
+        "epoch", F.lit(int(epoch_id))
     )
+    landed.write.partitionBy("dt", "epoch").option(
+        "partitionOverwriteMode", "dynamic"
+    ).mode("overwrite").parquet(path)
+    return landed.schema
 
 
 @register(
@@ -278,7 +281,7 @@ def i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotate_scratch_runs(scratch_dir("stream_cdc"))
     run = scratch_dir("stream_cdc", f"run_{uuid.uuid4().hex}")
     ckpt = os.path.join(run, "ckpt")
-    state: dict[str, str] = {}
+    state: dict[str, object] = {}  # the latest snapshot's path and schema
 
     # Stage the change stream as several files and feed them one per
     # micro-batch — a single staged file would collapse availableNow into
@@ -315,7 +318,7 @@ def i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         cur = batch_df.select("user_id", "event_id", "ts", "value")
         if "path" in state:
-            cur = spark.read.parquet(state["path"]).unionByName(cur)
+            cur = spark.read.schema(state["schema"]).parquet(state["path"]).unionByName(cur)
         # keep-latest as a max_by AGGREGATE (the e_dedupe_latest
         # celebrity-key pattern — partial combine, no per-user sort);
         # the (ts, -event_id) struct reproduces the row_number
@@ -332,7 +335,7 @@ def i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         new_path = os.path.join(run, f"state_{epoch_id}")
         merged.write.mode("overwrite").parquet(new_path)
-        state["path"] = new_path
+        state["path"], state["schema"] = new_path, merged.schema
 
     q = (
         stream.writeStream.foreachBatch(merge_batch)
@@ -341,7 +344,7 @@ def i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(state["path"]).select(
+    return spark.read.schema(state["schema"]).parquet(state["path"]).select(
         "user_id", "event_id", "ts", "value"
     )
 
@@ -823,21 +826,17 @@ def i_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("ckpt_restart", run_id, "out")
     ckpt = scratch_path("ckpt_restart", run_id, "ckpt")
     fixture = f"{sf_dir}/events.parquet"
-    con = _duck.connect()
     # DuckDB writes timestamp[us] parquet — the current fixture encoding —
-    # so the staged halves read with the same schema as the fixture.
-    con.execute(
-        f"COPY (SELECT * FROM '{fixture}' WHERE event_id % 2 = 0)"
-        f" TO '{src}/half1.parquet' (FORMAT PARQUET)"
+    # so the staged halves read with the fixture's declared schema.
+    stream = (
+        spark.readStream.schema(SCHEMAS["events"])
+        .parquet(src)
+        .select("event_id", "user_id", "event_type")
     )
-    schema = spark.read.parquet(f"{src}/half1.parquet").schema
 
     def run_once() -> None:
         q = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .select("event_id", "user_id", "event_type")
-            .writeStream.format("parquet")
+            stream.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -845,16 +844,23 @@ def i_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    run_once()  # ingests half 1
-    con.execute(
-        f"COPY (SELECT * FROM '{fixture}' WHERE event_id % 2 = 1)"
-        f" TO '{src}/half2.parquet' (FORMAT PARQUET)"
-    )
+    with _duck.connect() as con:
+        con.execute(
+            f"COPY (SELECT * FROM '{fixture}' WHERE event_id % 2 = 0)"
+            f" TO '{src}/half1.parquet' (FORMAT PARQUET)"
+        )
+        run_once()  # ingests half 1
+        con.execute(
+            f"COPY (SELECT * FROM '{fixture}' WHERE event_id % 2 = 1)"
+            f" TO '{src}/half2.parquet' (FORMAT PARQUET)"
+        )
     run_once()  # restart from the same checkpoint: must ingest ONLY half 2
-    return spark.read.parquet(out)
+    # With a schema the read still lists the files through the sink's
+    # _spark_metadata log, so it sees exactly the committed output.
+    return spark.read.schema(stream.schema).parquet(out)
 
 
-def write_epoch_partition(df: DataFrame, epoch_id: int, path: str) -> None:
+def write_epoch_partition(df: DataFrame, epoch_id: int, path: str) -> StructType:
     """Idempotent foreachBatch sink write: land ``df`` under its epoch
     partition with dynamic partition overwrite, so an at-least-once
     replay of the same micro-batch REPLACES its own epoch instead of
@@ -868,14 +874,15 @@ def write_epoch_partition(df: DataFrame, epoch_id: int, path: str) -> None:
     between attempts) leaves the prior attempt's epoch rows in place.
     Fine for this fixture-driven pipeline, where a batch's content is
     deterministic across attempts; delete the epoch directory before
-    writing if recomputation-proof exactly-once is ever claimed."""
-    (
-        df.withColumn("epoch", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch")
-        .parquet(path)
-    )
+    writing if recomputation-proof exactly-once is ever claimed.
+
+    Returns the schema of the landed rows, ``epoch`` included, for
+    reading ``path`` back."""
+    landed = df.withColumn("epoch", F.lit(int(epoch_id)))
+    landed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "epoch"
+    ).parquet(path)
+    return landed.schema
 
 
 @register(
@@ -928,14 +935,15 @@ def i_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_type = scratch_dir("fanout", run_id, "by_type")
     out_day = scratch_dir("fanout", run_id, "by_day")
     ckpt = scratch_path("fanout", run_id, "ckpt")
+    landed: dict[str, StructType] = {}
 
     def fanout(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.persist()
         try:
-            write_epoch_partition(
+            landed[out_type] = write_epoch_partition(
                 batch_df.select("event_type", "value"), epoch_id, out_type
             )
-            write_epoch_partition(
+            landed[out_day] = write_epoch_partition(
                 batch_df.select(
                     F.date_format("ts", "yyyy-MM-dd").alias("day"), F.col("value")
                 ),
@@ -959,13 +967,13 @@ def i_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     e4 = F.round(F.col("value") * 10000, 0).cast("decimal(38,0)")
     sum_e4 = F.sum(e4).cast("long").alias("value_e4")
     by_type = (
-        spark.read.parquet(out_type)
+        spark.read.schema(landed[out_type]).parquet(out_type)
         .groupBy(F.col("event_type").alias("k"))
         .agg(F.count(F.lit(1)).alias("n"), sum_e4)
         .select(F.lit("by_type").alias("sink"), "k", "n", "value_e4")
     )
     by_day = (
-        spark.read.parquet(out_day)
+        spark.read.schema(landed[out_day]).parquet(out_day)
         .groupBy(F.col("day").alias("k"))
         .agg(F.count(F.lit(1)).alias("n"), sum_e4)
         .select(F.lit("by_day").alias("sink"), "k", "n", "value_e4")

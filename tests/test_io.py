@@ -213,3 +213,57 @@ def test_pyds_sink_leaves_no_tmp_files(spark):
     )
     leftovers = [f for f in os.listdir(out_dir) if f.endswith(".tmp")]
     assert leftovers == []
+
+
+def _jobs_started_building(spark, name: str) -> tuple[list[str], list[str]]:
+    """Build ``name`` at sf0.001 under a job group of its own and return
+    the Spark jobs submitted meanwhile: (names of the jobs in that group,
+    descriptions of the jobs in any other group). A streaming query runs
+    its micro-batches under its own run id, so they land in the second
+    list."""
+    from .conftest import SMOKE_SF_DIR
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def all_jobs():
+        jsc.listenerBus().waitUntilEmpty()
+        seq = jsc.statusStore().jobsList(None)
+        return list(sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(seq))
+
+    before = {j.jobId() for j in all_jobs()}
+    group = f"build/{name}"
+    sc.setJobGroup(group, name)
+    try:
+        QUERIES[name](spark, SMOKE_SF_DIR)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    own, other = [], []
+    for j in sorted(all_jobs(), key=lambda j: j.jobId()):
+        if j.jobId() in before:
+            continue
+        g, d = j.jobGroup(), j.description()
+        if g.isDefined() and g.get() == group:
+            own.append(j.name())
+        else:
+            other.append(d.get() if d.isDefined() else "")
+    return own, other
+
+
+def test_round_trip_builds_start_no_schema_inference_job(spark):
+    """A read-back with the schema the job wrote starts no Spark job; a
+    schema-less ``spark.read.parquet`` starts one to merge footers, and
+    that job carries the same ``parquet at`` call site as a write. So:
+    the WAP build starts exactly its staged write and its gate pass (one
+    aggregation, 3 jobs under AQE: two map stages and the result), and
+    the checkpoint-restart build starts exactly its two micro-batches
+    and nothing in its own group."""
+    own, other = _jobs_started_building(spark, "a_write_audit_publish")
+    assert [n.split(" at ")[0] for n in own] == ["parquet"] + ["collect"] * 3, own
+    assert all("quality.py" in n for n in own[1:]), own
+    assert other == [], other
+
+    own, other = _jobs_started_building(spark, "i_stream_checkpoint_restart")
+    assert own == [], own
+    assert len(other) == 2 and all("batch = " in d for d in other), other

@@ -1388,6 +1388,61 @@ def test_every_hard_broadcast_site_is_classified_bounded():
     )
 
 
+# The one schema-less parquet read in the package: schema inference
+# across generations is what a_scan_schema_evolution tests.
+_INFERRED_PARQUET_READS = {("sources/io.py", "a_scan_schema_evolution")}
+
+
+def test_every_parquet_read_back_names_its_schema():
+    """A ``spark.read...parquet(path)`` chain with no ``.schema(...)``
+    starts a Spark job to infer the schema from parquet footers, even for
+    one file. Every read in the package passes the schema it knows (the
+    frame it wrote, or the table's declared schema), so this fails on any
+    such chain outside ``_INFERRED_PARQUET_READS``, and on a stale entry
+    there."""
+    import ast
+    import os
+
+    import opay_datalake_script_spark as pkg
+
+    pkg_dir = os.path.dirname(pkg.__file__)
+    found = set()
+    for root, _dirs, files in os.walk(pkg_dir):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+
+            def walk(node, stack, rel=rel):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    stack = stack + [node.name]
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                ):
+                    chain, link = [], node.func.value
+                    while isinstance(link, (ast.Call, ast.Attribute)):
+                        if isinstance(link, ast.Attribute):
+                            chain.append(link.attr)
+                            link = link.value
+                        else:
+                            link = link.func
+                    if "read" in chain and "schema" not in chain:
+                        found.add((rel, ".".join(stack) or "<module>", node.lineno))
+                for ch in ast.iter_child_nodes(node):
+                    walk(ch, stack)
+
+            walk(tree, [])
+    bad = sorted(site for site in found if site[:2] not in _INFERRED_PARQUET_READS)
+    assert not bad, f"spark.read...parquet( with no .schema( (pass the schema written): {bad}"
+    stale = _INFERRED_PARQUET_READS - {site[:2] for site in found}
+    assert not stale, f"stale allow-list entries: {sorted(stale)}"
+
+
 def test_kmv_and_percentile_disc_avoid_whole_group_windows(spark):
     """r11: two more docstring-claimed scale shapes pinned. (1)
     d_kmv_distinct_sketch's rank window must ride WindowGroupLimit —

@@ -108,30 +108,34 @@ def test_schema_evolution_null_fills_old_generation(spark):
 
 
 def test_wap_failed_audit_keeps_published_version(spark):
-    """a_write_audit_publish: a failing audit must raise AND leave the
+    """a_write_audit_publish's own path (write_audit_publish) with a gate
+    that fails: it must raise an error naming that gate AND leave the
     previously published directory untouched — bad data can never be
     half-visible (the whole point of WAP)."""
-    import pytest
-
-    from opay_datalake_script_spark.quality import row_count, run_gates
     from opay_datalake_script_spark.registry import QUERIES, load_all_queries
-    from opay_datalake_script_spark.sources.io import scratch_path
-
-    from .conftest import SF_DIR
+    from opay_datalake_script_spark.sources.io import (
+        fixture_tag,
+        scratch_dir,
+        write_audit_publish,
+    )
 
     load_all_queries()
-    # publish once (good data)
-    good = QUERIES["a_write_audit_publish"](spark, SF_DIR)
-    n_before = good.count()
-    tag = SF_DIR.rstrip("/").replace("/", "_").lstrip("_")
-    published = scratch_path("wap", tag, "_")[: -len("/_")] + "/published"
+    good = QUERIES["a_write_audit_publish"](spark, SF_DIR)  # publishes
+    root = scratch_dir("wap", fixture_tag(SF_DIR))
+    published = os.path.join(root, "published")
 
-    # simulate the audit step failing on a bad staged batch: the gate
-    # raises, and the published dir still serves the prior version
-    bad = spark.range(0)
-    with pytest.raises(AssertionError):
-        run_gates(bad, [row_count(min_rows=1)]).raise_if_failed()
-    assert spark.read.parquet(published).count() == n_before
+    def files():
+        return sorted(
+            (e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in os.scandir(published)
+        )
+
+    before, n_before = files(), good.count()
+    bad = good.unionByName(good.limit(1))  # one duplicated key
+    with pytest.raises(AssertionError, match=r"unique_key\[o_orderkey\]") as err:
+        write_audit_publish(bad, root, [Q.row_count(min_rows=1), Q.unique_key("o_orderkey")])
+    assert "row_count" not in str(err.value)  # only the failed gate is named
+    assert files() == before
+    assert spark.read.schema(good.schema).parquet(published).count() == n_before
 
 
 def test_interpolate_linear_semantics(spark):

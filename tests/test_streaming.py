@@ -350,3 +350,33 @@ def test_fanout_epoch_write_is_replay_idempotent(spark, tmp_path):
         for r in back.groupBy("epoch").agg(F.count("*").alias("n")).collect()
     }
     assert per_epoch == {0: 10, 1: 5}
+
+
+def test_file_sink_read_with_schema_goes_through_the_sink_log(spark, tmp_path):
+    """A file sink's directory read back WITH a schema still lists its
+    files through the sink's ``_spark_metadata`` log, so a parquet file
+    the log never committed stays invisible. i_stream_checkpoint_restart
+    reads its sink this way, and its exactly-once proof depends on it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+    pq.write_table(pa.table({"id": pa.array([1, 2, 3], pa.int64())}), f"{src}/a.parquet")
+    stream = spark.readStream.schema("id long").parquet(src)
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    planted = f"{out}/part-99999-planted.snappy.parquet"
+    pq.write_table(pa.table({"id": pa.array([99], pa.int64())}), planted)
+
+    back = spark.read.schema(stream.schema).parquet(out)
+    assert sorted(r["id"] for r in back.collect()) == [1, 2, 3]
+    # the planted file is readable: a read that bypasses the log sees it
+    bypass = spark.read.schema(stream.schema).parquet(f"{out}/*.parquet")
+    assert 99 in {r["id"] for r in bypass.collect()}
