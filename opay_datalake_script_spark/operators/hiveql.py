@@ -190,12 +190,12 @@ def s_hiveql_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    from ..sources.io import scratch_path
+    from ..sources.io import fixture_tag, scratch_dir
 
     _views(spark, sf_dir, "events")
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    p1 = scratch_path("multi_insert", tag, "by_type", "_")[: -len("/_")]
-    p2 = scratch_path("multi_insert", tag, "by_user", "_")[: -len("/_")]
+    tag = fixture_tag(sf_dir)
+    p1 = scratch_dir("multi_insert", tag, "by_type")
+    p2 = scratch_dir("multi_insert", tag, "by_user")
     by_type = f"""
               SELECT event_type, count(*) AS cnt,
                      {spark_sql_sum_e4_2dp("value")} AS val
@@ -391,7 +391,7 @@ def s_sql_ddl_external_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..sources.io import scratch_path
+    from ..sources.io import scratch_dir
 
     # The view name is uuid-fresh, so landing-dir write and CREATE VIEW
     # need no lock; the name is registered only AFTER the view exists
@@ -400,7 +400,7 @@ def s_sql_ddl_external_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it, leaving the later-created view permanently untracked and the
     # catalog unbounded).
     tag = uuid.uuid4().hex
-    csv_dir = scratch_path("ddl_csv", tag, "_")[: -len("/_")]
+    csv_dir = scratch_dir("ddl_csv", tag)
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )

@@ -430,24 +430,23 @@ def c_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the bucket key is exchange-free. Result is oracle-identical to the
     plain join.
     """
-    import os
+    import re
 
-    from ..sources.io import SCRATCH_DIR
+    from ..sources.io import fixture_tag, scratch_path
 
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(SCRATCH_DIR, f"bucketed_{tag}")
+    tag = fixture_tag(sf_dir)
+    ident = re.sub(r"\W", "_", tag)  # catalog names are identifiers
     for name, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        tbl = f"bkt_{name}_{tag.replace('.', '_')}"
         (
             load(spark, sf_dir, name)
             .write.mode("overwrite")
             .bucketBy(16, key)
             .sortBy(key)
-            .option("path", os.path.join(base, name))
-            .saveAsTable(tbl)
+            .option("path", scratch_path(f"bucketed_{tag}", name))
+            .saveAsTable(f"bkt_{name}_{ident}")
         )
-    li = spark.table(f"bkt_lineitem_{tag.replace('.', '_')}")
-    o = spark.table(f"bkt_orders_{tag.replace('.', '_')}")
+    li = spark.table(f"bkt_lineitem_{ident}")
+    o = spark.table(f"bkt_orders_{ident}")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderpriority")

@@ -223,7 +223,7 @@ def r_incremental_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     other. The rerun day is a fixed mid-range date (fixtures span
     2024-01), keeping the query deterministic with no driver-side reads.
     """
-    from ..sources.io import scratch_path
+    from ..sources.io import fixture_tag, scratch_path
 
     ev = load(spark, sf_dir, "events").withColumn(
         "dt", F.date_format("ts", "yyyy-MM-dd")
@@ -234,8 +234,7 @@ def r_incremental_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"), sum_e4_2dp(F.col("value")).alias("v")
         )
 
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    out = scratch_path("incr_agg", f"daily_{tag}")
+    out = scratch_path("incr_agg", f"daily_{fixture_tag(sf_dir)}")
     # partitionOverwriteMode set on the writer (per-write since Spark 3.0),
     # not inherited from the session: under a caller-built session with the
     # default 'static' mode the one-day rerun would truncate every other
@@ -818,9 +817,9 @@ def r_observed_load_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Observation
 
-    from ..sources.io import scratch_path
+    from ..sources.io import fixture_tag, scratch_path
 
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
+    tag = fixture_tag(sf_dir)
     out = scratch_path("observed_load", f"orders_{tag}")
     obs = Observation(f"load_metrics_{tag}")
     o = load(spark, sf_dir, "orders").observe(

@@ -31,6 +31,8 @@ expressed as their Spark equivalents (SURVEY.md §4 table). Config choices:
   the worker's path, and the package's parent directory is on the
   workers' ``PYTHONPATH``, so the daemon and every UDF that pickles a
   package function import from any working directory.
+* the SQL warehouse under the process's scratch root (``sources.io``), so
+  a session leaves no ``spark-warehouse/`` in the directory it starts in.
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .sources.io import SCRATCH_DIR
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -130,6 +134,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "opay_datalake_script_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.warehouse.dir", os.path.join(SCRATCH_DIR, "warehouse"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -8,14 +8,18 @@ pruning + predicate pushdown reach the scan for free via Catalyst),
 ``write.partitionBy`` with dynamic partition overwrite, and
 ``read/write.jdbc`` for the OLTP edges.
 
-Scratch output for round-trip queries goes under ``<repo>/.scratch``
-(gitignored) — fixtures themselves are read-only.
+Scratch output for round-trip queries (sinks, snapshots, checkpoints)
+goes under ``SCRATCH_DIR``, a root of this process's own in the temp dir,
+removed at exit — fixtures themselves are read-only.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
+import shutil
+import tempfile
 import uuid
 from typing import Sequence
 
@@ -27,8 +31,15 @@ from ..quality import Gate, run_gates
 from ..registry import register
 from ..schemas import SCHEMAS
 
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH_DIR = os.path.join(_REPO_ROOT, ".scratch")
+# One scratch root per process: concurrent processes never share a path,
+# and nothing an earlier or killed run left on disk is read back. No
+# component starts with '.' or '_', which Spark's file listing hides. The
+# directory is made on first use, never at import (Spark's Python workers
+# import this package), and removed when the process exits.
+SCRATCH_DIR = os.path.join(
+    tempfile.gettempdir(), f"opay-scratch-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+)
+atexit.register(shutil.rmtree, SCRATCH_DIR, ignore_errors=True)
 
 
 # Timestamp columns that MAY be stored as TIMESTAMP(NANOS) in parquet,
@@ -142,15 +153,14 @@ def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
 
 
 def scratch_path(*parts: str) -> str:
+    """A path under ``SCRATCH_DIR`` whose parent directory exists."""
     path = os.path.join(SCRATCH_DIR, *parts)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     return path
 
 
 def scratch_dir(*parts: str) -> str:
-    """Scratch DIRECTORY path: like :func:`scratch_path` but the joined path
-    itself is created (scratch_path only makedirs the dirname, which forced
-    call sites into the `scratch_path(..., "_")[:-2]` slice hack)."""
+    """A directory under ``SCRATCH_DIR``, created with its parents."""
     path = os.path.join(SCRATCH_DIR, *parts)
     os.makedirs(path, exist_ok=True)
     return path
@@ -164,59 +174,9 @@ def fixture_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").replace("/", "_").lstrip("_")
 
 
-def rotate_scratch_runs(base: str, prefix: str = "run_", keep: int = 4) -> None:
-    """Bound per-run scratch growth: delete all but the ``keep``
-    most-recently-modified ``prefix*`` entries under ``base``.
-
-    Lagged cleanup, not delete-all: a concurrently-running invocation's
-    fresh run dir is always among the newest entries, so (like the DDL
-    view generation lag) rotation can never pull a directory out from
-    under an in-flight query, while the scratch tree stays bounded at
-    O(keep) run dirs per op instead of growing with every invocation.
-    That safety claim is bounded by ``keep``: it holds for up to
-    ``keep`` concurrent invocations of the same op (each in-flight run
-    dir occupies one of the newest-``keep`` slots); more than ``keep``
-    truly simultaneous runs could rotate an in-flight sibling away —
-    raise ``keep`` for ops that legitimately run wider (ADVICE r8).
-
-    Entries deleted by a concurrent rotation between the glob and the
-    stat sort as oldest (mtime 0) and are re-deleted idempotently
-    instead of raising FileNotFoundError (ADVICE r8)."""
-    import glob as _glob
-    import shutil
-
-    def _mtime(p: str) -> float | None:
-        # Only a VANISHED entry (concurrent rotation won the race) may
-        # sort oldest-and-deletable; any other stat failure (EACCES,
-        # EIO, ...) could be a LIVE run dir behind a transient error, so
-        # it is EXCLUDED from this pass — neither deleted nor counted
-        # against ``keep``. (Sorting error entries newest instead would
-        # let ``keep`` persistently unstat-able leftovers squat the
-        # keep slots and push a genuinely fresh in-flight run dir past
-        # the cutoff — the opposite of the safety claim. ADVICE r9 +
-        # r10 review.)
-        try:
-            return os.path.getmtime(p)
-        except FileNotFoundError:
-            return 0.0
-        except OSError:
-            return None
-
-    stamped = [
-        (m, p)
-        for p in _glob.glob(os.path.join(base, prefix + "*"))
-        if (m := _mtime(p)) is not None
-    ]
-    stamped.sort(reverse=True)
-    for _m, stale in stamped[keep:]:
-        shutil.rmtree(stale, ignore_errors=True)
-
-
 def stage_stream_dir(sf_dir: str, table: str = "events") -> str:
     """Stage a fixture parquet file into a directory for the file stream
     source (Spark's FileStreamSource requires a directory path)."""
-    import shutil
-
     dst_dir = scratch_dir("stream_src", f"{table}_{fixture_tag(sf_dir)}")
     src = f"{sf_dir}/{table}.parquet"
     dst = os.path.join(dst_dir, f"{table}.parquet")
@@ -858,8 +818,6 @@ def a_snapshot_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     data is read or shuffled to expire a snapshot; only the survivors'
     footer listing happens at read time.
     """
-    import shutil
-
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     tag = "ret_" + fixture_tag(sf_dir)
     root = scratch_dir("snapshots", tag)
@@ -1132,8 +1090,6 @@ def write_audit_publish(df: DataFrame, root: str, gates: Sequence[Gate]) -> Data
     an AssertionError that names it and leaves ``root/published``
     untouched. Returns the published table, read back with the schema
     it was written with."""
-    import shutil
-
     spark = df.sparkSession
     stage = f"{root}/_stage"
     published = f"{root}/published"

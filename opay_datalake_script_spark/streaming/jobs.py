@@ -30,7 +30,6 @@ from ..sources.io import (
     fixture_tag,
     load,
     load_stream,
-    rotate_scratch_runs,
     scratch_dir,
     scratch_path,
 )
@@ -202,11 +201,8 @@ def i_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch sub-key (the fanout/ADVICE-r5 mechanism) makes batches
     disjoint while keeping replays idempotent: a replayed batch
     overwrites exactly its own (dt, epoch) slices. The landing dir is
-    run-fresh (epochs restart at 0 per checkpoint, so reusing a dir
-    across runs would resurrect stale (dt, epoch) slices) and prior run
-    dirs are rotated away to keep scratch bounded."""
-    base = scratch_dir("foreach_batch", fixture_tag(sf_dir))
-    rotate_scratch_runs(base)
+    run-fresh: epochs restart at 0 per checkpoint, so reusing a dir
+    across calls would resurrect stale (dt, epoch) slices."""
     run = scratch_dir("foreach_batch", fixture_tag(sf_dir), f"run_{uuid.uuid4().hex}")
     out = os.path.join(run, "events_by_day")
     ckpt = os.path.join(run, "ckpt")
@@ -278,7 +274,6 @@ def i_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     versioned-directory swap here is the jar-free stand-in with the same
     idempotent rerun-safety (re-running a batch lands identical state).
     """
-    rotate_scratch_runs(scratch_dir("stream_cdc"))
     run = scratch_dir("stream_cdc", f"run_{uuid.uuid4().hex}")
     ckpt = os.path.join(run, "ckpt")
     state: dict[str, object] = {}  # the latest snapshot's path and schema
@@ -820,7 +815,6 @@ def i_stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import duckdb as _duck
 
-    rotate_scratch_runs(scratch_dir("ckpt_restart"))
     run_id = f"run_{uuid.uuid4().hex}"
     src = scratch_dir("ckpt_restart", run_id, "src")
     out = scratch_dir("ckpt_restart", run_id, "out")
@@ -930,7 +924,6 @@ def i_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     1x, each sink write parallelizes independently, and the epoch key
     makes every sink exactly-once under retries.
     """
-    rotate_scratch_runs(scratch_dir("fanout"))
     run_id = f"run_{uuid.uuid4().hex}"
     out_type = scratch_dir("fanout", run_id, "by_type")
     out_day = scratch_dir("fanout", run_id, "by_day")

@@ -12,9 +12,6 @@ Usage: python scripts/determinism_sweep.py [sf_dir] [start] [stop]
        (defaults: /root/testdata/sf0.01, full registry; start/stop
         slice the ordered registry for tranche runs)
 Prints one line per query; exits 1 if any query diverges.
-
-Run it ALONE: several A-family ops write fixed .scratch paths and race
-against a concurrently-running pytest suite or a second sweep.
 """
 
 from __future__ import annotations

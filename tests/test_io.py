@@ -1,6 +1,7 @@
-"""Pins for the sources/streaming scratch-and-staging machinery: fixture
-staging freshness, footer-sniff cache invalidation, run-dir rotation,
-stale-partition hygiene, and multi-batch-safe foreachBatch landing —
+"""Pins for the sources/streaming scratch-and-staging machinery: the
+per-process scratch root, fixture staging freshness, footer-sniff cache
+invalidation, stale-partition hygiene, and multi-batch-safe foreachBatch
+landing —
 the failure modes are all masked at fixture scale (single-file staging
 collapses every stream into one micro-batch; all three scale factors
 span identical date ranges), so each mechanism is pinned directly.
@@ -71,71 +72,47 @@ def test_nano_sniff_cache_keys_on_file_stat(tmp_path):
     )
 
 
-def test_rotate_scratch_runs_keeps_newest_and_ignores_other_prefixes(tmp_path):
-    base = str(tmp_path)
-    for i in range(6):
-        d = os.path.join(base, f"run_{i}")
-        os.makedirs(d)
-        t = time.time() - (100 - i)  # run_5 newest
-        os.utime(d, (t, t))
-    os.makedirs(os.path.join(base, "src_shared"))
-    src_io.rotate_scratch_runs(base, keep=4)
-    left = sorted(os.listdir(base))
-    assert left == ["run_2", "run_3", "run_4", "run_5", "src_shared"], left
+def test_scratch_root_is_per_process_made_on_use_and_removed_at_exit(tmp_path):
+    """Each process gets its own scratch root under the temp dir. Importing
+    the package makes no directory (Spark's Python workers import it), and
+    a process that wrote under its root leaves nothing behind at exit."""
+    import subprocess
+    import sys
 
+    import opay_datalake_script_spark as pkg
 
-def test_rotate_scratch_runs_tolerates_concurrent_deletion(tmp_path, monkeypatch):
-    """A sibling rotation deleting an entry between the glob and the
-    mtime stat must not raise (ADVICE r8): the vanished entry sorts as
-    oldest and its rmtree is an idempotent no-op."""
-    base = str(tmp_path)
-    for i in range(6):
-        d = os.path.join(base, f"run_{i}")
-        os.makedirs(d)
-        t = time.time() - (100 - i)
-        os.utime(d, (t, t))
-    real_getmtime = os.path.getmtime
-    import shutil
+    script = "\n".join(
+        [
+            "import os, sys",
+            f"sys.path.insert(0, {os.path.dirname(os.path.dirname(pkg.__file__))!r})",
+            "import opay_datalake_script_spark",
+            "from opay_datalake_script_spark.sources import io",
+            "print(io.SCRATCH_DIR)",
+            "print(os.listdir(sys.argv[1]))",
+            "if sys.argv[2] == 'write':",
+            "    with open(os.path.join(io.scratch_dir('x'), 'f'), 'w') as fh:",
+            "        fh.write('x')",
+            "    print(os.listdir(sys.argv[1]))",
+        ]
+    )
 
-    def racy_getmtime(p):
-        if p.endswith("run_0"):  # vanishes mid-scan
-            shutil.rmtree(p, ignore_errors=True)
-            raise FileNotFoundError(p)
-        return real_getmtime(p)
+    def run(mode: str) -> list[str]:
+        out = subprocess.run(
+            [sys.executable, "-c", script, str(tmp_path), mode],
+            env=dict(os.environ, TMPDIR=str(tmp_path)),
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert out.returncode == 0, out.stderr[-4000:]
+        return out.stdout.splitlines()
 
-    monkeypatch.setattr(src_io.os.path, "getmtime", racy_getmtime)
-    src_io.rotate_scratch_runs(base, keep=4)
-    left = sorted(os.listdir(base))
-    assert left == ["run_2", "run_3", "run_4", "run_5"], left
-
-
-def test_rotate_scratch_runs_excludes_unstatable_entries(tmp_path, monkeypatch):
-    """A stat failure OTHER than a vanished entry (EACCES/EIO — possibly
-    a LIVE run dir behind a transient error) excludes the entry from the
-    pass entirely: never deleted, and not counted against ``keep``
-    either — ``keep`` persistently unstat-able leftovers squatting the
-    newest slots would otherwise push a genuinely fresh in-flight run
-    dir past the cutoff (ADVICE r9 + r10 review). Rotation among the
-    statable entries still proceeds normally."""
-    base = str(tmp_path)
-    for i in range(6):
-        d = os.path.join(base, f"run_{i}")
-        os.makedirs(d)
-        t = time.time() - (100 - i)  # run_5 newest
-        os.utime(d, (t, t))
-    real_getmtime = os.path.getmtime
-
-    def flaky_getmtime(p):
-        if p.endswith(("run_0", "run_1")):
-            raise PermissionError(13, "denied", p)
-        return real_getmtime(p)
-
-    monkeypatch.setattr(src_io.os.path, "getmtime", flaky_getmtime)
-    src_io.rotate_scratch_runs(base, keep=2)
-    left = sorted(os.listdir(base))
-    # run_0/run_1: excluded, untouched. Statable run_2..run_5: the two
-    # newest (run_4, run_5) fill keep=2; run_2/run_3 rotate away.
-    assert left == ["run_0", "run_1", "run_4", "run_5"], left
+    first, second = run("import"), run("write")
+    assert first[0] != second[0]
+    assert os.path.dirname(first[0]) == str(tmp_path)
+    assert first[1] == second[1] == "[]"
+    assert second[2] == repr([os.path.basename(second[0])])
+    assert os.listdir(tmp_path) == []
 
 
 def test_day_epoch_write_multi_batch_and_replay(spark, tmp_path):
@@ -160,15 +137,16 @@ def test_day_epoch_write_multi_batch_and_replay(spark, tmp_path):
 
 
 def test_foreach_batch_sink_lands_full_source_per_day(spark):
-    got = QUERIES["i_foreach_batch_sink"](spark, SF_DIR)
-    src = src_io.load(spark, SF_DIR, "events")
-    assert got.count() == src.count()
-    # Landing is run-fresh and rotated: at most keep+1 run dirs remain.
     base = os.path.join(
         src_io.SCRATCH_DIR, "foreach_batch", src_io.fixture_tag(SF_DIR)
     )
-    runs = [d for d in os.listdir(base) if d.startswith("run_")]
-    assert 1 <= len(runs) <= 5, runs
+    before = set(os.listdir(base)) if os.path.isdir(base) else set()
+    got = QUERIES["i_foreach_batch_sink"](spark, SF_DIR)
+    src = src_io.load(spark, SF_DIR, "events")
+    assert got.count() == src.count()
+    # Landing is run-fresh: the call landed in one new run dir.
+    runs = [d for d in set(os.listdir(base)) - before if d.startswith("run_")]
+    assert len(runs) == 1, runs
 
 
 def test_stream_file_source_concurrent_invocations(spark):

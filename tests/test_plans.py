@@ -559,11 +559,10 @@ def test_snapshot_retention_vacuums_v1(spark):
     v2/v3 stay readable."""
     import os
 
-    from opay_datalake_script_spark.sources.io import scratch_path
+    from opay_datalake_script_spark.sources.io import fixture_tag, scratch_dir
 
     QUERIES["a_snapshot_retention"](spark, SF_DIR).collect()
-    tag = "ret_" + SF_DIR.rstrip("/").replace("/", "_").lstrip("_")
-    root = scratch_path("snapshots", tag, "_")[: -len("/_")]
+    root = scratch_dir("snapshots", "ret_" + fixture_tag(SF_DIR))
     assert not os.path.exists(f"{root}/v1")
     assert os.path.exists(f"{root}/v2") and os.path.exists(f"{root}/v3")
     assert spark.read.parquet(f"{root}/v3").count() > 0

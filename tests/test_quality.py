@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opay_datalake_script_spark import quality as Q
-from opay_datalake_script_spark.sources.io import SCRATCH_DIR, load
+from opay_datalake_script_spark.sources.io import load
 
 from .conftest import SF_DIR
 
@@ -63,8 +63,8 @@ def test_gates_run_in_single_scan(spark):
     assert len(scans) == 1
 
 
-def test_partition_sensor(spark):
-    base = os.path.join(SCRATCH_DIR, "sensor_sink")
+def test_partition_sensor(spark, tmp_path):
+    base = str(tmp_path / "sensor_sink")
     ev = load(spark, SF_DIR, "events").withColumn(
         "dt", F.date_format("ts", "yyyy-MM-dd")
     )

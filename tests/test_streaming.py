@@ -12,7 +12,6 @@ import shutil
 import pytest
 
 from opay_datalake_script_spark.registry import QUERIES, load_all_queries
-from opay_datalake_script_spark.sources.io import SCRATCH_DIR
 from opay_datalake_script_spark.streaming import jobs
 
 from .conftest import SF_DIR, normalized_rows
@@ -44,7 +43,7 @@ def test_streaming_counter_parity(spark):
     _assert_same(batch, stream)
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     """Files become micro-batches (maxFilesPerTrigger=1 under one
     availableNow run — the memory sink cannot restart from a checkpoint, so
     a single query must see them all). Since Spark 3.4 late-event filtering
@@ -56,14 +55,12 @@ def test_watermark_drops_late_rows(spark):
 
     from pyspark.sql import functions as F
 
-    src = os.path.join(SCRATCH_DIR, "late_src")
-    ckpt = os.path.join(SCRATCH_DIR, "late_ckpt")
-    for p in (src, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    src = str(tmp_path / "late_src")
+    ckpt = str(tmp_path / "late_ckpt")
     os.makedirs(src)
 
     def write_batch(name, rows, mtime):
-        tmp = os.path.join(SCRATCH_DIR, "late_tmp", name)
+        tmp = str(tmp_path / "late_tmp" / name)
         spark.createDataFrame(rows, "event_id long, ts timestamp, value double").coalesce(
             1
         ).write.mode("overwrite").parquet(tmp)
@@ -111,7 +108,7 @@ def test_watermark_drops_late_rows(spark):
     assert t0 - dt.timedelta(hours=3) not in out, "late row should have been dropped"
 
 
-def test_stateful_counter_across_batches(spark):
+def test_stateful_counter_across_batches(spark, tmp_path):
     """transformWithStateInPandas (or applyInPandasWithState fallback):
     per-user counters must accumulate across two micro-batches."""
     import datetime as dt
@@ -120,20 +117,16 @@ def test_stateful_counter_across_batches(spark):
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    src = os.path.join(SCRATCH_DIR, "state_src")
-    ckpt = os.path.join(SCRATCH_DIR, "state_ckpt")
-    for p in (src, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    src = str(tmp_path / "state_src")
+    ckpt = str(tmp_path / "state_ckpt")
     os.makedirs(src)
 
     schema = "user_id long, value double"
     t0 = dt.datetime(2024, 1, 1)
 
     def write_file(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(SCRATCH_DIR, "state_tmp", name)
-        )
-        tmp = os.path.join(SCRATCH_DIR, "state_tmp", name)
+        tmp = str(tmp_path / "state_tmp" / name)
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(tmp)
         for f in os.listdir(tmp):
             if f.endswith(".parquet"):
                 shutil.copy(os.path.join(tmp, f), os.path.join(src, f"{name}.parquet"))
@@ -234,7 +227,7 @@ def test_stream_stream_join_parity(spark):
     _assert_same(batch, stream)
 
 
-def test_stream_stream_left_join_parity(spark):
+def test_stream_stream_left_join_parity(spark, tmp_path):
     """LEFT OUTER stream-stream join parity — the hard case: NULL
     (unattributed) rows may only emit once the watermark proves no
     matching click can still arrive, so with a finite source the tail
@@ -249,8 +242,7 @@ def test_stream_stream_left_join_parity(spark):
 
     from opay_datalake_script_spark.sources.io import load
 
-    src = os.path.join(SCRATCH_DIR, "ssl_src")
-    shutil.rmtree(src, ignore_errors=True)
+    src = str(tmp_path / "ssl_src")
     os.makedirs(src)
 
     ev = load(spark, SF_DIR, "events").select(
@@ -258,7 +250,7 @@ def test_stream_stream_left_join_parity(spark):
     )
 
     def stage(name, df, mtime):
-        tmp = os.path.join(SCRATCH_DIR, "ssl_tmp", name)
+        tmp = str(tmp_path / "ssl_tmp" / name)
         df.coalesce(1).write.mode("overwrite").parquet(tmp)
         for f in os.listdir(tmp):
             if f.endswith(".parquet"):
