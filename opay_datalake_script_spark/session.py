@@ -43,8 +43,6 @@ from pyspark.sql import SparkSession
 
 from .sources.io import SCRATCH_DIR
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 # Share of the host's memory given to the driver heap. The rest covers
 # the JVM's off-heap use (metaspace, Arrow and shuffle buffers), the
 # Python workers of pandas UDFs and the page cache of spill files.
@@ -82,17 +80,14 @@ def driver_heap() -> str:
 def get_spark(
     app_name: str = "opay-datalake-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or get) the engine's SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or '*'.
-    Safe to call repeatedly: returns the active session if one exists.
-    ``shuffle_partitions=None`` means "caller has no opinion": a new
-    session gets DEFAULT_SHUFFLE_PARTITIONS, but a pre-existing active
-    session (possibly built by the bench/driver harness with its own
-    deliberate width) is left untouched.
+    A new session gets the confs below, then ``extra_conf``. Safe to call
+    repeatedly: an active session is returned with only ``extra_conf``
+    applied to it.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -100,10 +95,7 @@ def get_spark(
         # session we did not create would override its owner's settings.
         import warnings
 
-        requested = dict(extra_conf or {})
-        if shuffle_partitions is not None:
-            requested["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-        for key, val in requested.items():
+        for key, val in (extra_conf or {}).items():
             try:
                 active.conf.set(key, val)
             except Exception:
@@ -114,12 +106,10 @@ def get_spark(
                 )
         return active
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

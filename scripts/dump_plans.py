@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for named queries to plans/<round>/ files.
+"""Dump .explain("formatted") for named queries to files under <outdir>.
 
 Usage: python scripts/dump_plans.py <outdir> <suffix> query [query ...]
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import pytest
 
+from opay_datalake_script_spark.plans.inspect import scale_shapes
 from opay_datalake_script_spark.registry import ORACLES, QUERIES, load_all_queries
 
 from .conftest import (
@@ -17,11 +18,43 @@ from .conftest import (
     assert_matches_oracle,
     assert_no_nonscalar_columns,
 )
+from .test_plans import _BROADCAST_TAXONOMY
 
 load_all_queries()
 
 ORACLE_IDS = sorted(ORACLES)
 ROWS_ONLY_IDS = sorted(set(QUERIES) - set(ORACLES))
+
+# Plan shapes that send a whole input through one task, where that input
+# does not grow with the corpus: (job, shape) -> (class from
+# _BROADCAST_TAXONOMY, reason). Exact, like _HARD_BROADCAST_SITES.
+_SCALE_SHAPES_ALLOWED = {
+    ("c_join_cross", "nested-loop"): ("domain", "5 regions x the order statuses"),
+    ("d_theta_sketch_intersection", "nested-loop"): ("domain", "theta rows per segment"),
+    ("r_ab_test_lift", "nested-loop"): ("domain", "the 2-row per-arm table"),
+    ("k_knn_query", "nested-loop"): ("query", "the query vector x the corpus"),
+    ("k_hard_negatives", "nested-loop"): ("query", "8 query vectors x the corpus"),
+    ("k_ann_ivf", "nested-loop"): ("query", "the query vector x the probed buckets"),
+    ("k_multimodal_join", "nested-loop"): ("query", "the query vector x the images"),
+    ("k_ann_grid", "nested-loop"): ("cap", "the constant hamming-ball probe masks"),
+    ("k_dsir_importance_weights", "nested-loop"): ("scalar", "the 1-row totals cross join"),
+    ("r_mom_yoy_report", "window"): ("domain", "lags over one row per month"),
+    ("r_mom_yoy_report", "single-partition"): ("domain", "gathers the month rows"),
+    ("r_revenue_bridge", "window"): ("domain", "lags over one row per month"),
+    ("r_revenue_bridge", "single-partition"): ("domain", "gathers the month rows"),
+}
+
+
+def assert_scale_shapes(name, df):
+    """Fail, naming the job and the plan lines, on a shape of ``df``'s
+    plan that has no entry for job ``name``, or on a stale entry."""
+    assert {c for c, _ in _SCALE_SHAPES_ALLOWED.values()} <= _BROADCAST_TAXONOMY
+    assert {job for job, _ in _SCALE_SHAPES_ALLOWED} <= set(QUERIES)
+    found = scale_shapes(df)
+    allowed = {shape for job, shape in _SCALE_SHAPES_ALLOWED if job == name}
+    unlisted = {s: lines for s, lines in found.items() if s not in allowed}
+    assert not unlisted, f"{name}: whole input through one task: {unlisted}"
+    assert allowed <= set(found), f"{name}: stale entries {allowed - set(found)}"
 
 
 # Fast default tier: the FULL differential sweep at sf0.001 — every
@@ -34,11 +67,14 @@ ROWS_ONLY_IDS = sorted(set(QUERIES) - set(ORACLES))
 def test_oracle_match(spark, smoke_oracle_con, name):
     df = QUERIES[name](spark, SMOKE_SF_DIR)
     assert_matches_oracle(df, smoke_oracle_con, ORACLES[name], name=name)
+    # same QueryExecution as the collect above: the final AQE plan
+    assert_scale_shapes(name, df)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_IDS)
 def test_rows_only_runs(spark, name):
     df = QUERIES[name](spark, SMOKE_SF_DIR)
+    assert_scale_shapes(name, df)
     assert_no_nonscalar_columns(df, name)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
@@ -58,6 +94,24 @@ def test_rows_only_runs_sf01(spark, name):
     assert_no_nonscalar_columns(df, name)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+def test_scale_shape_check_flags_unpartitioned_window(spark):
+    """An unpartitioned window fails the check, naming the job and the
+    plan line; the same window partitioned passes."""
+    from pyspark.sql import Window, functions as F
+
+    from opay_datalake_script_spark.sources.io import load
+
+    orders = load(spark, SMOKE_SF_DIR, "orders")
+    order = Window.orderBy("o_orderdate", "o_orderkey")
+    planted = orders.select(F.row_number().over(order).alias("rn"))
+    partitioned = orders.select(F.row_number().over(order.partitionBy("o_custkey")))
+    for df in (planted, partitioned):
+        df.collect()
+    with pytest.raises(AssertionError, match=r"planted: .*Window \[row_number"):
+        assert_scale_shapes("planted", planted)
+    assert_scale_shapes("planted", partitioned)
 
 
 def test_dtype_gate_catches_uncast_hugeint(spark, oracle_con):

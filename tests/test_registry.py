@@ -1,15 +1,16 @@
 """Registry contract tests: registration order, the duplicate-ID guard,
-the banding-oracle mirror tripwire and the plan audit's window detector."""
+the banding-oracle mirror tripwire and the plan-shape detectors that
+tests/test_oracle.py runs on every job."""
 
 from __future__ import annotations
 
 import builtins
-import importlib.util
 import json
 import os
 
 import __spark_entry__ as entry
 from opay_datalake_script_spark import registry
+from opay_datalake_script_spark.plans.inspect import plan_scale_shapes
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,37 +48,51 @@ def test_registry_order_is_registration_order(tmp_path, monkeypatch):
                 os.remove(path)
 
 
-def _load_plan_audit():
-    spec = importlib.util.spec_from_file_location(
-        "plan_audit", os.path.join(_ROOT, "scripts", "plan_audit.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_plan_audit_window_detector():
-    """The audit's empty-partition-window detector must flag only the
-    t_q15 class: plan text drops EMPTY spec groups, so the bracket
-    count alone cannot distinguish partitioned-unordered (benign) from
-    unpartitioned-ordered (the scale killer); and the prefix-sum
-    offsets window (ordered on _pid over O(partitions) rows) is
-    unpartitioned by design."""
-    pa = _load_plan_audit()
-    flagged = pa._empty_partition_windows(
-        # unpartitioned + ordered -> FLAG (the t_q15 shape)
-        "   Window [max(x#1) windowspecdefinition(ts#2 ASC NULLS FIRST, "
-        "specifiedwindowframe(...)) AS mx#3], [ts#2 ASC NULLS FIRST]\n"
-        # partitioned + ordered (3 groups) -> benign
-        "   Window [row_number() ...], [user_id#4], [ts#2 ASC NULLS FIRST]\n"
-        # partitioned, NO order (2 groups, no sort markers) -> benign
-        "   Window [count(1) windowspecdefinition(event_type#5, "
+def test_scale_shape_detectors():
+    """Only shapes whose input can grow with the corpus are flagged.
+    Plan text drops EMPTY window spec groups, so the bracket count alone
+    cannot tell partitioned-unordered (benign) from unpartitioned-ordered
+    (the t_q15 class). Benign by design: the _pid-ordered prefix-sum
+    window and count table, global partial aggregates, nested-loop joins
+    with a global-aggregate build side, an AQE plan's initial section."""
+    assert plan_scale_shapes("""\
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   BroadcastNestedLoopJoin BuildLeft, Cross
+   :- BroadcastQueryStage 1
+   :  +- BroadcastExchange IdentityBroadcastMode, [plan_id=20]
+   :     +- HashAggregate(keys=[], functions=[max(x#1L)])
+   :        +- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=10]
+   :           +- *(1) HashAggregate(keys=[], functions=[partial_max(x#1L)])
+   +- *(2) BroadcastNestedLoopJoin BuildRight, Cross
+      :- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=30]
+      :  +- HashAggregate(keys=[_pid#8], functions=[count(1)])
+      +- ReusedExchange [mx#6L], BroadcastExchange IdentityBroadcastMode, [plan_id=20]
++- == Initial Plan ==
+   CartesianProduct
+""" + (
+        # partitioned + ordered (3 groups)
+        "Window [row_number() ...], [user_id#4], [ts#2 ASC NULLS FIRST]\n"
+        # partitioned, NO order (2 groups, no sort markers)
+        "Window [count(1) windowspecdefinition(event_type#5, "
         "specifiedwindowframe(...)) AS n#6], [event_type#5]\n"
-        # the distributed prefix-sum offsets window -> benign by design
-        "   Window [sum(_n#7L) windowspecdefinition(_pid#8 ASC NULLS FIRST, "
+        # the distributed prefix-sum offsets window
+        "Window [sum(_n#7L) windowspecdefinition(_pid#8 ASC NULLS FIRST, "
         "specifiedwindowframe(...)) AS _we0#9L], [_pid#8 ASC NULLS FIRST]\n"
-    )
-    assert len(flagged) == 1 and "mx#3" in flagged[0], flagged
+    )) == {}
+    flagged = plan_scale_shapes("""\
+Window [max(x#1) windowspecdefinition(ts#2 ASC NULLS FIRST, ...) AS mx#3], [ts#2 ASC NULLS FIRST]
++- BroadcastNestedLoopJoin BuildRight, Cross
+   :- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=40]
+   :  +- HashAggregate(keys=[month#2], functions=[sum(v#1L)])
+   +- BroadcastExchange IdentityBroadcastMode, [plan_id=50]
+      +- Project [embedding#4 AS q_emb#6]
+         +- Filter (vec_id#3L < 8)
+            +- FileScan parquet [vec_id#3L,embedding#4]
+""")
+    assert {s: len(v) for s, v in flagged.items()} == {
+        "window": 1, "nested-loop": 1, "single-partition": 1}
+    assert "mx#3" in flagged["window"][0]
 
 
 def test_every_banding_oracle_carries_cap_and_chains():
