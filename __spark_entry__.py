@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Registry contract of the PySpark engine.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check. Each ``queries()[name]`` is checked
+against the matching ``oracle_sql()[name]`` run in DuckDB: row count,
+column names and an order-insensitive value comparison
+(``tests/conftest.py::assert_matches_oracle``).
 
 All real logic lives in the ``opay_datalake_script_spark`` package;
 this module only wires the registry into the contract functions.

@@ -451,8 +451,8 @@ def j_ewma_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT vec_id, score_int,
            -- exact half-away display: round(score_int/1e9, 6) ==
            -- sign * ((2*|s| + 1000) // 2000) / 1e6 in pure integers —
-           -- rounding the DOUBLE quotient instead is the ADVICE-r7
-           -- divergence class (numpy banker's vs binary half-away)
+           -- rounding the DOUBLE quotient instead diverges at .5
+           -- boundaries (numpy banker's vs binary half-away)
            (CASE WHEN score_int >= 0
                  THEN (2 * score_int + 1000) // 2000
                  ELSE -((2 * (-score_int) + 1000) // 2000) END)
@@ -531,10 +531,9 @@ def j_embedding_score_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact half-away 6-dp display from the INTEGER score:
             # round(s/1e9, 6) == sign(s)*((2|s|+1000)//2000)/1e6 — never
             # round the double quotient (np.round is banker's at the
-            # boundary, DuckDB round() is binary half-away: the ADVICE-r7
-            # divergence class; measured value-identical to the old
-            # np.round display on both fixture SFs, so driver evidence
-            # stays valid)
+            # boundary, DuckDB round() is binary half-away; measured
+            # value-identical to the old np.round display on both
+            # fixture SFs)
             mag = (2 * np.abs(s) + 1000) // 2000
             yield pd.DataFrame(
                 {

@@ -31,7 +31,7 @@ def _mh_expr_sql(i: int) -> str:
 # The WHERE doc_id IS NOT NULL below (and in _band_cand_ctes' mh_toks)
 # mirrors the canonical-plan filter pin in minhash_signatures exactly, so
 # the oracle stays a term-for-term twin even on a corpus WITH null doc_ids
-# (ADVICE r13: the fixtures have none, but a latent divergence is a trap).
+# (the fixtures have none, but a latent divergence would surface silently).
 _MINHASH_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id,
@@ -81,7 +81,7 @@ ONE_HASH_BANDS = [(i,) for i in range(_MINHASH_K)]
 LSH_BUCKET_CAP = 1024
 LSH_CHAIN_SALTS = 4
 
-# Sub-bucket chunking for the salted-chain ORDERING (r10 verdict: the
+# Sub-bucket chunking for the salted-chain ORDERING (the
 # cap bounds an oversized bucket's candidate OUTPUT, but the chain's
 # per-(band, bucket, salt) sort window cannot be split by AQE, so a
 # degenerate mega-bucket — tens of millions of boilerplate docs at
@@ -370,11 +370,10 @@ def k_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded-LSH candidate pairs — the production candidates -> verify
     composition, not an all-pairs scan.
 
-    Round-4 verdict flagged the previous lang-blocked self-join as
-    O(n_b^2) per block; this form replaces the block scan with the
-    (band, bucket) equi-join of `band_candidate_pairs` (8 bands x 2 rows
-    of md5-MinHash) followed by two doc_id-keyed joins to fetch token
-    sets. A true 0.6-Jaccard pair misses every band with prob
+    A lang-blocked self-join would be O(n_b^2) per block; this form
+    replaces the block scan with the (band, bucket) equi-join of
+    `band_candidate_pairs` (8 bands x 2 rows of md5-MinHash) followed by
+    two doc_id-keyed joins to fetch token sets. A true 0.6-Jaccard pair misses every band with prob
     (1-0.6^2)^8 ~ 2.8% worst-case (99.3% measured recall on the sf0.01
     fixture); the DuckDB oracle mirrors the identical md5 banding, so
     the output is still hash-checked exactly.
@@ -579,7 +578,7 @@ def _banded_buckets(
     expanded by stack into ``bands`` (see _BANDS). The ONE place the
     banding scheme lives engine-side — band_candidate_pairs and
     band_bucket_stats both build on it, so a scheme change cannot
-    desynchronize the monitor from the generator (r7 review)."""
+    desynchronize the monitor from the generator."""
     sig = minhash_signatures(docs)
     buckets = [
         "md5(concat(" + ", ':', ".join(f"mh{i}" for i in band) + "))" for band in bands
@@ -640,7 +639,7 @@ def capped_bucket_pairs(
     ``max_bucket_size`` members, star + ``LSH_CHAIN_SALTS``
     deterministic chunked chains inside oversized ones.
 
-    Hot-bucket task shape (r10 verdict item 1): NO window runs over a
+    Hot-bucket task shape: NO window runs over a
     whole (band, bucket) group anywhere in this plan. Bucket sizing is
     a partial-combining `groupBy(band, bucket).agg(count, min)` joined
     back — an AQE-splittable aggregate+join, not a window whose
@@ -651,8 +650,10 @@ def capped_bucket_pairs(
     chunk = md5-prefix mod ceil(bsz / ``chain_chunk_rows``) — see the
     CHAIN_CHUNK_ROWS note — so the widest sort any single task performs
     is ~chain_chunk_rows rows no matter how degenerate the bucket.
-    Measured at a synthetic 1,000,000-member bucket (numbers in
-    NOTES_r11)."""
+    Measured at a synthetic 1,000,000-member bucket: the longest task
+    took 1.36 s with chunked chains against 16.22 s with one unchunked
+    window per (band, bucket, salt), and chunk boundaries lost 241 of
+    about 5.0 M candidates."""
     sizes = buckets.groupBy("band", "bucket").agg(
         F.count("*").alias("bsz"), F.min("doc_id").alias("hub")
     )
@@ -674,7 +675,7 @@ def capped_bucket_pairs(
     ord_key = F.md5(F.concat_ws(":", F.col("doc_id"), F.col("salt")))
     n_chunks = F.expr(f"(bsz - 1) div {int(chain_chunk_rows)}") + F.lit(1)
     ws = W.partitionBy("band", "bucket", "salt", "chunk").orderBy("ok", "doc_id")
-    # NULL-SAFE join back for the chain path (review r11): the r10
+    # NULL-SAFE join back for the chain path: the unchunked
     # window grouped a NULL bucket key into one partition and chained
     # it, and the oracle's PARTITION BY still does — a plain equi-join
     # would silently drop such rows from the chain (the STAR join is
@@ -723,7 +724,7 @@ def band_bucket_stats(
     the member rows the cap demotes from all-pairs to star, and
     ``member_pairs_deferred`` — the C(bsz-1, 2) member-member
     combinations per oversized bucket that the star does NOT emit
-    directly (VERDICT r7 item 7: the hub-miss EXPOSURE; a deferred pair
+    directly (the hub-miss EXPOSURE: a deferred pair
     is only lost when both members verify against each other but not
     against the hub, so this column is the upper bound on hub-miss,
     and deferred/(deferred + emitted candidates) is the loggable
@@ -741,7 +742,7 @@ def band_bucket_stats(
         F.sum(over.cast("long")).alias("n_oversized"),
         F.max("bsz").alias("max_width"),
         F.sum(F.when(over, F.col("bsz")).otherwise(0)).alias("rows_star_expanded"),
-        # accumulate m*(m-1) in DECIMAL (r8 review: a 1M-wide bucket
+        # accumulate m*(m-1) in DECIMAL (a 1M-wide bucket
         # contributes ~1e12 per band; enough of them wrap an int64 sum
         # silently — the exact overflow class the e4 hardening kills
         # elsewhere), then halve exactly: the sum of even numbers is
@@ -792,8 +793,8 @@ def k_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     require shared adjacency, the standard n-gram dedup family.
 
     Like k_jaccard_pairs, the exact scorer runs ONLY on banded unigram
-    MinHash candidate pairs (round-4 verdict: the old lang-blocked
-    self-join was O(n_b^2) per block). Candidates come from unigram
+    MinHash candidate pairs (a lang-blocked self-join would be
+    O(n_b^2) per block). Candidates come from unigram
     signatures rather than bigram ones — adjacency-sharing pairs share
     tokens a fortiori, and the oracle mirrors the identical banding so
     the output stays hash-checked. Shingling itself is a JVM
@@ -1336,8 +1337,8 @@ def k_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed.
 
     Cost control is structural, not a sampling shortcut: (1) scoring
-    runs ONLY on the banded MinHash candidate pairs (the round-4
-    verdict rule — never all-pairs), and (2) the distance is computed
+    runs ONLY on the banded MinHash candidate pairs (never
+    all-pairs), and (2) the distance is computed
     on an 80-char PREFIX, making the per-pair DP cost a constant
     O(80^2) instead of O(len^2) — full-document edit distance is
     quadratic in document length and has no distributed decomposition,
@@ -1367,13 +1368,13 @@ def k_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared by the k_winnow_fingerprints oracle (textstats.py imports this
 # constant) and the k_winnow_candidates oracle below — ONE SQL
 # definition of the fingerprint selection, so a k/w/guard change cannot
-# desynchronize the two oracles (r10 review). Lives here rather than in
+# desynchronize the two oracles. Lives here rather than in
 # textstats.py because dedup imports FIRST in registry._QUERY_MODULES:
 # a dedup -> textstats module-level import would reorder registration
 # (the stale-refresh tiebreaker), while textstats -> dedup is a cached
 # no-op by the time textstats loads. Null-text docs are excluded to
 # match Spark (concat_ws would hash them to md5(''); DuckDB's md5
-# propagates NULL — the r10 review divergence).
+# propagates NULL, so the two engines would disagree on null docs).
 def winnow_fps_sql_ctes(src: str = "documents") -> str:
     """The winnow fingerprint CTE block, src-parameterized (r11: the
     corpus-dedup-winnow pipeline oracle fingerprints the exact-dedup
@@ -1476,7 +1477,7 @@ def winnow_candidate_pairs(
     `WHERE text IS NOT NULL`): Spark's concat_ws would otherwise hash a
     null doc to md5('') and pair every null/empty doc through one
     sentinel bucket, while DuckDB's NULL-propagating md5 would emit
-    nothing — the r10 review's one cross-engine divergence."""
+    nothing — a cross-engine divergence."""
     from .textstats import winnow_fingerprints
 
     buckets = docs.where(F.col("text").isNotNull()).select(

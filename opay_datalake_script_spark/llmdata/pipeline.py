@@ -368,7 +368,7 @@ def _propagate_min_labels(labels: DataFrame, edges: DataFrame, max_rounds: int =
     ``max_rounds`` (component diameter > cap): an unconverged label set
     is a silently-wrong answer — rounds needed = cluster diameter (tiny
     for near-dup graphs), so callers should raise the cap, not ship
-    partial components (round-4 advice)."""
+    partial components."""
     prev_sum = None
     for _ in range(max_rounds):
         msgs = labels.join(edges, labels.doc_id == edges.a).select(
@@ -470,7 +470,7 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # shared exact scorer (optimization r14): same equi-joins, plus the
+    # shared exact scorer: same equi-joins, plus the
     # |a|+|b|-|a∩b| union arithmetic (tset is array_distinct output, so
     # the ratios are identical)
     from .dedup import exact_jaccard_scores
@@ -1079,8 +1079,7 @@ def _corpus_build_oracle() -> str:
     # (r11) the chunked chain ordering — via the SHARED _band_cand_ctes
     # builder with src='surv' instead of the hand-rolled copy this
     # oracle carried through r8-r10 (the copy lagged the r11 chunk
-    # scheme within hours of the scheme changing — the exact drift
-    # class the r7 review flagged it for once already)
+    # scheme within hours of the scheme changing)
     from .dedup import _band_cand_ctes
 
     return f"""
@@ -1218,7 +1217,7 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     tsets = surv.select(
         "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("tset")
     )
-    # shared exact scorer (optimization r14): identical joins plus the
+    # shared exact scorer: identical joins plus the
     # union arithmetic — see k_corpus_dedup_pipeline's note; tset is
     # array_distinct output
     from .dedup import exact_jaccard_scores
@@ -1550,8 +1549,7 @@ def _corpus_dedup_winnow_oracle() -> str:
 
 @register("k_corpus_dedup_winnow", oracle=_corpus_dedup_winnow_oracle())
 def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus dedup with a TWO-SOURCE candidate stage (VERDICT r10
-    item 5): exact dedup, then near-dup edges proposed by the union of
+    """Corpus dedup with a TWO-SOURCE candidate stage: exact dedup, then near-dup edges proposed by the union of
     (a) md5-MinHash LSH bands — whole-document similarity — and
     (b) winnow fingerprint buckets — shared exact >= 8-token runs, the
     partial-containment signal whole-doc MinHash dilutes away on long

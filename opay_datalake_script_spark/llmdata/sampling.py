@@ -517,7 +517,7 @@ def k_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("term_e6"),
         )
     )
-    # accumulate in DECIMAL, not long (ADVICE r7): Spark's long sum
+    # accumulate in DECIMAL, not long: Spark's long sum
     # wraps silently past int64 at corpus scale while the DuckDB oracle
     # widens to HUGEINT — the exact overflow e4()'s docstring cites.
     # The display sum casts back to long only at the end (fixture-exact;

@@ -40,7 +40,7 @@ def _dot_chain_sql(a: str, b: str, dims: int = 64) -> str:
     indexing — the same association order as Spark's sequential
     ``F.aggregate`` fold, so the resulting double is bit-identical
     across engines (the `_rp_chain` technique, extended to products;
-    ADVICE r7: `list_cosine_similarity` sums in an engine-private order
+    `list_cosine_similarity` sums in an engine-private order
     and its quotient can land on the opposite side of a rounding
     boundary from Spark's fold)."""
     return "(" + " + ".join(f"{a}[{i}]*{b}[{i}]" for i in range(1, dims + 1)) + ")"
@@ -51,7 +51,7 @@ def _fold_dot(a, b):
     the construct whose exact shape (zip_with product, 0.0 seed,
     sequential acc + x) is load-bearing for cross-engine bit-identity
     with _dot_chain_sql. Every dot/norm in this module routes through
-    here so the association order cannot silently fork (r11 review)."""
+    here so the association order cannot silently fork."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -106,7 +106,7 @@ def _auto_blocks(
     answer. Costs one count() of the (pruned) embedding scan; query
     builders pass their sf_dir as ``cache_key`` so repeated builds
     (bench reps, plan-only inspection, the oracle sweep) pay the count
-    job once per source rather than once per invocation (r7 review)."""
+    job once per source rather than once per invocation."""
     import math
 
     key = (cache_key, target_block_rows)
@@ -248,10 +248,9 @@ def k_knn_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains for dot and norm, then quantize the bit-identical cosine
     with floor(x*1e6 + 0.5)/1e6 — floor acts on the binary value in
     both engines, unlike round(), whose shortest-repr vs binary
-    divergence was this query's residual hash hazard (ADVICE r7
-    class). Fixture outputs are value-identical to the old round(,6)
-    form (no boundary-adjacent sims), so prior driver evidence stays
-    valid."""
+    divergence was this query's residual hash hazard. Fixture outputs
+    are value-identical to the old round(,6) form (no boundary-adjacent
+    sims)."""
     emb = load(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -609,9 +608,8 @@ def k_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 the quantization is exact-by-construction (identical
     left-associated dot/norm chains in both engines, then
     floor(x*1e6+0.5)/1e6 on the bit-identical cosine; round() on a
-    double was the residual shortest-repr-vs-binary hazard, ADVICE r7
-    class). Fixture outputs are value-identical to the old form, so
-    prior driver evidence stays valid.
+    double was the residual shortest-repr-vs-binary hazard). Fixture
+    outputs are value-identical to the old form.
 
     Scale shape: the anchor set broadcasts (a training batch's worth of
     queries, never the corpus), scoring is one map-only pass over the
@@ -705,7 +703,7 @@ _ANN_GRID_ORACLE = f"""
 
 @register("k_ann_grid", oracle=_ANN_GRID_ORACLE)
 def k_ann_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic bucketed ANN (VERDICT r6 item 7): the hash-checked
+    """Deterministic bucketed ANN: the hash-checked
     twin of `k_ann_ivf`, with the same probe-and-score shape but a
     quantizer both engines can compute exactly — 8 sign bits of the
     seeded Rademacher projection (SRP-LSH) pack into a 256-way bucket
@@ -717,8 +715,8 @@ def k_ann_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing, multi-probe, re-rank — is differentially hash-checked
     against DuckDB.
 
-    The score is EXACT-BY-CONSTRUCTION, not round-6dp-and-hope
-    (ADVICE r7's medium item): dot and norm are the same
+    The score is EXACT-BY-CONSTRUCTION, not round-6dp-and-hope: dot
+    and norm are the same
     left-associated IEEE chains in both engines (Spark's sequential
     ``F.aggregate`` fold == the oracle's explicit ``ev[1]*qv[1] + ...``
     chain — the `_rp_chain` technique), so the unrounded cosine double
@@ -755,8 +753,8 @@ def k_ann_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     ev = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    # norms are hoisted to one-per-row columns BEFORE the join (r7
-    # review): the re-rank stage then does one dot product per candidate
+    # norms are hoisted to one-per-row columns BEFORE the join: the
+    # re-rank stage then does one dot product per candidate
     # instead of re-aggregating both full arrays per (candidate, probe)
     e = emb.select(
         "vec_id", "label", "embedding", bucket.alias("bucket"), _fold_norm(ev).alias("nrm")
@@ -874,7 +872,7 @@ def _kmeans_update(cents: DataFrame, assigned: DataFrame) -> DataFrame:
     the oracle's LEFT JOIN term-for-term. The floor-quantized average
     (display_q6) is the one cross-engine rounding point — floor acts on
     the BINARY double in both engines, avoiding round()'s
-    shortest-repr-vs-binary split (functions/exact.py; r11 review), so
+    shortest-repr-vs-binary split (functions/exact.py), so
     only a last-ulp avg difference landing exactly on an x.5e-6
     boundary could diverge."""
     cells = (
@@ -910,7 +908,7 @@ def _kmeans_cents(earr: DataFrame, k: int, iters: int) -> DataFrame:
     checkpoint the K-row centroid table once and derive the final
     assignment from the checkpoint (checkpointing assigned and cents
     independently would execute the whole iterative fit twice — the
-    two eager jobs share no cache; r11 review)."""
+    two eager jobs share no cache)."""
     cents = (
         earr.orderBy("vec_id")
         .limit(k)
@@ -964,7 +962,6 @@ def _kmeans_ctes(
         # seeds come FROM ev, not from the base table, so an ev_sql
         # override that filters or re-keys rows keeps the seed set
         # consistent with what the Spark side's earr actually contains
-        # (r11 review)
         f"""c0 AS (
         SELECT vec_id AS cid, v AS cvec FROM ev
         WHERE vec_id IN (SELECT vec_id FROM ev ORDER BY vec_id LIMIT {k})
@@ -1112,7 +1109,7 @@ def semdedup(
     # iterative fit, then the final assignment derives from the
     # checkpoint with one map-only pass (checkpointing assigned and
     # cents independently would run the whole fit twice — two eager
-    # jobs share no cache; r11 review). Both checkpoints keep the
+    # jobs share no cache). Both checkpoints keep the
     # candidate, centroid-sim, and keeper stages from re-embedding the
     # Lloyd lineage.
     earr = _load_earr(spark, sf_dir)
@@ -1130,7 +1127,7 @@ def semdedup(
     # divide-by-zero — Spark's non-ANSI divide gives NULL there while
     # DuckDB gives NaN (which sorts ABOVE the threshold under its
     # total order), so an unguarded quotient diverges cross-engine on
-    # degenerate input (r11 review; the _ivf_assign precedent). The
+    # degenerate input (as in _ivf_assign). The
     # guard is mirrored in the oracle.
     gnorm = lambda c: F.greatest(_fold_norm(c), F.lit(1e-12))  # noqa: E731
     sim = _fold_dot(F.col("xa"), F.col("xb")) / (
@@ -1225,7 +1222,7 @@ def _unit_earr(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated per element, and CollapseProject re-inlines a
     single-referenced alias straight back into the lambda body —
     turning the normalization into an O(dims^2)-per-row re-computation
-    (probed on 4.1; r11 review). Emitting vnorm alongside v makes the
+    (probed on Spark 4.1). Emitting vnorm alongside v makes the
     alias doubly-referenced, which blocks the inline and keeps the
     norm at one evaluation per row. The oracle twin (_ivf_unit_ev_sql)
     hoists `g` in a subquery the same way."""
@@ -1274,7 +1271,7 @@ def _ivf_assign(
     if checkpoint_assigned:
     # k_ann_ivf consumes assigned four times (sizes, query row,
     # candidates, scoring); single-pass consumers skip the
-    # corpus-sized materialization (r11 review)
+    # corpus-sized materialization
         assigned = assigned.localCheckpoint()
     return assigned, cents
 
@@ -1343,7 +1340,7 @@ def k_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark ML model that forced rows-only evidence is gone.
 
     Query = vec_id 0. nprobe adapts to the MEASURED inverted-list
-    sizes, not a row-count heuristic (round-4 verdict): probe nearest
+    sizes, not a row-count heuristic: probe nearest
     lists (by centroid distance, (d, cid)-tie-broken) until the
     candidate pool holds >= 16x the requested top-k with a floor of
     _IVF_NPROBE_FLOOR lists, so tiny corpora where a 16-way fit

@@ -244,7 +244,7 @@ def shingle_hashes(text_col, k: int = 5):
     """md5 hashes of the k-token (whitespace) shingles of ``text_col``;
     fewer than k tokens degrade to one truncated whole-doc shingle
     (`greatest(n - k + 1, 1)` windows). The ONE engine-side definition
-    of the shingle hash family (r11 review) — shared by k_fingerprint,
+    of the shingle hash family — shared by k_fingerprint,
     `winnow_fingerprints`, and k_corpus_dedup_winnow's containment
     verify, so the verify stage can never hash a different shingle
     space than the candidate generator it verifies. Mirrors the `h`

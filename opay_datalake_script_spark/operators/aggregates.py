@@ -1115,7 +1115,7 @@ def d_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer.
 
     Plan: one distinct-(group, user) base feeds BOTH legs — the true
-    ``countDistinct(user_id)`` baseline (ADVICE r5: the previous
+    ``countDistinct(user_id)`` baseline (the previous
     'exact' column counted distinct 60-bit HASHES, so a collision
     would understate it while both engines still agreed — the
     differential oracle could never catch it) and the distinct-hash
@@ -1238,10 +1238,9 @@ def d_bitmap_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             # floor-div + nonnegative-mod pair (pmod(x,62) = x - 62*floor(x/62))
             # so a negative user_id still lands a valid 0..61 bit in the
             # right block in BOTH engines. Spark div/% AND DuckDB // all
-            # truncate toward zero (ADVICE r5 flagged the sign hazard;
-            # measured, both engines truncate — so floor is spelled
+            # truncate toward zero (measured), so floor is spelled
             # explicitly on both sides rather than trusting either's
-            # native operator).
+            # native operator.
             F.expr("(user_id - pmod(user_id, 62)) div 62").alias("block"),
             F.expr("shiftleft(1L, cast(pmod(user_id, 62) as int))").alias("bit"),
         )

@@ -31,7 +31,7 @@ _DDL_VIEW_REGISTRY: list[str] = []
 _DDL_VIEW_LOCK = threading.Lock()
 # how many PREDECESSOR views stay live alongside the newest one: 2 keeps
 # each of two interleaving callers' outstanding lazy results valid at
-# action time (ADVICE r7) while bounding the catalog at 3 ext_events
+# action time while bounding the catalog at 3 ext_events
 # views across any number of repeated driver/bench runs
 _DDL_VIEW_KEEP = 2
 
@@ -372,13 +372,13 @@ def s_sql_ddl_external_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     why a_sink_partitioned lands parquet instead, and that tradeoff
     belongs to the format, not to the DDL entry point.
 
-    Concurrency + lifetime (ADVICE r5/r6/r7): the landing dir and the
+    Concurrency + lifetime: the landing dir and the
     view name are uuid-fresh per invocation, so one call can never
     overwrite another's CSV or re-point its table mid-plan (the
     a_sink_orc scratch-race class), and the plan still shows the
     DDL-declared CSV FileScan (pinned in test_plans) — the proof that
     the text-DDL path, not a cached DataFrame, feeds the aggregate.
-    Catalog hygiene with a GENERATION LAG (ADVICE r7): each invocation
+    Catalog hygiene with a GENERATION LAG: each invocation
     drops only views more than _DDL_VIEW_KEEP generations old (tracked
     in _DDL_VIEW_REGISTRY; registry mutation AND drops run under the
     lock), so the catalog stays bounded at _DDL_VIEW_KEEP + 1 live
@@ -395,7 +395,7 @@ def s_sql_ddl_external_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The view name is uuid-fresh, so landing-dir write and CREATE VIEW
     # need no lock; the name is registered only AFTER the view exists
-    # (r8 review: registering before CREATE let interleaved callers
+    # (registering before CREATE would let interleaved callers
     # slice a not-yet-created name out of the registry and no-op-drop
     # it, leaving the later-created view permanently untracked and the
     # catalog unbounded).

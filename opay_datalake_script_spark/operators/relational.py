@@ -48,7 +48,7 @@ def global_row_number(
     from pyspark.sql import Window as W
 
     if parts is None:
-        # r11 review: a hardcoded 32 caps the sort at 32 tasks on any
+        # a hardcoded 32 would cap the sort at 32 tasks on any
         # cluster (~3 TB per task at 100 TB). Default to the session's
         # shuffle parallelism — identical plans on the 32-partition
         # test/bench sessions, cluster-sized everywhere else.
@@ -101,7 +101,7 @@ def grouped_row_number(
     ``order_cols`` must make (group_cols + order_cols) a total order
     (unique tiebreaker) — same contract as global_row_number. NULL
     group keys rank as one group, exactly like Window.partitionBy
-    (r11 review: the stats join back is NULL-SAFE — a plain equi-join
+    (the stats join back is NULL-SAFE — a plain equi-join
     would silently drop null-group rows). Cost note: the inner
     global_row_number localCheckpoints the ranged frame once; callers
     that ALSO need an independent global order afterwards (the

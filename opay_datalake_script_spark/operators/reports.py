@@ -1388,12 +1388,11 @@ def r_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(wp.orderBy(F.desc("cts"), F.desc("cid")))
         .alias("rn"),
     )
-    # FLOOR division in exact integer math (ADVICE r5). Note: BOTH
-    # Spark's `div` AND DuckDB's `//` truncate toward zero (measured:
-    # -7 // 3 = -2 in DuckDB) — the advice's floor-vs-truncate split
-    # was backwards, but truncation itself is the wrong semantics for
-    # a money split (the remainder would change sign on refunds), so
-    # both sides now spell floor explicitly: pmod is the nonnegative
+    # FLOOR division in exact integer math. BOTH Spark's `div` AND
+    # DuckDB's `//` truncate toward zero (measured: -7 // 3 = -2 in
+    # DuckDB), so they agree, but truncation is the wrong semantics
+    # for a money split (the remainder would change sign on refunds),
+    # so both sides spell floor explicitly: pmod is the nonnegative
     # remainder, (v4 - pmod(v4, n)) is exactly divisible, and the
     # quotient equals floor(v4 / n) for any sign of v4.
     share = F.expr("(v4 - pmod(v4, n)) div n")
@@ -1485,7 +1484,7 @@ def r_ltv_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cohort_day",
             F.datediff(F.to_date("ts"), F.to_date("s_ts")).alias("day_age"),
         )
-        # decimal accumulator end-to-end (ADVICE r7): the inner long sum
+        # decimal accumulator end-to-end: the inner long sum
         # would wrap silently past int64 at corpus scale while DuckDB
         # widens to HUGEINT; downcast the per-(cohort, age) total back
         # to decimal(20,0) so the window sum widens once, not twice
@@ -1579,7 +1578,7 @@ def r_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("arm"),
         F.round(F.col("value") * 10000, 0).cast("long").alias("v4"),
     )
-    # decimal accumulators (ADVICE r7): long sums wrap silently past
+    # decimal accumulators: long sums wrap silently past
     # int64 at corpus scale (sum of v4^2 ~ 1e16/row gets there first)
     # while the DuckDB oracle widens to HUGEINT; v4 is cast to decimal
     # BEFORE squaring so the per-row product cannot wrap either

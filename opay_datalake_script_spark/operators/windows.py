@@ -44,8 +44,8 @@ from ..sources.io import load
 def e_dedupe_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep the latest row per key — the binlog-snapshot dedup idiom.
 
-    Implemented as a max_by AGGREGATION, not a row_number window
-    (VERDICT r7 item 6, the celebrity-key skew story): an aggregate
+    Implemented as a max_by AGGREGATION, not a row_number window, so
+    one celebrity key cannot pin one task: an aggregate
     gets map-side partial combine, so each input partition emits ONE
     candidate row per key before the shuffle and a 100M-event celebrity
     user costs one tiny merge instead of one task sorting 100M rows —
@@ -303,8 +303,7 @@ def sessionize(
     chunk_days: int | None = 30,
 ) -> DataFrame:
     """Gap-based sessionization over (user_id, ts, event_id) rows, in
-    one of two plan shapes selected by ``chunk_days`` (VERDICT r7
-    item 6 — the celebrity-key skew analysis, measured at sf0.1 r8).
+    one of two plan shapes selected by ``chunk_days``.
 
     The DEFAULT is the chunked, celebrity-immune form with 30-day
     chunks — measured FASTER than the single-window form on the
@@ -427,7 +426,7 @@ def _chunk_id(ts: str, div: int):
     toward zero, so a bare `unix_micros(ts) div n` makes chunk 0 span
     TWO chunk widths for pre-1970 timestamps (negative micros) — the
     one-chunk tail carries would then miss in-window rows across the
-    chunk -1/0 boundary (ADVICE r8). The nonnegative-remainder identity
+    chunk -1/0 boundary. The nonnegative-remainder identity
     `(x - pmod(x, n)) div n` is exact integer floor division for any
     sign (numerator exactly divisible, so truncation == floor — the
     repo-wide idiom, see aggregates.py block split)."""
@@ -436,7 +435,7 @@ def _chunk_id(ts: str, div: int):
 
 
 def _guard_chunk_names(ev: DataFrame, outs, internals=()) -> None:
-    """Collision guard for the chunk-helper family (ADVICE r8): the
+    """Collision guard for the chunk-helper family: the
     helpers inject internal columns (`internals` — the exact generated
     names for THIS call) and the caller-chosen output names into the
     frame; a caller column with one of those names makes the join/select
@@ -491,7 +490,7 @@ def with_chunked_shifts(
 ) -> DataFrame:
     """Append lag-1 / lead-1 columns over each ``key``'s (ts, tie)-ordered
     stream, celebrity-key-immune (the sessionize chunking generalized to
-    the whole lag family — VERDICT r7 item 6 / NOTES r8): shifts are
+    the whole lag family): shifts are
     computed inside (key, chunk_days-day chunk) windows, and only the
     chunk-BOUNDARY rows stitch from a chunk-grain table (per (key,
     chunk): the last lag-source and first lead-source values, shifted at
@@ -1000,8 +999,8 @@ def with_chunked_trailing_range_count(
     """Append the trailing time-window count per key — the number of the
     key's rows with ``ts`` in ``[t - window_micros, t]`` (inclusive both
     ends, peers-at-t included: RANGE semantics) — celebrity-immune via a
-    TIME-BOUNDED TAIL CARRY, the range-frame member of the chunk family
-    (NOTES r8): rows in the last ``window_micros`` of each chunk are
+    TIME-BOUNDED TAIL CARRY, the range-frame member of the chunk
+    family: rows in the last ``window_micros`` of each chunk are
     replicated into the NEXT chunk as frame-feeding carry rows that emit
     no output themselves, so every emitted row's frame is complete
     inside its (key, chunk) window. Requires ``window_micros`` <= the
@@ -1115,8 +1114,8 @@ def chunked_prefix_union(
     chunk_days: int = 30,
 ) -> DataFrame:
     """ONE copy of the celebrity-immune running-associative-union shape
-    shared by the exact and HLL running distinct counts (r9 review: the
-    two variants previously hand-maintained identical scaffolding, so a
+    shared by the exact and HLL running distinct counts (the two
+    variants previously hand-maintained identical scaffolding, so a
     future chunk-width/ordering/join fix had to be applied twice). The
     within-chunk running aggregate rides a (key, chunk_days chunk)
     window ordered by (ts, row_id), each chunk publishes its full

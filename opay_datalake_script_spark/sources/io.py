@@ -1216,7 +1216,7 @@ def a_zorder_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("_pid", "_off")
         total = ranged.count()
         local = F.row_number().over(W.partitionBy("_pid").orderBy(col, "o_orderkey"))
-        # Exact integer bucket math (ADVICE r5): the double quotient
+        # Exact integer bucket math: the double quotient
         # ((rank*256)/total) can round across a bucket boundary past
         # ~2^45 rows (and in principle reach 256); long `div` cannot.
         # rank in [0, total-1] so (rank*256) div total is always <= 255.
@@ -1361,9 +1361,9 @@ def a_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = scratch_dir("binfiles", f"docs_{fixture_tag(sf_dir)}")
     # Clear stale assets first: if the documents fixture is regenerated so
     # a doc_id < 100 disappears, a surviving d*.bin would re-enter via the
-    # glob read-back and fail the oracle diff as a confusing extra row
-    # (ADVICE r12). Driver-side unlink is fine — the landing dir is the
-    # job's own scratch, and this runs before any executor write starts.
+    # glob read-back and fail the oracle diff as a confusing extra row.
+    # Driver-side unlink is fine — the landing dir is the job's own
+    # scratch, and this runs before any executor write starts.
     for stale in glob.glob(os.path.join(out, "*.bin")):
         os.unlink(stale)
     docs = (
@@ -1378,7 +1378,7 @@ def a_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # concurrently ('wb' would interleave, and os.replace would then
         # publish a corrupt file). Each attempt writes its own tmp; the
         # atomic rename makes last-publisher-wins safe because every
-        # attempt writes identical bytes (ADVICE r12).
+        # attempt writes identical bytes.
         from pyspark import TaskContext
 
         ctx = TaskContext.get()

@@ -198,7 +198,7 @@ def i_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch: as soon as the stream splits (multi-file staging,
     maxFilesPerTrigger), batch 2's day-D rows dynamically overwrite the
     dt=D partition batch 1 already wrote, silently dropping rows. The
-    epoch sub-key (the fanout/ADVICE-r5 mechanism) makes batches
+    epoch sub-key (the fan-out sink's mechanism) makes batches
     disjoint while keeping replays idempotent: a replayed batch
     overwrites exactly its own (dt, epoch) slices. The landing dir is
     run-fresh: epochs restart at 0 per checkpoint, so reusing a dir
@@ -858,10 +858,10 @@ def write_epoch_partition(df: DataFrame, epoch_id: int, path: str) -> StructType
     """Idempotent foreachBatch sink write: land ``df`` under its epoch
     partition with dynamic partition overwrite, so an at-least-once
     replay of the same micro-batch REPLACES its own epoch instead of
-    append-duplicating (ADVICE r5), and committed epochs are untouched.
+    append-duplicating, and committed epochs are untouched.
     Tested directly by test_fanout_epoch_write_is_replay_idempotent.
 
-    Known edge (ADVICE r6, accepted): idempotence holds only when the
+    Known edge (accepted): idempotence holds only when the
     replayed batch is non-empty — dynamic overwrite with a zero-row
     DataFrame touches no partitions, so a replay that RECOMPUTES to
     empty (e.g. the batch's rows were filtered out by changed logic
@@ -906,7 +906,7 @@ def i_stream_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch fan-out bug this operator exists to pin.
 
     Both sinks land row-grain parquet KEYED BY EPOCH with dynamic
-    partition overwrite (ADVICE r5): foreachBatch gives at-least-once
+    partition overwrite: foreachBatch gives at-least-once
     delivery, so a batch replayed after a mid-batch failure must
     OVERWRITE its own epoch partition, not append a duplicate — blind
     appends silently double-count on recovery, which is exactly the

@@ -7,12 +7,15 @@ Usage: python scripts/diff_sf_family.py [--sf SF_DIR] ID [ID ...]
        python scripts/diff_sf_family.py --family ml   # built-in lists
 
 Built-in families:
-  ml       the r11 deterministic-ML conversions (Lloyd fit et al.) —
-           never previously run against DuckDB at sf0.1's 2,000x64-d
-           embeddings (verified at sf0.01/sf0.001 only)
+  ml       the jobs on the deterministic Lloyd k-means fit, the IVF
+           quantizer built on it and the per-label centroids; sf0.1's
+           2,000 64-d embeddings are their largest input
   banding  every job on the shared LSH banding helper; sf0.1's
            3921-wide bucket is the one fixture that exercises the
            star + chunked-chain path above the chunk/cap knobs
+
+Every ID runs even when an earlier one fails; the exit code is 1 if
+any ID failed.
 """
 
 import argparse
@@ -84,7 +87,7 @@ def main() -> None:
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
-    failures = 0
+    failed = []
     for name in ids:
         sql = ORACLES.get(name)
         if sql is None:
@@ -93,14 +96,15 @@ def main() -> None:
         t0 = time.perf_counter()
         try:
             df = QUERIES[name](spark, args.sf)
-            assert_matches_oracle(df, con, sql, name=name)
-            n = df.count()
+            n = assert_matches_oracle(df, con, sql, name=name)
             print(f"{name}: HASH-OK {n} rows ({time.perf_counter() - t0:.1f} s)")
-        except AssertionError as exc:
-            failures += 1
+        except Exception as exc:
+            failed.append(name)
             print(f"{name}: FAIL {str(exc)[:300]}")
     spark.stop()
-    sys.exit(1 if failures else 0)
+    if failed:
+        print(f"FAILED: {' '.join(failed)}")
+    sys.exit(1 if failed else 0)
 
 
 if __name__ == "__main__":

@@ -83,10 +83,9 @@ def normalized_rows(pdf):
 
 
 def assert_no_nonscalar_columns(spark_df, name=""):
-    """The driver's pandas canonicalizer crashes on array/map/struct cells
-    (`unhashable type: 'list'`, CORRECTNESS_r01) — reject them locally so
-    pytest green predicts driver green (round-1 lesson: the old list->tuple
-    normalization here masked exactly that crash)."""
+    """A pandas value-hash canonicalizer crashes on array/map/struct cells
+    (`unhashable type: 'list'`) — reject them here (an earlier list->tuple
+    normalization in this comparator masked exactly that crash)."""
     from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
     bad = [
@@ -117,8 +116,8 @@ def _dtype_bucket(dtype):
 
 def assert_matches_oracle(spark_df, oracle_con, sql, name=""):
     """Differential check: Spark result vs DuckDB result, exact values.
-    Returns the matched row count so callers (scripts/diff_ops.py) can
-    report it without re-executing the query (ADVICE r13)."""
+    Returns the matched row count so callers (scripts/diff_sf_family.py)
+    can report it without re-executing the query."""
     assert_no_nonscalar_columns(spark_df, name)
     got = spark_df.toPandas()
     want = oracle_con.sql(sql).df()

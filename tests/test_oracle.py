@@ -215,7 +215,7 @@ def test_lsh_chunked_chain_oracle_mirror(spark):
         ).collect()
     }
     assert got != unchunked, "chunk=4 never split a fixture bucket"
-    # the REAL r11 review bound, asserted per (band, bucket, salt)
+    # the real bound, asserted per (band, bucket, salt)
     # group via the banding relation itself: raw chain links of a
     # c-chunk group = L - c <= L - 1; equivalently the total raw link
     # count across groups is bounded by the unchunked total. Computed

@@ -56,7 +56,7 @@ def test_single_shuffle_aggregations(spark):
     assert count_shuffles(QUERIES["e_dedupe_latest"](spark, SF_DIR)) == 1
     assert count_shuffles(QUERIES["k_exact_dedup"](spark, SF_DIR)) == 1
     assert count_shuffles(QUERIES["d_agg_basic"](spark, SF_DIR)) == 1
-    # celebrity-key immunity (VERDICT r7 item 6): snapshot dedup must be
+    # celebrity-key immunity: snapshot dedup must be
     # a partial-combine AGGREGATE, never a row_number window — a window
     # co-locates a key's full row set and AQE cannot split it
     plan = (
@@ -112,7 +112,7 @@ def test_asof_and_sessionize_chunked_shapes(spark):
 
 
 def test_lsh_single_token_hash_pass(spark):
-    """Optimization r13: the MinHash token-explode + 16-way md5 pass —
+    """The MinHash token-explode + 16-way md5 pass —
     the one full-corpus map pass of the banded dedup path — must run
     exactly ONCE per execution. Before the isnotnull(doc_id) pin in
     minhash_signatures, the star join's inferred filter pushed below
@@ -135,7 +135,7 @@ def test_lsh_single_token_hash_pass(spark):
     # structural pair (Generate node + regexp_replace normalization) per
     # line rather than the exact expression spelling, so a refactor of
     # normalized_text() or a Spark plan-printer change cannot break the
-    # test while two signature passes still fail it (ADVICE r13).
+    # test while two signature passes still fail it.
     gen_lines = [
         ln for ln in plan.splitlines()
         if "Generate" in ln and "regexp_replace" in ln
@@ -176,7 +176,7 @@ def test_lsh_recall_against_exact_jaccard(spark):
 
 
 def test_banded_jaccard_ops_have_no_allpairs_join(spark):
-    """Round-4 verdict: the standalone exact-Jaccard ops may not ship a
+    """The standalone exact-Jaccard ops may not ship a
     per-lang all-pairs self-join (O(n_b^2) per block at 100x). Their
     plans must contain no cartesian/nested-loop join and no join keyed
     on lang — every join must key on band/bucket hashes or doc ids."""
@@ -292,8 +292,8 @@ def test_pipeline_ops_plan_shapes(spark):
 
 def test_pack_sequences_is_sharded(spark):
     """Sequence packing must NOT serialize each language into a single
-    sort task (a lang-partitioned window = #languages tasks forever,
-    VERDICT r2 #4). The full-data window must be keyed by the range-shard
+    sort task (a lang-partitioned window = #languages tasks forever).
+    The full-data window must be keyed by the range-shard
     id `_pid` alongside lang; the only lang-alone window allowed is over
     the tiny per-(shard,lang) offsets table. The checkpointed input hides
     the rangepartitioning node, but the shard key surviving into the
@@ -890,7 +890,7 @@ def test_round5j_new_ops_plan_shapes(spark):
 
 
 def test_block_pair_count_scales_with_input_rows(spark):
-    """VERDICT r6 residual nit: the block-pair cosine scaffold must pick
+    """The block-pair cosine scaffold must pick
     its block count from the data, not a constant — tiles stay ~4096
     rows per side at any corpus size. Pin the clamp's three regimes and
     that the block count actually grows across the threshold, plus the
@@ -916,7 +916,7 @@ def test_block_pair_count_scales_with_input_rows(spark):
 
 
 def test_ddl_external_table_catalog_stays_bounded(spark):
-    """ADVICE r6/r7: repeated s_sql_ddl_external_table invocations must
+    """Repeated s_sql_ddl_external_table invocations must
     not accumulate uuid temp views — each call drops views more than
     _DDL_VIEW_KEEP generations old, so the catalog stays bounded at
     _DDL_VIEW_KEEP + 1 ext_events views across any number of runs, AND
@@ -991,7 +991,7 @@ def test_ann_grid_recall_against_exact_knn(spark):
 
 
 def test_ddl_external_table_concurrent_invocations(spark):
-    """r8 review race: the uuid view name must be registered only AFTER
+    """Registration race: the uuid view name must be registered only AFTER
     the view exists, so concurrent invocations can never evict a
     not-yet-created name (which left the later view untracked and the
     catalog unbounded). Six threads, two build+consume cycles each; no
@@ -1196,7 +1196,7 @@ def test_unhinted_sides_broadcast_under_the_session_threshold(spark):
 
 
 # ---------------------------------------------------------------------------
-# Hard-broadcast site inventory (VERDICT r9 item 2)
+# Hard-broadcast site inventory
 # ---------------------------------------------------------------------------
 # An explicit ``F.broadcast`` is a COMMAND Catalyst obeys and AQE never
 # demotes, so every hard hint must sit on a side whose row count is
@@ -1304,7 +1304,7 @@ def _hard_broadcast_sites():
     Line numbers are deliberately NOT part of the key — the inventory
     must not rot under unrelated edits.
 
-    Matched spellings (r10 review: the literal ``F.broadcast`` filter
+    Matched spellings (the literal ``F.broadcast`` filter
     alone would let a renamed import bypass the inventory): any
     ``*.broadcast(...)`` attribute call (F./functions./sc. — a
     SparkContext broadcast VARIABLE is memory-bounded by the same
@@ -1479,7 +1479,7 @@ def test_ivf_unit_norm_is_hoisted_out_of_the_lambda(spark):
     higher-order-function lambdas are evaluated per element and
     CollapseProject re-inlines a single-referenced alias back into the
     lambda body, turning normalization into O(dims^2) work per row
-    (probed on 4.1 — r11 review). _unit_earr blocks the inline by
+    (probed on Spark 4.1). _unit_earr blocks the inline by
     double-referencing vnorm; this pin fails if anyone 'simplifies'
     that away."""
     from opay_datalake_script_spark.llmdata.similarity import _unit_earr
@@ -1500,7 +1500,7 @@ def test_lateral_subquery_decorrelates(spark):
     anywhere (Catalyst's DecorrelateInnerQuery handles the LIMIT), and
     SOME equi-join on the correlation key present — hash or sort-merge,
     whichever the planner picks at the active SF/config (the invariant
-    is decorrelation, not the join strategy; r11 review)."""
+    is decorrelation, not the join strategy)."""
     plan = (
         QUERIES["s_sql_lateral_subquery"](spark, SF_DIR)
         ._jdf.queryExecution()
@@ -1517,7 +1517,7 @@ def _plan_str(df):
 
 
 def test_q2_keeper_is_composite_key_join_not_window(spark):
-    """VERDICT r11 item 5 — the last UNBOUNDED-width keeper window is
+    """The last UNBOUNDED-width keeper window is
     gone (q17/q21 keep theirs: their partition widths are per-part /
     per-order line counts, measured FLAT across 100x SF — 48/49/53 and
     12/13/17 at sf0.001/0.01/0.1 — where q2's supplier sets grew). t_q02's
@@ -1561,7 +1561,7 @@ def test_q2_keeper_is_composite_key_join_not_window(spark):
 
 
 def test_weighted_median_window_input_is_value_grid(spark):
-    """VERDICT r11 item 5 — d_weighted_median's surviving window is
+    """d_weighted_median's surviving window is
     value-domain-bounded BY PLAN SHAPE, not by hope: the cumulative
     window must consume the per-(group, value) pre-aggregate, never
     the raw lineitem stream. In the executed-plan tree (children print
@@ -1586,7 +1586,7 @@ def test_weighted_median_window_input_is_value_grid(spark):
 
 
 def test_ltv_cohort_window_input_is_age_grid(spark):
-    """VERDICT r11 item 5 — r_ltv_cohort's cumulative-revenue window
+    """r_ltv_cohort's cumulative-revenue window
     partitions on cohort_day ordered by day_age; its width bound is
     the corpus day-span (the (cohort_day x day_age) grid), which only
     holds while the window consumes the per-(cohort_day, day_age)

@@ -652,9 +652,8 @@ def test_attribution_shares_conserve_purchase_totals(spark):
 
 
 def test_floor_division_semantics_on_negative_values(spark):
-    """ADVICE r5 flagged that the attribution split and the bitmap
-    block/bit math only agreed between engines because fixture values
-    are nonnegative. Measured ground truth: BOTH Spark `div` and DuckDB
+    """The attribution split and the bitmap block/bit math once agreed
+    between engines only because fixture values are nonnegative. Measured ground truth: BOTH Spark `div` and DuckDB
     `//` truncate toward zero (-7 // 3 = -2 in DuckDB), so the fix
     spells FLOOR division explicitly on both sides via the nonnegative
     remainder. Pin, on negatives the fixtures never contain:
@@ -970,7 +969,7 @@ def test_e4_wave_display_sums_match_decimal_bruteforce(spark):
 
 
 def test_lsh_bucket_cap_bounds_candidates_and_keeps_connectivity(spark):
-    """The LSH bucket-width guard (VERDICT r6 item 3): a boilerplate
+    """The LSH bucket-width guard: a boilerplate
     corpus (many identical docs -> one giant (band, bucket) group per
     band) must yield O(B) star candidates, not O(B^2) — while still
     keeping the whole cluster one connected component via its hub.
@@ -1038,7 +1037,7 @@ def test_lsh_bucket_cap_bounds_candidates_and_keeps_connectivity(spark):
 
 
 def test_e4_display_rounding_exact_on_half_cent_tails(spark):
-    """Code-review regression (r7): the e4 display rounding must not
+    """Regression: the e4 display rounding must not
     round a DOUBLE quotient — Spark rounds doubles via their shortest
     decimal repr while DuckDB rounds the binary value, so an e4 sum
     ending in ...50 (exactly half a cent) diverged: 6227586950/1e4 gave
@@ -1140,7 +1139,7 @@ def test_round_div_identity_three_way_fuzz(spark):
 
 
 def test_e4_accumulator_survives_past_int64_and_cancellation(spark):
-    """VERDICT r7 item 5: adversarial-magnitude proof of the exact-sum
+    """Adversarial-magnitude proof of the exact-sum
     layer, beyond the seeded identity fuzz.
 
     (a) OVERFLOW: a group whose TRUE e4 sum exceeds int64 must still
@@ -1216,7 +1215,7 @@ def test_e4_accumulator_survives_past_int64_and_cancellation(spark):
 
 
 def test_lsh_chain_salts_reconnect_dense_family(spark, monkeypatch):
-    """VERDICT r7 item 7, measured at sf0.1 this round: when an
+    """Measured at sf0.1: when an
     oversized bucket holds a DENSE near-dup family whose members are
     not all similar to the hub, star-only candidates shatter the
     cluster after exact-Jaccard verification (sf0.1: 407 truth
@@ -1276,7 +1275,7 @@ def test_lsh_chain_salts_reconnect_dense_family(spark, monkeypatch):
 
 
 def test_sessionize_chunked_equals_single_window_on_celebrity_skew(spark):
-    """VERDICT r7 item 6: the chunked sessionizer must (a) produce
+    """The chunked sessionizer must (a) produce
     exactly the single-window form's output on a celebrity-skewed
     corpus — one user owning 20k events across 90 days (incl. a
     continuous multi-day run that chains chunk merges) among 200 normal
@@ -1449,8 +1448,8 @@ def _shift_fixture_rows():
 
 
 def test_chunked_shifts_equal_single_window_on_boundaries_and_celebrity(spark):
-    """`with_chunked_shifts` (NOTES r8: the sessionize chunking
-    generalized to the lag family) must reproduce the classic single
+    """`with_chunked_shifts` (the sessionize chunking generalized to
+    the lag family) must reproduce the classic single
     user-keyed window EXACTLY on boundary-adversarial and celebrity
     inputs, while keying its event-grain window on (user_id, chunk)."""
     from opay_datalake_script_spark.operators.windows import with_chunked_shifts
@@ -1840,7 +1839,7 @@ def test_chunked_trailing_rows_sums_equal_classic(spark):
 
 
 def test_chunk_family_pre_epoch_floor_division(spark):
-    """Chunk ids must be FLOOR division of epoch-micros (ADVICE r8):
+    """Chunk ids must be FLOOR division of epoch-micros:
     Spark's `div` truncates toward zero, so pre-1970 timestamps would
     all collapse into a double-width chunk 0 spanning (-chunk, +chunk),
     breaking the one-chunk tail/boundary carries across the -1/0 chunk
@@ -1917,8 +1916,7 @@ def test_chunk_helper_name_guard(spark):
     """The chunk helpers inject generated internal columns (_m_<out>,
     _lag_<out>, _tr, _cr, ...) plus the caller's output names; a caller
     column with one of those names must raise loudly instead of
-    producing ambiguous-column errors or silently wrong selects
-    (ADVICE r8)."""
+    producing ambiguous-column errors or silently wrong selects."""
     import datetime as dtm
 
     import pytest
@@ -1962,7 +1960,7 @@ def test_chunk_helper_name_guard(spark):
     # the same output name requested twice in ONE call (lags and leads
     # share a key) — previously passed the guard and produced a frame
     # with duplicate columns, failing only on the first downstream
-    # reference with AMBIGUOUS_REFERENCE (r9 review finding)
+    # reference with AMBIGUOUS_REFERENCE
     with pytest.raises(ValueError, match="more than once"):
         with_chunked_shifts(
             ev, "user_id", "ts", "event_id",
@@ -1977,7 +1975,7 @@ def test_chunk_helper_name_guard(spark):
 
 def test_window_distinct_hll_matches_exact_at_fixture_domain(spark):
     """`e_window_distinct_hll` (the bounded-state scale variant of the
-    running distinct count — VERDICT r8 item 7) must agree with the
+    running distinct count) must agree with the
     exact form at the fixture's 5-value priority domain, where lgK=12
     HLL is collision-free: per (custkey, orderkey) the estimate equals
     the exact count. This pins the accepted-error contract's easy end;
@@ -2115,7 +2113,7 @@ def test_banded_point_join_input_guards(spark):
 
 
 def test_banded_point_join_degenerate_skew(spark, tmp_path):
-    """VERDICT r9 item 7: the band join's pathological distribution —
+    """The band join's pathological distribution —
     constant / near-constant values that funnel EVERY point into ONE
     bucket. Three invariants make the shape survivable at scale:
 
@@ -2376,8 +2374,7 @@ def test_winnow_fingerprints_fuzz(spark, texts, kw):
     level; the value-set contract this engine exposes must stay
     deterministic regardless. (k, w) is SAMPLED, not pinned at the
     production point, so a boundary off-by-one that cancels at (5, 4)
-    — e.g. a guard hardcoding 8 instead of k+w-1 — still fails
-    (r10 review)."""
+    — e.g. a guard hardcoding 8 instead of k+w-1 — still fails."""
     import hashlib
 
     from opay_datalake_script_spark.llmdata.textstats import (
@@ -2411,7 +2408,7 @@ def test_winnow_fingerprints_fuzz(spark, texts, kw):
 
 
 def test_winnow_candidates_exclude_null_text(spark):
-    """Null-text docs must be EXCLUDED from winnow banding (r10 review):
+    """Null-text docs must be EXCLUDED from winnow banding:
     Spark's concat_ws('') would otherwise fingerprint a null doc as
     md5('') and pair every null doc with every empty doc through one
     sentinel bucket, while the DuckDB oracle's NULL-propagating md5
@@ -2436,7 +2433,7 @@ def test_winnow_candidates_exclude_null_text(spark):
 
 
 def test_corpus_dedup_winnow_catches_containment_pair(spark, tmp_path):
-    """The two-source pipeline's reason to exist (VERDICT r10 item 5):
+    """The two-source pipeline's reason to exist:
     a short document quoted VERBATIM inside a much longer one shares a
     long exact token run (winnow guarantee: any shared >= 8-token run
     collides a fingerprint bucket) while its whole-document token
@@ -2504,7 +2501,7 @@ def _write_interval_events(path, rows):
 
 
 def test_interval_joins_degenerate_one_cell_skew(spark, tmp_path):
-    """VERDICT r10 item 4 — the banded_point_join degenerate-skew pin,
+    """The banded_point_join degenerate-skew pin,
     ported to the interval family: EVERY interval funnels into ONE grid
     cell (all activity inside a single hour of a single day — the
     flash-sale / bot-burst shape). Invariants, mirroring
@@ -2631,8 +2628,8 @@ def test_interval_joins_degenerate_one_cell_skew(spark, tmp_path):
 
 
 def test_capped_bucket_pairs_null_bucket_key_still_chains(spark):
-    """r11 review: the helper's contract is 'ANY (doc_id, band, bucket)
-    relation'. The r10 window implementation — and the oracle's
+    """The helper's contract is 'ANY (doc_id, band, bucket)
+    relation'. The earlier window implementation — and the oracle's
     PARTITION BY — group a NULL bucket key into ONE group, so an
     oversized null-keyed group chained (it never starred: the star
     self-join is an equi-join that drops null keys on both engines).
@@ -2668,7 +2665,7 @@ def test_capped_bucket_pairs_null_bucket_key_still_chains(spark):
 
 
 def test_grouped_row_number_null_group_matches_window(spark):
-    """r11 review: grouped_row_number must treat a NULL group key as ONE
+    """grouped_row_number must treat a NULL group key as ONE
     group, exactly like the Window.partitionBy semantics it replaces —
     the stats join back is null-safe, so null-group rows neither vanish
     nor each form their own group. Compared against the classic window
@@ -2812,7 +2809,7 @@ def test_semdedup_keeper_invariants(spark):
     uniqueness restriction exists because the keeper rule compares
     RAW cs while the output column is q6-quantized — two raw-distinct
     values collapsing to one displayed value would make the displayed
-    min ambiguous, r11 review), and (3) the fixture genuinely
+    min ambiguous), and (3) the fixture genuinely
     exercises drops (kept=False rows exist; trivially-true kept
     columns would make the oracle differential vacuous, the
     k_embed_near_dup >= 0.9 lesson)."""
@@ -2850,7 +2847,7 @@ def test_kmeans_and_semdedup_plans_stay_distributed(spark):
     centroid fan-out is a K-row scalar-bounded BNLJ — the e_ntile
     adjudication class) and the SemDeDup candidate stage must stay the
     shared capped equi-join, not an all-pairs theta join. Coverage
-    split (r11 review): k_kmeans_clusters' LAZY plan carries the whole
+    split: k_kmeans_clusters' LAZY plan carries the whole
     fit, so it is the check on the Lloyd stages; k_semdedup's
     localCheckpoints truncate the fit out of its inspected plan, so
     its assertion covers only the post-checkpoint candidate /
@@ -2970,7 +2967,7 @@ def test_np_half_away_int_guard_and_boundaries():
 
 
 def test_attribution_degenerate_bot_user_window_grain(spark, tmp_path):
-    """VERDICT r11 item 5 — r_attribution_linear's surviving window
+    """r_attribution_linear's surviving window
     partitions on pid (purchase id); its width equals the purchase's
     matched-click fan-in, which is bounded by ONE USER'S 24 h click
     volume, not by any corpus property. Pin that adjudication on the

@@ -1,12 +1,17 @@
 """Registry contract tests: registration order, the duplicate-ID guard,
 the banding-oracle mirror tripwire and the plan-shape detectors that
-tests/test_oracle.py runs on every job."""
+tests/test_oracle.py runs on every job; and a guard that no Python file
+cites a deleted round-result file."""
 
 from __future__ import annotations
 
 import builtins
 import json
 import os
+import re
+import subprocess
+
+import pytest
 
 import __spark_entry__ as entry
 from opay_datalake_script_spark import registry
@@ -18,34 +23,24 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_registry_order_is_registration_order(tmp_path, monkeypatch):
     """load_all_queries() returns QUERIES in registration order, opens no
     file, and so cannot be reordered by a result file an earlier run left
-    in the repo root or the working directory; oracle_sql() keeps the
-    same order."""
+    in the working directory; oracle_sql() keeps the same order."""
     registry.load_all_queries()
     expected = list(registry.QUERIES)
     failed_row = {expected[-1]: {"rows_match": False, "hash_match": False,
                                  "err": "mismatch"}}
-    leftovers = [os.path.join(_ROOT, "CORRECTNESS_r999.json"),
-                 str(tmp_path / "CORRECTNESS_r999.json")]
+    (tmp_path / "query_results.json").write_text(json.dumps(failed_row))
     monkeypatch.chdir(tmp_path)
-    try:
-        for path in leftovers:
-            with open(path, "w") as fh:
-                json.dump(failed_row, fh)
 
-        def no_open(*args, **kwargs):
-            raise AssertionError(f"load_all_queries() opened {args[:1]}")
+    def no_open(*args, **kwargs):
+        raise AssertionError(f"load_all_queries() opened {args[:1]}")
 
-        with monkeypatch.context() as m:
-            m.setattr(builtins, "open", no_open)
-            got = list(registry.load_all_queries())
-        assert got == expected
-        assert list(entry.oracle_sql()) == [
-            n for n in expected if n in registry.ORACLES
-        ]
-    finally:
-        for path in leftovers:
-            if os.path.exists(path):
-                os.remove(path)
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", no_open)
+        got = list(registry.load_all_queries())
+    assert got == expected
+    assert list(entry.oracle_sql()) == [
+        n for n in expected if n in registry.ORACLES
+    ]
 
 
 def test_scale_shape_detectors():
@@ -96,8 +91,8 @@ Window [max(x#1) windowspecdefinition(ts#2 ASC NULLS FIRST, ...) AS mx#3], [ts#2
 
 
 def test_every_banding_oracle_carries_cap_and_chains():
-    """Mirror-drift tripwire (bitten twice: r7 review item 2 and the r8
-    corpus-build oracle): ANY registered oracle that hand-rolls the
+    """Mirror-drift tripwire (hand-rolled copies drifted twice, once in
+    the corpus-build oracle): ANY registered oracle that hand-rolls the
     (band, bucket) banding window must also carry the bucket cap AND
     the salted-chain CTE, i.e. stay structurally in sync with
     band_candidate_pairs. Oracles using the shared _BAND_CAND_CTES
@@ -136,8 +131,6 @@ def test_register_rejects_duplicate_ids():
     predecessor out of the registry for a full round (caught by review
     in round 8). Same-function re-registration stays idempotent (module
     re-execution must not false-positive)."""
-    import pytest
-
     from opay_datalake_script_spark.registry import QUERIES, load_all_queries, register
 
     load_all_queries()
@@ -150,3 +143,23 @@ def test_register_rejects_duplicate_ids():
     # idempotent path: re-decorating the registered function itself
     fn = QUERIES[existing]
     assert register(existing)(fn) is fn
+
+
+def test_no_python_file_cites_a_deleted_round_file():
+    """The per-round result files once kept in the repo root are gone, so
+    no tracked Python file may cite one, by name or by round tag. The
+    names are upper-cased at run time so this file does not match."""
+    tags = "|".join(n.upper() for n in ("correctness", "bench", "perf", "verify",
+                                        "notes", "optimization", "advice", "verdict"))
+    files = "|".join(n.upper() for n in ("advice", "verdict", "leakcheck", "copycheck"))
+    cited = re.compile(rf"(?:{tags})[-_ ]?r[0-9{{]|\b(?:{files})\b|"
+                       + "progress".upper() + r"\.jsonl")
+    ls = subprocess.run(["git", "ls-files", "*.py"], cwd=_ROOT,
+                        capture_output=True, text=True)
+    if ls.returncode:
+        pytest.skip("not a git checkout")
+    hits = [f"{p}:{i}" for p in ls.stdout.split()
+            if os.path.exists(os.path.join(_ROOT, p))
+            for i, line in enumerate(open(os.path.join(_ROOT, p), encoding="utf-8"), 1)
+            if cited.search(line)]
+    assert not hits, hits

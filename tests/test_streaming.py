@@ -319,7 +319,7 @@ def test_stream_stream_left_join_parity(spark, tmp_path):
 
 
 def test_fanout_epoch_write_is_replay_idempotent(spark, tmp_path):
-    """The ADVICE-r5 fan-out fix, exercised directly: foreachBatch is
+    """The fan-out sink's epoch-keyed overwrite, exercised directly: foreachBatch is
     at-least-once, so writing the SAME epoch twice (a replay after a
     mid-batch failure) must leave exactly one copy of that epoch's
     rows, while other epochs stay untouched. A blind append would
