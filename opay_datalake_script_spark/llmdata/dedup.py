@@ -500,16 +500,15 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     """k=16 md5-derived MinHash signature for (doc_id, text) rows —
     the reusable Spark-side twin of the `mh_sig` oracle CTE.
 
-    The pinned isnotnull(doc_id) filter is a canonical-plan anchor
-    (optimization round 13, guide §2.4/§7.2): the capped banding
-    expansion consumes this subtree from several join branches, and
-    Catalyst pushes the star join's INFERRED isnotnull(doc_id) below
-    the signature aggregation on some branches but not others (the
-    chain branch is null-safe and infers nothing) — so two otherwise
-    identical signature exchanges canonicalized differently and the
-    token explode + 16-way md5 hash pass (the one full-corpus map pass
-    of the whole dedup path) executed TWICE per run even under AQE
-    stage reuse. Filtering here makes every branch identical: one
+    The pinned isnotnull(doc_id) filter is a canonical-plan anchor:
+    the capped banding expansion consumes this subtree from several
+    join branches, and Catalyst pushes the star join's INFERRED
+    isnotnull(doc_id) below the signature aggregation on some branches
+    but not others (the chain branch is null-safe and infers nothing)
+    — so two otherwise identical signature exchanges canonicalized
+    differently and the token explode + 16-way md5 hash pass (the one
+    full-corpus map pass of the whole dedup path) executed TWICE per
+    run even under AQE stage reuse. Filtering here makes every branch identical: one
     ReusedExchange, one token-hash pass. Result-identical — a null
     doc_id can never appear in a candidate pair (doc_a < doc_b and
     least/greatest both reject nulls), and no fixture has one."""

@@ -297,16 +297,8 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edge generation: MinHash-LSH banding proposes candidate pairs
     (band-bucket join, all-pairs only inside a bucket; see
     `_component_candidates`), then the exact token-set Jaccard scorer
-    verifies ONLY those candidates.
-
-    Iterative min-label propagation: each round is one distributed
-    join+union+min-aggregate; the driver only steers convergence (the
-    label sum is monotone non-increasing, so an unchanged sum means a
-    fixed point — one scalar per round crosses to the driver, never
-    rows). Rounds needed = graph diameter, which for near-dup clusters
-    is tiny; capped at 15. localCheckpoint truncates the growing join
-    lineage each round — without it the plan re-executes from round 0.
-    The DuckDB oracle computes the same fixed point with a recursive CTE.
+    verifies ONLY those candidates. The components are
+    `min_label_components` over the verified pairs.
     """
     d = load(spark, sf_dir, "documents")
     toks = d.select(
@@ -327,22 +319,7 @@ def k_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = exact_jaccard_scores(
         toks, cand, "tset", min_jaccard=0.6, same_lang=True
     ).select("doc_a", "doc_b")
-    fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    # Edges are re-joined every propagation round: pin their partitioning
-    # on the join key so each round's join runs wide, not on the
-    # AQE-coalesced remnant of the verify stage.
-    edges = (
-        fwd.unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .repartition(64, F.col("a"))
-        .localCheckpoint()
-    )
-
-    labels = load(spark, sf_dir, "documents").select(
-        "doc_id", F.col("doc_id").alias("comp")
-    )
-    return _propagate_min_labels(labels, edges)
+    return min_label_components(d, pairs)
 
 
 def _component_candidates(docs: DataFrame) -> DataFrame:
@@ -357,18 +334,38 @@ def _component_candidates(docs: DataFrame) -> DataFrame:
     return band_candidate_pairs(docs, max_bucket_size=1 << 62, bands=ONE_HASH_BANDS)
 
 
-def _propagate_min_labels(labels: DataFrame, edges: DataFrame, max_rounds: int = 15) -> DataFrame:
-    """Iterative min-label propagation to a fixed point: each round is one
-    distributed join+union+min-aggregate; the label sum is monotone
-    non-increasing, so an unchanged sum means convergence (one scalar per
-    round crosses to the driver, never rows). localCheckpoint truncates
-    the growing lineage each round. ``edges`` must be symmetric (a, b).
+def min_label_components(
+    nodes: DataFrame, pairs: DataFrame, max_rounds: int = 15
+) -> DataFrame:
+    """Connected components of the graph whose vertices are ``nodes``'
+    ``doc_id`` and whose edges are the undirected verified ``pairs``
+    (``doc_a``, ``doc_b``): every node labeled with the min ``doc_id`` of
+    its component, as ``(doc_id, comp)``. ``comp == doc_id`` marks the
+    keeper; a node with no pair keeps its own id. Pairs may repeat or
+    come in both directions.
+
+    The symmetric edge list ``(a, b)`` is hash-partitioned on ``a`` (the
+    key every round joins on; AQE sizes the partition count) and
+    localCheckpointed once, since every round re-reads it. Labels start
+    as ``comp = doc_id``; each round is one distributed
+    join+union+min-aggregate, localCheckpointed so the lineage does not
+    grow. The label sum is monotone non-increasing, so an unchanged sum
+    means a fixed point: one scalar per round crosses to the driver,
+    never rows. Rounds needed = the largest hop count from a component's
+    min node, plus the round that sees no change; near-dup clusters
+    need few (k_dedup_components: 4 at sf0.01, 5 at sf0.1). The DuckDB
+    oracles compute the same fixed point with a recursive CTE.
 
     Raises RuntimeError when the fixed point is not reached within
-    ``max_rounds`` (component diameter > cap): an unconverged label set
-    is a silently-wrong answer — rounds needed = cluster diameter (tiny
-    for near-dup graphs), so callers should raise the cap, not ship
-    partial components."""
+    ``max_rounds``: an unconverged label set is a silently-wrong answer,
+    so callers should raise the cap, not ship partial components."""
+    edges = (
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+        .repartition(F.col("a"))
+        .localCheckpoint()
+    )
+    labels = nodes.select("doc_id", F.col("doc_id").alias("comp"))
     prev_sum = None
     for _ in range(max_rounds):
         msgs = labels.join(edges, labels.doc_id == edges.a).select(
@@ -387,6 +384,52 @@ def _propagate_min_labels(labels: DataFrame, edges: DataFrame, max_rounds: int =
     raise RuntimeError(
         f"label propagation did not converge within {max_rounds} rounds "
         "(component diameter exceeds the cap); raise max_rounds"
+    )
+
+
+def exact_keepers(df: DataFrame, hash_col: str) -> DataFrame:
+    """``df`` plus ``exact_keeper``: the min ``doc_id`` among the rows
+    sharing ``hash_col`` (the content hash of the exact-dedup stage).
+
+    A groupBy + NULL-SAFE join back, not min() OVER (PARTITION BY h): a
+    boilerplate doc duplicated tens of millions of times is ONE hash
+    partition, which a window pins to one task while the aggregate
+    partial-combines and the join is AQE-skew-splittable. The null-safe
+    join keeps null-hash rows grouped as one family, as the oracles'
+    PARTITION BY / GROUP BY treat NULL."""
+    keepers = (
+        df.groupBy(hash_col)
+        .agg(F.min("doc_id").alias("exact_keeper"))
+        .withColumnRenamed(hash_col, "_kh")
+    )
+    return df.join(keepers, F.col(hash_col).eqNullSafe(F.col("_kh"))).drop("_kh")
+
+
+def dedup_verdicts(keepmap: DataFrame, comp: DataFrame) -> DataFrame:
+    """Every doc of ``keepmap`` (``exact_keepers`` output) with its
+    ``canonical_id`` (its exact keeper's near-dup component label from
+    ``min_label_components`` over the exact survivors), a ``kept`` flag,
+    and the ``reason`` it was dropped: 'exact_dup' | 'near_dup' | 'kept'.
+    Exact dups inherit their keeper's component, so transitively
+    duplicate docs collapse to one canonical id."""
+    canon = comp.select(
+        F.col("doc_id").alias("exact_keeper"), F.col("comp").alias("canonical_id")
+    )
+    return (
+        keepmap.select("doc_id", "exact_keeper")
+        .join(canon, "exact_keeper")
+        .select(
+            "doc_id",
+            "canonical_id",
+            (
+                (F.col("doc_id") == F.col("exact_keeper"))
+                & (F.col("canonical_id") == F.col("doc_id"))
+            ).alias("kept"),
+            F.when(F.col("doc_id") != F.col("exact_keeper"), "exact_dup")
+            .when(F.col("canonical_id") != F.col("doc_id"), "near_dup")
+            .otherwise("kept")
+            .alias("reason"),
+        )
     )
 
 
@@ -432,36 +475,18 @@ def _propagate_min_labels(labels: DataFrame, edges: DataFrame, max_rounds: int =
 def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end corpus dedup materialization — the composition a real
     corpus build runs, as ONE dataflow: (1) exact dedup on the content
-    hash (keeper = min doc_id per hash), (2) near-dup connected
-    components over the exact-survivors only, with edges proposed by
-    MinHash-LSH banding and verified by exact token Jaccard >= 0.6,
-    (3) every document labeled with its canonical doc, a kept flag, and
-    the reason it was dropped ('exact_dup' | 'near_dup' | 'kept').
+    hash (`exact_keepers`), (2) near-dup connected components
+    (`min_label_components`) over the exact survivors only, with edges
+    proposed by MinHash-LSH banding and verified by exact token Jaccard
+    >= 0.6, (3) every document labeled by `dedup_verdicts` with its
+    canonical doc, a kept flag, and the reason it was dropped.
 
-    At 100 TB each stage keeps its operator's scale shape: the exact
-    keeper is a partial-combining aggregate on uniform 128-bit keys
-    joined back null-safely (window-free since r11 — a mega duplicate
-    family cannot pin one task); the near-dup stage runs on
-    the (smaller) survivor set with banded candidates, never all-pairs;
-    label propagation is the same driver-steered fixed point as
-    k_dedup_components. Exact dups inherit their keeper's component, so
-    transitively-duplicate docs collapse to one canonical id.
+    At 100 TB the near-dup stage runs on the (smaller) survivor set with
+    banded candidates, never all-pairs.
     """
     d = load(spark, sf_dir, "documents")
     h = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
-    # Keeper via groupBy + NULL-SAFE join back, not min() OVER
-    # (PARTITION BY h) (r11, same rationale as capped_bucket_pairs'
-    # window-free sizing): a boilerplate doc duplicated tens of
-    # millions of times is ONE hash partition, which a window pins to
-    # one task while the aggregate partial-combines and the join is
-    # AQE-skew-splittable. eqNullSafe keeps null-hash (null-text) docs
-    # grouped as one family, exactly like the window and the oracle's
-    # PARTITION BY both treat NULL.
-    norm = d.select("doc_id", "lang", "text", h.alias("h"))
-    keepers = norm.groupBy("h").agg(
-        F.min("doc_id").alias("exact_keeper")
-    ).withColumnRenamed("h", "kh")
-    keepmap = norm.join(keepers, F.expr("h <=> kh")).drop("kh")
+    keepmap = exact_keepers(d.select("doc_id", "lang", "text", h.alias("h")), "h")
     surv = keepmap.where(F.col("doc_id") == F.col("exact_keeper"))
 
     # Band only the exact-dedup survivors: at scale the LSH pass must not
@@ -478,31 +503,7 @@ def k_corpus_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = exact_jaccard_scores(
         toks, cand, "tset", min_jaccard=0.6, same_lang=True
     ).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .localCheckpoint()
-    )
-    labels = surv.select("doc_id", F.col("doc_id").alias("comp"))
-    comp = _propagate_min_labels(labels, edges).select(
-        F.col("doc_id").alias("exact_keeper"), F.col("comp").alias("canonical_id")
-    )
-    return (
-        keepmap.select("doc_id", "exact_keeper")
-        .join(comp, "exact_keeper")
-        .select(
-            "doc_id",
-            "canonical_id",
-            (
-                (F.col("doc_id") == F.col("exact_keeper"))
-                & (F.col("canonical_id") == F.col("doc_id"))
-            ).alias("kept"),
-            F.when(F.col("doc_id") != F.col("exact_keeper"), "exact_dup")
-            .when(F.col("canonical_id") != F.col("doc_id"), "near_dup")
-            .otherwise("kept")
-            .alias("reason"),
-        )
-    )
+    return dedup_verdicts(keepmap, min_label_components(surv, pairs))
 
 
 @register(
@@ -587,9 +588,10 @@ def k_quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: stage 1 is embarrassingly parallel in the scan; stage 2
     is one partial-combining keeper aggregate on the uniform 128-bit
-    content hash, joined back null-safely (window-free since r11).
-    Feed the survivors (kept = true) to k_corpus_dedup_pipeline for the
-    banded near-dup stage.
+    content hash, joined back null-safely (window-free, so a mega
+    duplicate family cannot pin one task). Feed the survivors
+    (kept = true) to k_corpus_dedup_pipeline for the banded near-dup
+    stage.
     """
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
@@ -601,7 +603,7 @@ def k_quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         h.alias("h"),
         (n_tok.between(20, 1000) & (ttr > 0.2)).alias("q_pass"),
     )
-    # window-free keeper (r11): min over the q_pass rows per hash via
+    # window-free keeper: min over the q_pass rows per hash via
     # groupBy + LEFT null-safe join back — identical to the old
     # min(when(q_pass, doc_id)) OVER (PARTITION BY h) including its
     # null cases (a group with no q_pass member, or a null hash, gets
@@ -878,7 +880,7 @@ def k_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameterizes it.
 
     Keeper selection is top-1-per-component — an AGGREGATE in
-    disguise, so it rides max_by + join back (r11; the e_dedupe_latest
+    disguise, so it rides max_by + join back (the e_dedupe_latest
     form) instead of a comp-partitioned row_number window: a
     boilerplate mega-family that survives to one giant component is
     exactly the degenerate case this repo's dedup stack guards
@@ -1075,11 +1077,10 @@ def k_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_build_oracle() -> str:
-    # mirror the engine's bucket-width star cap, its salted chains, AND
-    # (r11) the chunked chain ordering — via the SHARED _band_cand_ctes
-    # builder with src='surv' instead of the hand-rolled copy this
-    # oracle carried through r8-r10 (the copy lagged the r11 chunk
-    # scheme within hours of the scheme changing)
+    # mirror the engine's bucket-width star cap, its salted chains and
+    # the chunked chain ordering via the SHARED _band_cand_ctes builder
+    # with src='surv': a hand-rolled copy of those CTEs here once lagged
+    # a change of the chunk scheme
     from .dedup import _band_cand_ctes
 
     return f"""
@@ -1164,12 +1165,12 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
       1. quality gate (k_quality_score's length band + TTR floor,
          map-only),
-      2. exact dedup among gate survivors (min-doc_id keeper per
-         normalized hash — uniform 128-bit key window),
+      2. exact dedup among gate survivors (`exact_keepers` on the
+         normalized hash),
       3. near-dup connected components among exact survivors (banded
          md5-MinHash candidates -> exact Jaccard >= 0.6 verify ->
-         driver-steered min-label fixed point; candidates only ever
-         come from band buckets, never all-pairs),
+         `min_label_components`; candidates only ever come from band
+         buckets, never all-pairs),
       4. temperature-scaled source mixture over the kept set
          (k_temperature_mixture's p^0.7 rule with the e6-quantized
          normalizer, 150-doc budget),
@@ -1183,12 +1184,10 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     already neutralized stage-by-stage: md5 hash family, e6 weight
     quantization, unique-key rank tiebreaks.
 
-    At 100 TB: stages 1-2 are one scan + one hash keeper aggregate
-    (window-free: a mega duplicate family partial-combines instead of
-    pinning one window task); stage 3 runs
-    on the survivor set with banded equi-join candidates; stage 4's
-    tables are source-domain-bounded; stage 5 is the range-partitioned
-    global rank. Nothing materializes on the driver but component
+    At 100 TB: stages 1-2 are one scan + one hash keeper aggregate;
+    stage 3 runs on the survivor set with banded equi-join candidates;
+    stage 4's tables are source-domain-bounded; stage 5 is the
+    range-partitioned global rank. Nothing materializes on the driver but component
     convergence scalars and the source quota map.
     """
     from ..operators.relational import global_row_number, grouped_row_number
@@ -1203,15 +1202,7 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(normalized_text().cast("binary")).alias("h"),
     ).where(n_tok.between(20, 1000) & (ttr > 0.2))
 
-    # window-free keeper (r11): groupBy + null-safe join back — see
-    # k_corpus_dedup_pipeline's keepmap note (h is non-null here since
-    # the quality gate already drops null text, but the form is kept
-    # identical across all three keeper sites).
-    keepers = gate.groupBy("h").agg(
-        F.min("doc_id").alias("keeper")
-    ).withColumnRenamed("h", "kh")
-    keepmap = gate.join(keepers, F.expr("h <=> kh")).drop("kh")
-    surv = keepmap.where(F.col("doc_id") == F.col("keeper"))
+    surv = exact_keepers(gate, "h").where(F.col("doc_id") == F.col("exact_keeper"))
 
     cand = band_candidate_pairs(surv.select("doc_id", "text"))
     tsets = surv.select(
@@ -1225,13 +1216,7 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = exact_jaccard_scores(
         tsets, cand, "tset", min_jaccard=0.6, same_lang=True
     ).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
-        .localCheckpoint()
-    )
-    labels = surv.select("doc_id", F.col("doc_id").alias("comp"))
-    comp = _propagate_min_labels(labels, edges)
+    comp = min_label_components(surv, pairs)
     kept = (
         surv.join(
             comp.where(F.col("comp") == F.col("doc_id")).select("doc_id"), "doc_id"
@@ -1256,7 +1241,7 @@ def k_corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     order_key = F.md5(
         F.concat(F.lit("build:"), F.col("doc_id").cast("string")).cast("binary")
     )
-    # grouped rank (r11): n_keep is join-derived, so WindowGroupLimit
+    # grouped rank: n_keep is join-derived, so WindowGroupLimit
     # cannot bound a source-partitioned window — see k_domain_mixture.
     sampled = (
         grouped_row_number(kept, ["source"], [order_key, "doc_id"])
@@ -1549,43 +1534,36 @@ def _corpus_dedup_winnow_oracle() -> str:
 
 @register("k_corpus_dedup_winnow", oracle=_corpus_dedup_winnow_oracle())
 def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus dedup with a TWO-SOURCE candidate stage: exact dedup, then near-dup edges proposed by the union of
-    (a) md5-MinHash LSH bands — whole-document similarity — and
-    (b) winnow fingerprint buckets — shared exact >= 8-token runs, the
-    partial-containment signal whole-doc MinHash dilutes away on long
-    documents. A pair from EITHER source survives when the exact verify
-    passes: token-set Jaccard >= 0.6 (the similarity family's edge) OR
-    5-token-shingle containment |S_A ∩ S_B| / min(|S_A|, |S_B|) >= 0.5
-    (the quoted-passage / boilerplate-splice edge only the winnow
-    source reliably proposes). Containment is measured in SHINGLE
-    space, matching the winnow fingerprints' own granularity: on the
-    fixture's small unigram vocabulary, token-set containment is ~1
-    for almost every pair (measured: 494/500 docs in one cluster),
-    while shingle containment is sharply bimodal (25 true containment
-    pairs at sf0.01, nothing between 0.3 and 0.9).
-    Verified edges resolve to connected components; every doc gets its
-    canonical id, a kept flag, and the drop reason — the same contract
-    as `k_corpus_dedup_pipeline`, which this op upgrades with the
-    second candidate family and a fully oracle-mirrored candidate
-    stage (that one's Spark-ML LSH candidates cannot be hash-checked;
-    both sources here are md5-derived and mirrored CTE-for-CTE).
+    """Corpus dedup with a TWO-SOURCE candidate stage: exact dedup, then
+    near-dup edges proposed by the union of (a) md5-MinHash LSH bands
+    — whole-document similarity — and (b) winnow fingerprint buckets
+    — shared exact >= 8-token runs, the partial-containment signal
+    whole-doc MinHash dilutes away on long documents. A pair from
+    EITHER source survives when the exact verify passes: token-set
+    Jaccard >= 0.6 (the similarity family's edge) OR 5-token-shingle
+    containment |S_A ∩ S_B| / min(|S_A|, |S_B|) >= 0.5 (the
+    quoted-passage / boilerplate-splice edge only the winnow source
+    reliably proposes). Containment is measured in SHINGLE space,
+    matching the winnow fingerprints' own granularity: on the fixture's
+    small unigram vocabulary, token-set containment is ~1 for almost
+    every pair (measured: 494/500 docs in one cluster), while shingle
+    containment is sharply bimodal (25 true containment pairs at
+    sf0.01, nothing between 0.3 and 0.9).
+    Verified edges resolve to connected components
+    (`min_label_components`) and every doc gets its `dedup_verdicts`
+    row — the same contract as `k_corpus_dedup_pipeline`, which this op
+    extends with the second candidate family. Both candidate sources
+    here are banded equi-joins behind the shared capped star +
+    chunked-chain skew guard, mirrored CTE-for-CTE by the oracle.
 
-    100 TB shape: exact keeper = groupBy(content-hash) + join back
-    (window-free — same rationale as capped_bucket_pairs' r11 sizing);
-    both candidate sources are banded equi-joins with the shared
-    capped star + chunked-chain skew guard; exact verification touches
-    banded candidates only; components = driver-steered min-label
-    propagation with localCheckpoint. Null-text docs are excluded up
-    front on both engines (Spark would md5 them via concat_ws('');
-    DuckDB's md5 propagates NULL — the r10 winnow divergence).
+    Null-text docs are excluded up front on both engines: Spark would
+    md5 them via concat_ws(''), while DuckDB's md5 propagates NULL.
     """
     from .dedup import band_candidate_pairs, pair_sides, winnow_candidate_pairs
 
     d = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     ch = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
-    norm = d.select("doc_id", "lang", "text", ch.alias("ch"))
-    keepers = norm.groupBy("ch").agg(F.min("doc_id").alias("exact_keeper"))
-    keepmap = norm.join(keepers, "ch")
+    keepmap = exact_keepers(d.select("doc_id", "lang", "text", ch.alias("ch")), "ch")
     surv = keepmap.where(F.col("doc_id") == F.col("exact_keeper"))
 
     sdocs = surv.select("doc_id", "text")
@@ -1634,31 +1612,4 @@ def k_corpus_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.where((jac >= 0.6) | (cont >= 0.5))
         .select("doc_a", "doc_b")
     )
-    edges = (
-        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
-        )
-        .repartition(64, F.col("a"))
-        .localCheckpoint()
-    )
-    labels = surv.select("doc_id", F.col("doc_id").alias("comp"))
-    comp = _propagate_min_labels(labels, edges).select(
-        F.col("doc_id").alias("exact_keeper"), F.col("comp").alias("canonical_id")
-    )
-    return (
-        keepmap.select("doc_id", "exact_keeper")
-        .join(comp, "exact_keeper")
-        .select(
-            "doc_id",
-            "canonical_id",
-            (
-                (F.col("doc_id") == F.col("exact_keeper"))
-                & (F.col("canonical_id") == F.col("doc_id"))
-            ).alias("kept"),
-            F.when(F.col("doc_id") != F.col("exact_keeper"), "exact_dup")
-            .when(F.col("canonical_id") != F.col("doc_id"), "near_dup")
-            .otherwise("kept")
-            .alias("reason"),
-        )
-    )
+    return dedup_verdicts(keepmap, min_label_components(surv, pairs))

@@ -404,24 +404,15 @@ def k_embed_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: edges come from the distributed block-pair matmul (or the
     IVF-bucketed variant when block count grows), never a driver-side
-    similarity matrix; label propagation is the same driver-steered
-    fixed point as the token pipeline — one scalar per round to the
-    driver, localCheckpoint truncating lineage.
+    similarity matrix; the components are `min_label_components`.
     """
-    from .pipeline import _propagate_min_labels
+    from .pipeline import min_label_components
 
-    pairs = k_embed_near_dup(spark, sf_dir).select("vec_a", "vec_b")
-    edges = (
-        pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
-        .unionByName(
-            pairs.select(F.col("vec_b").alias("a"), F.col("vec_a").alias("b"))
-        )
-        .localCheckpoint()
+    pairs = k_embed_near_dup(spark, sf_dir).select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    labels = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"), F.col("vec_id").alias("comp")
-    )
-    return _propagate_min_labels(labels, edges).select(
+    nodes = load(spark, sf_dir, "embeddings").select(F.col("vec_id").alias("doc_id"))
+    return min_label_components(nodes, pairs).select(
         F.col("doc_id").alias("vec_id"), "comp"
     )
 

@@ -1187,44 +1187,27 @@ def a_zorder_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the data so every sf works) and must hash-equal the plain
     filter over the source.
 
-    The per-dimension rank uses the distributed two-phase prefix-sum
-    (range partition + per-partition row_number + broadcast offsets)
-    — no single-partition window at any scale; the global min/max
-    bounds are a 1-row broadcast.
+    The per-dimension rank is `global_row_number` over the total order
+    (dimension, o_orderkey) — no single-partition window at any scale;
+    the global min/max bounds are a 1-row broadcast.
     """
-    from pyspark.sql import Window as W
+    from ..operators.relational import global_row_number
 
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
     out = scratch_path("zorder", f"orders_clustered_{fixture_tag(sf_dir)}")
+    total = o.count()
 
-    def rank_bucket(df, col, alias, parts=16):
-        ranged = df.repartitionByRange(parts, col).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-        ranged = ranged.localCheckpoint()
-        sizes = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-        offs = sizes.withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_n").over(
-                    W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        ).select("_pid", "_off")
-        total = ranged.count()
-        local = F.row_number().over(W.partitionBy("_pid").orderBy(col, "o_orderkey"))
+    def rank_bucket(df, col, alias):
         # Exact integer bucket math: the double quotient
         # ((rank*256)/total) can round across a bucket boundary past
         # ~2^45 rows (and in principle reach 256); long `div` cannot.
-        # rank in [0, total-1] so (rank*256) div total is always <= 255.
+        # rank = rn - 1 in [0, total-1], so (rank*256) div total <= 255.
         return (
-            ranged.join(F.broadcast(offs), "_pid")
-            .withColumn("_rank", (local + F.col("_off") - 1).cast("long"))
-            .withColumn(alias, F.expr(f"cast((_rank * 256) div {total} as int)"))
-            .drop("_pid", "_off", "_rank")
+            global_row_number(df, col, "o_orderkey", parts=16)
+            .withColumn(alias, F.expr(f"cast(((rn - 1) * 256) div {total} as int)"))
+            .drop("rn")
         )
 
     bx = rank_bucket(o, "o_custkey", "bx")

@@ -6,7 +6,6 @@ and the differential comparator that mirrors the driver's check
 from __future__ import annotations
 
 import math
-import os
 
 import duckdb
 import pytest
@@ -14,7 +13,7 @@ import pytest
 from opay_datalake_script_spark import get_spark
 from opay_datalake_script_spark.schemas import TABLES
 
-SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = "/root/testdata/sf0.01"
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 

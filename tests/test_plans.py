@@ -1294,7 +1294,6 @@ _HARD_BROADCAST_SITES = {
     ("operators/windows.py", "e_anomaly_mad", "med"): "domain",
     ("operators/windows.py", "e_ntile", "tot"): "scalar",
     ("sources/io.py", "a_scan_dynamic_pruning", "dim"): "domain",
-    ("sources/io.py", "a_zorder_clustered_write.rank_bucket", "offs"): "partition",
 }
 
 

@@ -581,6 +581,80 @@ def test_incremental_dedup_labels_are_sound(spark):
             assert row.norm not in existing, row.doc_id
 
 
+# -- min_label_components: label propagation vs union-find ----------------
+#
+# The five component jobs share one propagation loop; their oracles only
+# see fixture graphs. Random small graphs here carry isolated nodes,
+# repeated pairs and pairs given in both directions, and the labels must
+# equal min(doc_id) per component from a Python union-find.
+
+
+@st.composite
+def _small_graphs(draw):
+    ids = draw(
+        st.lists(
+            st.integers(min_value=0, max_value=1000),
+            min_size=1,
+            max_size=10,
+            unique=True,
+        )
+    )
+    node = st.sampled_from(ids)
+    pairs = draw(st.lists(st.tuples(node, node), max_size=14))
+    pairs = [(a, b) for a, b in pairs if a != b]
+    n_rev = draw(st.integers(min_value=0, max_value=len(pairs)))
+    return ids, pairs + [(b, a) for a, b in pairs[:n_rev]]
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(graph=_small_graphs())
+def test_min_label_components_matches_union_find(spark, graph):
+    from opay_datalake_script_spark.llmdata.pipeline import min_label_components
+
+    ids, pairs = graph
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {i: find(i) for i in ids}
+
+    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id long")
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = {r["doc_id"]: r["comp"] for r in min_label_components(nodes, edges).collect()}
+    assert got == want
+
+
+def test_min_label_components_round_cap(spark):
+    """A path of k nodes whose min sits at one end needs k rounds (k - 1
+    hops, then the round that sees no change): it converges at
+    max_rounds = k and raises one node later."""
+    import pytest
+
+    from opay_datalake_script_spark.llmdata.pipeline import min_label_components
+
+    def path(k):
+        nodes = spark.createDataFrame([(i,) for i in range(k)], "doc_id long")
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(k - 1)], "doc_a long, doc_b long"
+        )
+        return nodes, pairs
+
+    got = min_label_components(*path(4), max_rounds=4).collect()
+    assert {r["comp"] for r in got} == {0} and len(got) == 4
+    with pytest.raises(RuntimeError, match="did not converge within 4 rounds"):
+        min_label_components(*path(5), max_rounds=4)
+
+
 @settings(
     max_examples=15,
     deadline=None,
