@@ -100,54 +100,26 @@ def k_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch builders use (vs NP-hard optimal bin packing).
 
     Sharded stream key: a window partitioned by `lang` alone would give
-    exactly #languages sort tasks no matter the corpus size — at 100 TB
-    one task per language serializes everything. Instead the running sum
-    is computed with the same distributed offset-stitch pattern as
-    `global_row_number` (operators/relational.py): range-repartition on
-    (lang, doc_id) into many contiguous shards, cumsum locally per
-    (shard, lang), then add per-shard token offsets (a #shards x #langs
-    row table, broadcast back). localCheckpoint pins one sampled range
-    partitioning for both the offsets branch and the cumsum branch, so
-    the stitch is deterministic by construction.
+    exactly #languages sort tasks no matter the corpus size, so the
+    running token sum is `global_running_sums` by lang over doc_id
+    (operators/relational.py: range shards plus broadcast per-shard
+    offsets).
     """
-    from pyspark.sql import Window as W
+    from ..operators.relational import global_running_sums
 
     d = load(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
     base = d.select("doc_id", "lang", n_tok.alias("n_tokens"))
-    parts = 32
-    ranged = base.repartitionByRange(parts, "lang", "doc_id").sortWithinPartitions(
-        "lang", "doc_id"
+    packed = global_running_sums(
+        base, ["doc_id"], {"_cum": F.col("n_tokens")}, by=["lang"]
     )
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    shard_sums = with_pid.groupBy("_pid", "lang").agg(F.sum("n_tokens").alias("_n"))
-    # #shards x #langs rows: the cumsum window below runs over this tiny
-    # table, never the data.
-    offsets = shard_sums.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("_n").over(
-                W.partitionBy("lang").orderBy("_pid").rowsBetween(
-                    W.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ),
-    ).select("_pid", "lang", "_offset")
-    local = (
-        W.partitionBy("_pid", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    cum = F.sum("n_tokens").over(local) + F.col("_offset")
-    return with_pid.join(F.broadcast(offsets), ["_pid", "lang"]).select(
+    start = F.col("_cum") - F.col("n_tokens")
+    return packed.select(
         "doc_id",
         "lang",
         "n_tokens",
-        (cum - F.col("n_tokens")).cast("long").alias("start_offset"),
-        F.floor((cum - F.col("n_tokens")) / F.lit(float(PACK_BUDGET)))
-        .cast("long")
-        .alias("bin"),
+        start.cast("long").alias("start_offset"),
+        F.floor(start / F.lit(float(PACK_BUDGET))).cast("long").alias("bin"),
     )
 
 

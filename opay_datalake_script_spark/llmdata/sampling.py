@@ -133,7 +133,7 @@ def k_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not.
 
     At 100 TB: the quota join is a broadcast (a handful of rows). The
-    per-source rank rides `grouped_row_number` (r11): the quota is a
+    per-source rank rides `grouped_row_number`: the quota is a
     JOIN-DERIVED column, so Spark's WindowGroupLimit cannot map-side
     limit a `rn <= n_keep` filter (it needs a foldable limit — probed
     on 4.1), and a plain source-partitioned window would sort each
@@ -230,7 +230,7 @@ def k_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines compute the same mixture without a config table; a real
     pipeline would broadcast-join its sampling-weights dim instead.
 
-    Per-source ranks ride `grouped_row_number` (r11): the interleave
+    Per-source ranks ride `grouped_row_number`: the interleave
     needs EVERY row's rank — no top-k filter exists to push down, so a
     source-partitioned window would sort each source's whole slice in
     one task (mixtures have FEW sources, each corpus-scale). The
@@ -338,7 +338,7 @@ def k_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.round(F.lit(250.0) * F.col("w_e6") / F.col("sw")).cast("long").alias("n_keep"),
     )
-    # grouped rank (r11): n_keep is join-derived, so WindowGroupLimit
+    # grouped rank: n_keep is join-derived, so WindowGroupLimit
     # cannot bound a source-partitioned window — see k_domain_mixture.
     from ..operators.relational import grouped_row_number
 

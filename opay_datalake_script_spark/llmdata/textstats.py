@@ -750,16 +750,12 @@ def k_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle's ORDER BY window is the textbook form; at 100 TB a bare
     unpartitioned window funnels the vocab through one task, so the
-    Spark side computes BOTH the global rank and the prefix sum with the
-    distributed two-phase scheme: range-repartition the (corpus-
-    sublinear, but still possibly 1e7-row) vocab aggregate on
-    (cnt DESC, tok), rank and cumsum per partition in parallel, then
-    add broadcast per-partition offsets (row-count offsets for rank,
-    count-sum offsets for the running total). The grand total is a
-    1-row broadcast, not another window. (tok, cnt DESC) is a total
-    order, so the result is partitioning-independent.
+    Spark side computes BOTH the global rank (a running sum of 1) and
+    the running count with `global_running_sums` over (cnt DESC, tok),
+    a total order. The grand total is a 1-row broadcast, not another
+    window.
     """
-    from pyspark.sql import Window as _W
+    from ..operators.relational import global_running_sums
 
     d = load(spark, sf_dir, "documents")
     tc = (
@@ -767,39 +763,15 @@ def k_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
-    ranged = tc.repartitionByRange(32, F.col("cnt").desc(), "tok").sortWithinPartitions(
-        F.col("cnt").desc(), "tok"
-    )
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    parts = with_pid.groupBy("_pid").agg(
-        F.count("*").alias("_rows"), F.sum("cnt").alias("_cnts")
-    )
-    cum = _W.orderBy("_pid").rowsBetween(_W.unboundedPreceding, -1)
-    offsets = parts.select(
-        "_pid",
-        F.coalesce(F.sum("_rows").over(cum), F.lit(0)).alias("_rank_off"),
-        F.coalesce(F.sum("_cnts").over(cum), F.lit(0)).alias("_sum_off"),
+    ranked = global_running_sums(
+        tc, [F.col("cnt").desc(), "tok"], {"rank": F.lit(1), "_cum": F.col("cnt")}
     )
     total = tc.agg(F.sum("cnt").alias("_n"))
-    local = _W.partitionBy("_pid").orderBy(F.col("cnt").desc(), "tok")
-    return (
-        with_pid.join(F.broadcast(offsets), "_pid")
-        .join(F.broadcast(total))
-        .select(
-            "tok",
-            "cnt",
-            (F.row_number().over(local) + F.col("_rank_off")).cast("long").alias("rank"),
-            F.round(
-                (
-                    F.sum("cnt").over(
-                        local.rowsBetween(_W.unboundedPreceding, 0)
-                    )
-                    + F.col("_sum_off")
-                ).cast("double")
-                / F.col("_n"),
-                6,
-            ).alias("cum_coverage"),
-        )
+    return ranked.join(F.broadcast(total)).select(
+        "tok",
+        "cnt",
+        "rank",
+        F.round(F.col("_cum").cast("double") / F.col("_n"), 6).alias("cum_coverage"),
     )
 
 

@@ -11,71 +11,102 @@ top-N plans as TakeOrderedAndProject (no full sort at scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources.io import load
 
 
-def global_row_number(
-    df: DataFrame, *order_cols, parts: int | None = None, checkpoint: bool = True
+def global_running_sums(
+    df: DataFrame,
+    order_cols: list,
+    sums: dict[str, Column],
+    by: list[str] | tuple = (),
+    parts: int | None = None,
+    checkpoint: bool = True,
 ) -> DataFrame:
-    """Distributed global row_number: total order WITHOUT the
-    single-partition WindowExec that `Window.orderBy(...)` (no
-    partitionBy) forces — that plan funnels the whole table through one
-    task, the classic 100 TB global-rank bottleneck.
+    """Distributed running sums over a global total order (per ``by``
+    group when given) WITHOUT the single-partition WindowExec that
+    `Window.orderBy(...)` (no partitionBy) forces — that plan funnels
+    the whole table through one task, the classic 100 TB global-rank
+    bottleneck; a window partitioned by a few ``by`` values alone gives
+    one task per value. Returns ``df`` plus one column per entry of
+    ``sums`` (output name -> measure Column evaluated against ``df``):
+    the inclusive running sum of the measure.
 
-    Scalable shape: (1) range-repartition + sort on the order keys, so
-    partition i holds a contiguous key range; (2) rank within each
-    partition (Window partitioned by spark_partition_id — parallel);
-    (3) cumulate per-partition counts into start offsets — a
-    #partitions-row table, broadcast back; rn = local rank + offset.
-    Output is independent of the sampled range bounds whenever the order
-    key is a total order (unique tiebreaker), which every caller here
-    guarantees. Returns ``df`` with an appended long ``rn`` column.
+    Scalable shape: (1) range-repartition + sort on (*by, *order_cols),
+    so shard ``_pid`` holds a contiguous key range; (2) per-(_pid, *by)
+    measure totals; (3) an exclusive offsets window over ``by`` ordered
+    by ``_pid`` — a #shards x #groups-row table, broadcast back;
+    (4) the inclusive running sum within each (_pid, *by) plus its
+    offset. The local sums use an explicit ROWS frame: an ordered
+    window's default RANGE frame would give tied rows one value. Output
+    is independent of the sampled range bounds whenever (*by,
+    *order_cols) is a total order (unique tiebreaker), which every
+    caller guarantees.
 
-    The counts branch and the rank branch must see the SAME partitioning:
-    RangePartitioner bounds are sample-based, so if the two plan
-    references to the ranged subtree were planned separately (exchange
-    reuse disabled, divergent AQE replan) the offsets would come from a
-    different partitioning than the ranks. localCheckpoint materializes
-    the ranged+pid data once and both branches read the same blocks —
-    deterministic by construction, not by optimizer courtesy.
-    (``checkpoint=False`` exists only so plan tests can inspect the
-    pre-materialization logical shape.)
+    ``by`` suits bounded group domains only (the broadcast offsets table
+    grows with #groups); `grouped_row_number` is the form for unbounded
+    groups. ``by`` keys must be non-NULL: the offsets join back is an
+    equi-join. ``parts`` defaults to the session's shuffle parallelism —
+    a hardcoded count would cap the sort at that many tasks on any
+    cluster.
+
+    The totals branch and the sums branch must see the SAME
+    partitioning: RangePartitioner bounds are sample-based, so if the
+    two plan references to the ranged subtree were planned separately
+    (exchange reuse disabled, divergent AQE replan) the offsets would
+    come from a different partitioning than the local sums.
+    localCheckpoint materializes the ranged+pid data once and both
+    branches read the same blocks — deterministic by construction, not
+    by optimizer courtesy. (``checkpoint=False`` exists only so plan
+    tests can inspect the pre-materialization logical shape.)
     """
     from pyspark.sql import Window as W
 
+    by = list(by)
     if parts is None:
-        # a hardcoded 32 would cap the sort at 32 tasks on any
-        # cluster (~3 TB per task at 100 TB). Default to the session's
-        # shuffle parallelism — identical plans on the 32-partition
-        # test/bench sessions, cluster-sized everywhere else.
         parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(
-        *order_cols
-    )
+    keys = [*by, *order_cols]
+    ranged = df.repartitionByRange(parts, *keys).sortWithinPartitions(*keys)
     with_pid = ranged.withColumn("_pid", F.spark_partition_id())
     if checkpoint:
         with_pid = with_pid.localCheckpoint()
-    counts = with_pid.groupBy("_pid").agg(F.count("*").alias("_n"))
-    # #partitions rows: the unpartitioned cumsum window below is over a
-    # tiny frame, not the data.
-    offsets = counts.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("_n").over(
-                W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("_pid", "_offset")
-    local = W.partitionBy("_pid").orderBy(*order_cols)
-    return (
-        with_pid.join(F.broadcast(offsets), "_pid")
-        .withColumn("rn", (F.row_number().over(local) + F.col("_offset")).cast("long"))
-        .drop("_pid", "_offset")
+    totals = with_pid.groupBy("_pid", *by).agg(
+        *[F.sum(m).alias(f"_t_{o}") for o, m in sums.items()]
+    )
+    earlier = W.partitionBy(*by).orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+    offsets = totals.select(
+        "_pid",
+        *by,
+        *[
+            F.coalesce(F.sum(f"_t_{o}").over(earlier), F.lit(0)).alias(f"_o_{o}")
+            for o in sums
+        ],
+    )
+    local = (
+        W.partitionBy("_pid", *by)
+        .orderBy(*order_cols)
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return with_pid.join(F.broadcast(offsets), ["_pid", *by]).select(
+        *[F.col(c) for c in df.columns],
+        *[
+            (F.sum(m).over(local) + F.col(f"_o_{o}")).alias(o)
+            for o, m in sums.items()
+        ],
+    )
+
+
+def global_row_number(
+    df: DataFrame, *order_cols, parts: int | None = None, checkpoint: bool = True
+) -> DataFrame:
+    """Distributed global row_number: `global_running_sums` of 1 over
+    ``order_cols``, which must be a total order (unique tiebreaker).
+    Returns ``df`` with an appended long ``rn`` column."""
+    return global_running_sums(
+        df, list(order_cols), {"rn": F.lit(1)}, parts=parts, checkpoint=checkpoint
     )
 
 

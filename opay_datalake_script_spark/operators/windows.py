@@ -13,7 +13,9 @@ ranking outputs are cast to long to match DuckDB's BIGINT.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W, WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.exact import (
@@ -352,7 +354,7 @@ def sessionize(
             F.count("*").alias("n"), F.min("ts").alias("s"), F.max("ts").alias("e")
         )
     div = 86_400_000_000 * chunk_days
-    # Explicit null-key filter (optimization round 13, guide §2.4): the
+    # Explicit null-key filter, so the two branches share one exchange: the
     # final stitch joins `lsess` with `cg` on (user_id, chunk), and both
     # relations recompute this events subtree. Catalyst pushes the
     # join's inferred isnotnull(chunk) below the (user_id, chunk)
@@ -479,6 +481,92 @@ def _chunked(ev: DataFrame, ts: str, chunk_days: int) -> DataFrame:
     return ev.withColumn("_chunk", _chunk_id(ts, div))
 
 
+_RUNNING = (W.unboundedPreceding, W.currentRow)
+
+
+class Scan(NamedTuple):
+    """One running aggregate for `chunked_scan`.
+
+    ``local(w)`` is the running value over the ordered window ``w``
+    (``local`` picks its own frame); ``chunk`` aggregates one whole
+    chunk; ``prefix(wc, c)`` folds the chunk aggregates ``c`` of the
+    strictly earlier chunks over the chunk-grain window ``wc``; and
+    ``combine(p, l)`` merges that prefix into a local value. The law
+    every scan keeps: ``combine(prefix over no chunks, x) == x``, so the
+    single-window form is ``local`` alone."""
+
+    local: Callable[[WindowSpec], Column]
+    chunk: Column
+    prefix: Callable[[WindowSpec, Column], Column]
+    combine: Callable[[Column, Column], Column]
+
+
+def chunked_scan(
+    ev: DataFrame,
+    key: str,
+    order: list[str],
+    scans: dict[str, Scan],
+    chunk_days: int | None = 30,
+) -> DataFrame:
+    """Append running aggregates over each ``key``'s ``order``-ordered
+    stream, celebrity-key-immune: the one chunk stitch behind every
+    per-key prefix scan. ``scans`` maps output name -> `Scan`; the
+    result is ``ev``'s columns plus one column per output.
+
+    ``order[0]`` is the timestamp the stream is cut on: each row lands
+    in a ``chunk_days``-day chunk, ``local`` runs inside (key, chunk)
+    windows, each (key, chunk) publishes its ``chunk`` aggregate, a
+    chunk-grain window folds the earlier chunks into an exclusive
+    ``prefix``, and one join on (key, chunk) hands each row
+    ``combine(prefix, local)``. The chunk is monotone in the
+    timestamp, so the global stream is the concatenation of the chunk
+    streams and the result equals the single-window form for any
+    ASSOCIATIVE scan (sum, max, last-non-null, set and sketch union).
+    The heaviest window task then holds one key's busiest
+    ``chunk_days`` days, never its lifetime — AQE cannot split a window
+    partition, so celebrity keys are engineered out structurally; the
+    chunk-grain stages also parallelize better than one per-key sort.
+    ``chunk_days=None`` is the classic single window partitioned by
+    ``key`` alone, which the property tests compare against.
+
+    Ordering: ``order`` SHOULD be a total order per key when the outputs
+    feed row-attached downstream logic. A non-unique tie is safe only
+    for multiset-invariant consumers (e.g. e_peak_concurrency, which
+    emits the per-key MAX over equal-delta peer permutations); a
+    multi-STAGE composition under a non-total order can attach a
+    stage-1 value to a DIFFERENT stage-2 peer order and corrupt the
+    composition (the e_merge_intervals duplicate-interval bug — classic
+    stacked windows dodge it only by sharing one physical sort).
+    """
+    outs = list(scans)
+    if chunk_days is None:
+        _guard_chunk_names(ev, outs)
+        w = W.partitionBy(key).orderBy(*order)
+        return ev.select("*", *[s.local(w).alias(o) for o, s in scans.items()])
+    _guard_chunk_names(
+        ev, outs, internals=[f"_{p}_{o}" for o in outs for p in ("l", "c", "p")]
+    )
+    ch = _chunked(ev, order[0], chunk_days)
+    wloc = W.partitionBy(key, "_chunk").orderBy(*order)
+    loc = ch.select("*", *[s.local(wloc).alias(f"_l_{o}") for o, s in scans.items()])
+    chunks = ch.groupBy(key, "_chunk").agg(
+        *[s.chunk.alias(f"_c_{o}") for o, s in scans.items()]
+    )
+    wc = W.partitionBy(key).orderBy("_chunk").rowsBetween(W.unboundedPreceding, -1)
+    pre = chunks.select(
+        key,
+        "_chunk",
+        *[s.prefix(wc, F.col(f"_c_{o}")).alias(f"_p_{o}") for o, s in scans.items()],
+    )
+    return loc.join(pre, [key, "_chunk"]).select(
+        *[F.col(c) for c in ev.columns],
+        *[
+            s.combine(F.col(f"_p_{o}"), F.col(f"_l_{o}")).alias(o)
+            for o, s in scans.items()
+        ],
+    )
+
+
 def with_chunked_shifts(
     ev: DataFrame,
     key: str | list[str],
@@ -503,8 +591,7 @@ def with_chunked_shifts(
     keys must be engineered out structurally.
 
     ``lags``/``leads`` map output name -> source column (shift 1 only;
-    lead-k needs a k-row carry — r_user_path_topk documents why it keeps
-    the classic form for now). ``chunk_days=None`` gives the classic
+    lead-k is `with_chunked_lead_seq`). ``chunk_days=None`` gives the classic
     single-window plan. Measured at sf0.1 on the bench's Arrow path
     (min of 7): chunked 129.7 ms vs classic 117.4 for e_lag_lead — the
     10% local cost buys the bounded-task guarantee (the t_q18 one-scan
@@ -575,76 +662,27 @@ def with_chunked_running_sums(
     chunk_days: int | None = 30,
 ) -> DataFrame:
     """Append INCLUSIVE running sums over each ``key``'s (ts, tie)-ordered
-    stream, celebrity-key-immune: within-chunk running sums plus a
-    chunk-grain EXCLUSIVE prefix of per-chunk totals (the sessionize
-    ``cum`` trick applied to arbitrary measures) — identical to the
-    single-window form because the measures are summed, never
-    re-ordered (exact for integer/decimal measures; float measures
-    would reassociate, which is why every caller here sums e4 integers
-    or 0/1 indicators). (ts, tie) SHOULD be a total order per key when
-    the running values feed row-attached downstream logic: a non-unique
-    tie is safe only for multiset-invariant consumers (e.g.
-    e_peak_concurrency, which emits the per-key MAX over equal-delta
-    peer permutations), while a multi-STAGE composition under a
-    non-total order can attach a stage-1 value to a DIFFERENT stage-2
-    peer order and corrupt the composition (the e_merge_intervals
-    duplicate-interval bug this note records — classic stacked windows
-    dodge it only by sharing one physical sort). ``sums`` maps output
-    name -> measure Column (evaluated against ``ev``). Exclusive frames
-    derive as ``incl - measure`` at the call site. Measured at sf0.1 (Arrow path,
-    min of 7): chunked 161.0 ms vs classic 166.8 for e_cumulative — the
-    skew-immune form is also the locally faster one (chunk-grain stages
-    parallelize better than one per-key sort, the sessionize result
-    again).
+    stream, as `chunked_scan`s whose combine is prefix + local sum.
+    Summing never re-orders the measures, so the chunked form is exact
+    for integer/decimal measures (float measures would reassociate,
+    which is why every caller sums e4 integers or 0/1 indicators).
+    ``sums`` maps output name -> measure Column (evaluated against
+    ``ev``); exclusive frames derive as ``incl - measure`` at the call
+    site. (ts, tie) ordering follows the `chunked_scan` tie note.
+    Measured at sf0.1 (Arrow path, min of 7): chunked 161.0 ms vs
+    classic 166.8 for e_cumulative.
     """
-    measured = [(out, col) for out, col in sums.items()]
-    if chunk_days is None:
-        _guard_chunk_names(ev, list(sums))
-        w = (
-            W.partitionBy(key)
-            .orderBy(ts, tie)
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
+
+    def running_sum(m: Column) -> Scan:
+        return Scan(
+            local=lambda w: F.sum(m).over(w.rowsBetween(*_RUNNING)),
+            chunk=F.sum(m),
+            prefix=lambda wc, c: F.coalesce(F.sum(c).over(wc), F.lit(0)),
+            combine=lambda p, l: p + l,
         )
-        return ev.select("*", *[F.sum(col).over(w).alias(out) for out, col in measured])
-    _guard_chunk_names(
-        ev,
-        list(sums),
-        internals=[
-            f"_{p}_{o}" for o in sums for p in ("m", "lcum", "t", "pre")
-        ],
-    )
-    ch = _chunked(ev, ts, chunk_days).select(
-        "*", *[col.alias(f"_m_{out}") for out, col in measured]
-    )
-    wloc = (
-        W.partitionBy(key, "_chunk")
-        .orderBy(ts, tie)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    loc = ch.select(
-        "*", *[F.sum(f"_m_{out}").over(wloc).alias(f"_lcum_{out}") for out, _ in measured]
-    )
-    totals = ch.groupBy(key, "_chunk").agg(
-        *[F.sum(f"_m_{out}").alias(f"_t_{out}") for out, _ in measured]
-    )
-    wc = (
-        W.partitionBy(key)
-        .orderBy("_chunk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    pre = totals.select(
-        key,
-        "_chunk",
-        *[
-            F.coalesce(F.sum(f"_t_{out}").over(wc), F.lit(0)).alias(f"_pre_{out}")
-            for out, _ in measured
-        ],
-    )
-    j = loc.join(pre, [key, "_chunk"])
-    return j.select(
-        *[F.col(c) for c in ev.columns],
-        *[(F.col(f"_pre_{out}") + F.col(f"_lcum_{out}")).alias(out) for out, _ in measured],
-    )
+
+    scans = {out: running_sum(m) for out, m in sums.items()}
+    return chunked_scan(ev, key, [ts, tie], scans, chunk_days)
 
 
 def with_chunked_last_nonnull(
@@ -656,85 +694,28 @@ def with_chunked_last_nonnull(
     chunk_days: int | None = 30,
 ) -> DataFrame:
     """Append running LAST-NON-NULL columns (forward fill / as-of carry)
-    over each key's (ts, *ties)-ordered stream, celebrity-key-immune:
-    "latest non-null so far" is associative (combine = coalesce(later,
-    earlier)), so each (key, chunk) publishes its last non-null value
-    per measure (max_by over a null-when-null order key — chunks whose
-    measure is all-null publish NULL and fall through), a chunk-grain
-    last(ignorenulls) window builds the exclusive prefix, and the row
-    value is coalesce(within-chunk last-non-null, prefix). This is the
-    as-of-join / forward-fill primitive (c_join_asof's union+window
-    carry). Ordering rules as in the sibling helpers: ties among
-    IDENTICAL (order, value) rows are harmless; anything feeding a
-    second ordered stage needs a total order."""
-    order_cols = [ts, *ties]
-    if chunk_days is None:
-        _guard_chunk_names(ev, list(cols))
-        w = (
-            W.partitionBy(key)
-            .orderBy(*order_cols)
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
+    over each key's (ts, *ties)-ordered stream, as `chunked_scan`s whose
+    combine is coalesce(within-chunk last-non-null, prefix): each chunk
+    publishes its last non-null value per measure (max_by over a
+    null-when-null order key, so an all-null chunk publishes NULL and
+    the prefix falls through) and a chunk-grain last(ignorenulls)
+    window builds the prefix. This is the as-of-join / forward-fill
+    primitive (c_join_asof's union+window carry). Ties among IDENTICAL
+    (order, value) rows are harmless; anything feeding a second ordered
+    stage needs a total order."""
+    order = [ts, *ties]
+    ordk = F.struct(*[F.col(c) for c in order])
+
+    def last_nonnull(m: Column) -> Scan:
+        return Scan(
+            local=lambda w: F.last(m, ignorenulls=True).over(w.rowsBetween(*_RUNNING)),
+            chunk=F.max_by(m, F.when(m.isNotNull(), ordk)),
+            prefix=lambda wc, c: F.last(c, ignorenulls=True).over(wc),
+            combine=lambda p, l: F.coalesce(l, p),
         )
-        return ev.select(
-            "*",
-            *[
-                F.last(col, ignorenulls=True).over(w).alias(out)
-                for out, col in cols.items()
-            ],
-        )
-    _guard_chunk_names(
-        ev,
-        list(cols),
-        internals=[f"_{p}_{o}" for o in cols for p in ("m", "l", "c", "p")],
-    )
-    ch = _chunked(ev, ts, chunk_days).select(
-        "*", *[col.alias(f"_m_{out}") for out, col in cols.items()]
-    )
-    wloc = (
-        W.partitionBy(key, "_chunk")
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    loc = ch.select(
-        "*",
-        *[
-            F.last(f"_m_{out}", ignorenulls=True).over(wloc).alias(f"_l_{out}")
-            for out in cols
-        ],
-    )
-    ordk = F.struct(*[F.col(c) for c in order_cols])
-    chunk_last = ch.groupBy(key, "_chunk").agg(
-        *[
-            # null order key for null measures: max_by ignores them, so an
-            # all-null chunk publishes NULL and the prefix falls through
-            F.max_by(
-                f"_m_{out}",
-                F.when(F.col(f"_m_{out}").isNotNull(), ordk),
-            ).alias(f"_c_{out}")
-            for out in cols
-        ]
-    )
-    wc = (
-        W.partitionBy(key)
-        .orderBy("_chunk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    pre = chunk_last.select(
-        key,
-        "_chunk",
-        *[
-            F.last(f"_c_{out}", ignorenulls=True).over(wc).alias(f"_p_{out}")
-            for out in cols
-        ],
-    )
-    j = loc.join(pre, [key, "_chunk"])
-    return j.select(
-        *[F.col(c) for c in ev.columns],
-        *[
-            F.coalesce(F.col(f"_l_{out}"), F.col(f"_p_{out}")).alias(out)
-            for out in cols
-        ],
-    )
+
+    scans = {out: last_nonnull(m) for out, m in cols.items()}
+    return chunked_scan(ev, key, order, scans, chunk_days)
 
 
 def with_chunked_lead_seq(
@@ -758,7 +739,7 @@ def with_chunked_lead_seq(
     from the within-chunk lead when _rn+i <= _cnt, else from
     continuation[_rn+i-_cnt] (try_element_at: past-the-stream leads are
     NULL exactly like the classic window's). (ts, tie) must be a total
-    order per key (the running-sums tie note). Exact for any src type.
+    order per key (the `chunked_scan` tie note). Exact for any src type.
     """
     k = len(outs)
     if chunk_days is None:
@@ -947,45 +928,20 @@ def with_chunked_running_max_excl(
 ) -> DataFrame:
     """Append the EXCLUSIVE running max — max of ``col`` over each key's
     strictly-preceding rows in (ts, tie) order (NULL for the first row)
-    — celebrity-immune: max is associative like sum, so the chunk
-    stitch is `greatest(exclusive chunk-grain prefix max, within-chunk
-    exclusive running max)` with greatest's null-skipping handling the
-    first-row/first-chunk edges. Exact for any ordered type (pure
-    comparisons, no arithmetic). (ts, tie) must be a TOTAL order per
-    key when the output feeds a second ordered stage (see the
-    with_chunked_running_sums tie note). This is the interval-sweep
-    primitive: a row starts a new span iff its start exceeds every
-    previous end (e_merge_intervals)."""
-    if chunk_days is None:
-        _guard_chunk_names(ev, [out])
-        w = (
-            W.partitionBy(key)
-            .orderBy(ts, tie)
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        return ev.select("*", F.max(col).over(w).alias(out))
-    _guard_chunk_names(ev, [out], internals=["_lmax", "_t", "_pre"])
-    ch = _chunked(ev, ts, chunk_days)
-    wloc = (
-        W.partitionBy(key, "_chunk")
-        .orderBy(ts, tie)
-        .rowsBetween(W.unboundedPreceding, -1)
+    — as a `chunked_scan` whose combine is greatest(prefix max,
+    within-chunk exclusive max); greatest skips NULLs, which covers the
+    first-row and first-chunk edges. Exact for any ordered type (pure
+    comparisons, no arithmetic). (ts, tie) must be a TOTAL order per key
+    when the output feeds a second ordered stage (the `chunked_scan` tie
+    note). This is the interval-sweep primitive: a row starts a new span
+    iff its start exceeds every previous end (e_merge_intervals)."""
+    scan = Scan(
+        local=lambda w: F.max(col).over(w.rowsBetween(W.unboundedPreceding, -1)),
+        chunk=F.max(col),
+        prefix=lambda wc, c: F.max(c).over(wc),
+        combine=F.greatest,
     )
-    loc = ch.select("*", F.max(col).over(wloc).alias("_lmax"))
-    totals = ch.groupBy(key, "_chunk").agg(F.max(col).alias("_t"))
-    wc = (
-        W.partitionBy(key)
-        .orderBy("_chunk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    pre = totals.select(
-        key, "_chunk", F.max("_t").over(wc).alias("_pre")
-    )
-    j = loc.join(pre, [key, "_chunk"])
-    return j.select(
-        *[F.col(c) for c in ev.columns],
-        F.greatest("_pre", "_lmax").alias(out),
-    )
+    return chunked_scan(ev, key, [ts, tie], {out: scan}, chunk_days)
 
 
 def with_chunked_trailing_range_count(
@@ -1100,55 +1056,17 @@ def e_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def chunked_prefix_union(
-    ev: DataFrame,
-    *,
-    key: str,
-    row_id: str,
-    ts: str,
-    local_agg,
-    chunk_agg,
-    prefix_agg,
-    combine,
-    out: str,
-    chunk_days: int = 30,
-) -> DataFrame:
-    """ONE copy of the celebrity-immune running-associative-union shape
-    shared by the exact and HLL running distinct counts (the two
-    variants previously hand-maintained identical scaffolding, so a
-    future chunk-width/ordering/join fix had to be applied twice). The
-    within-chunk running aggregate rides a (key, chunk_days chunk)
-    window ordered by (ts, row_id), each chunk publishes its full
-    aggregate, a chunk-grain window folds the preceding chunks into an
-    exclusive prefix, and the row value combines prefix with local —
-    exact for any ASSOCIATIVE union (set union, sketch union).
-
-    ``local_agg(window)`` -> within-chunk running aggregate column;
-    ``chunk_agg()`` -> per-chunk full aggregate;
-    ``prefix_agg(window, c)`` -> exclusive chunk-prefix fold over the
-    per-chunk aggregate column ``c``;
-    ``combine(prefix, local)`` -> output value. The prefix is NULL in
-    each key's first chunk unless ``prefix_agg`` coalesces it away."""
-    _guard_chunk_names(ev, [out], internals=["_l", "_c", "_p"])
-    ch = _chunked(ev, ts, chunk_days)
-    wloc = (
-        W.partitionBy(key, "_chunk")
-        .orderBy(ts, row_id)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    loc = ch.select(key, row_id, "_chunk", local_agg(wloc).alias("_l"))
-    chunks = ch.groupBy(key, "_chunk").agg(chunk_agg().alias("_c"))
-    wc = (
-        W.partitionBy(key)
-        .orderBy("_chunk")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    pre = chunks.select(
-        key, "_chunk", prefix_agg(wc, F.col("_c")).alias("_p")
-    )
-    return (
-        loc.join(pre, [key, "_chunk"])
-        .select(key, row_id, combine(F.col("_p"), F.col("_l")).alias(out))
+def hll_distinct_scan(value: str) -> Scan:
+    """Running HLL sketch of ``value``'s distinct values: a within-chunk
+    running `hll_sketch_agg`, per-chunk sketches, a chunk-grain
+    `hll_union_agg` prefix, and the sketch union as combine (a key's
+    first chunk has no prefix sketch and keeps its local one). Read the
+    count with `hll_sketch_estimate`."""
+    return Scan(
+        local=lambda w: F.hll_sketch_agg(value).over(w.rowsBetween(*_RUNNING)),
+        chunk=F.hll_sketch_agg(value),
+        prefix=lambda wc, c: F.hll_union_agg(c).over(wc),
+        combine=lambda p, l: F.when(p.isNull(), l).otherwise(F.hll_union(p, l)),
     )
 
 
@@ -1167,28 +1085,34 @@ def e_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running distinct count over a window. Spark (like Hive) rejects
     DISTINCT inside window aggregates, so the reference-family idiom is
     `size(collect_set(x) OVER w)` — here in the celebrity-immune chunked
-    form via `chunked_prefix_union` (set UNION is associative like
-    sum/max). Per-row state is the distinct SET, bounded by the column's
-    distinct DOMAIN (5 priorities here), not by rows; at 100 TB
+    form: a `chunked_scan` whose combine is set UNION (associative like
+    sum/max), sized afterwards — hash-identical to the classic single
+    user-keyed sort. Per-row state is the distinct SET, bounded by the
+    column's distinct DOMAIN (5 priorities here), not by rows; at 100 TB
     cardinalities `e_window_distinct_hll` replaces it with a fixed-size
-    sketch — hash-identical to the classic single user-keyed sort."""
+    sketch."""
     o = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    return chunked_prefix_union(
-        o, key="o_custkey", row_id="o_orderkey", ts="o_orderdate",
-        out="distinct_prios",
-        local_agg=lambda w: F.collect_set("o_orderpriority").over(w),
-        chunk_agg=lambda: F.collect_set("o_orderpriority"),
-        prefix_agg=lambda w, c: F.array_distinct(
+    prios = Scan(
+        local=lambda w: F.collect_set("o_orderpriority").over(w.rowsBetween(*_RUNNING)),
+        chunk=F.collect_set("o_orderpriority"),
+        prefix=lambda wc, c: F.array_distinct(
             F.flatten(
                 F.coalesce(
-                    F.collect_list(c).over(w),
+                    F.collect_list(c).over(wc),
                     F.array().cast("array<array<string>>"),
                 )
             )
         ),
-        combine=lambda p, l: F.size(F.array_union(p, l)).cast("long"),
+        combine=F.array_union,
+    )
+    return chunked_scan(
+        o, "o_custkey", ["o_orderdate", "o_orderkey"], {"_prios": prios}
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        F.size("_prios").cast("long").alias("distinct_prios"),
     )
 
 
@@ -1204,25 +1128,24 @@ def e_window_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     column's domain — fine for 5 priorities, fatal for high-cardinality
     columns), while this one's is a fixed ~2^lgK-register HLL sketch,
     independent of cardinality. Same chunked celebrity-immune shape
-    (sketch UNION is associative exactly like set union): a within-chunk
-    running `hll_sketch_agg` window, per-chunk sketches, a chunk-grain
-    `hll_union_agg` window building the exclusive prefix sketch, and the
-    row value estimates union(prefix, local). Accepted-error contract:
+    (sketch UNION is associative exactly like set union): the
+    `hll_distinct_scan` over `chunked_scan`, estimated per row.
+    Accepted-error contract:
     DataSketches HLL standard error ~1.04/sqrt(2^lgK) (~1.6 % at the
     default lgK=12); at the fixture's tiny domain the estimate is exact,
     asserted against `e_window_distinct`."""
     o = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    return chunked_prefix_union(
-        o, key="o_custkey", row_id="o_orderkey", ts="o_orderdate",
-        out="distinct_prios",
-        local_agg=lambda w: F.hll_sketch_agg("o_orderpriority").over(w),
-        chunk_agg=lambda: F.hll_sketch_agg("o_orderpriority"),
-        prefix_agg=lambda w, c: F.hll_union_agg(c).over(w),
-        combine=lambda p, l: F.when(
-            p.isNull(), F.hll_sketch_estimate(l)
-        ).otherwise(F.hll_sketch_estimate(F.hll_union(p, l))),
+    return chunked_scan(
+        o,
+        "o_custkey",
+        ["o_orderdate", "o_orderkey"],
+        {"_sketch": hll_distinct_scan("o_orderpriority")},
+    ).select(
+        "o_custkey",
+        "o_orderkey",
+        F.hll_sketch_estimate("_sketch").alias("distinct_prios"),
     )
 
 

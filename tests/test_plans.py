@@ -217,10 +217,12 @@ def test_round5_new_ops_plan_shapes(spark):
     splan = shuf._jdf.queryExecution().executedPlan().toString()
     # the localCheckpoint inside global_row_number truncates the ranged
     # subtree to Scan ExistingRDD, so pin the visible invariant instead:
-    # every data-bearing row_number window must partition by _pid
-    # (parallel), never run unpartitioned over the corpus
-    rn_lines = [ln for ln in splan.splitlines() if "row_number" in ln]
-    assert rn_lines and all("_pid" in ln for ln in rn_lines), rn_lines
+    # the rank (a running sum(1)) must partition by _pid (parallel),
+    # never run unpartitioned over the corpus; every Window line is
+    # checked (the #shards-row offsets window is ordered by _pid too)
+    windows = [ln for ln in splan.splitlines() if "Window" in ln]
+    assert windows and all("_pid" in ln for ln in windows), windows
+    assert any("sum(1)" in ln for ln in windows), windows
     man = QUERIES["k_shard_manifest"](spark, SF_DIR)
     assert count_shuffles(man) == 1
     # grid interval-overlap join (written for the round-7 grid/promo op;
@@ -541,11 +543,12 @@ def test_vocab_and_perplexity_plan_shapes(spark):
     sides), not sort-merge the corpus."""
     vc = QUERIES["k_vocab_coverage"](spark, SF_DIR)
     plan = vc._jdf.queryExecution().executedPlan().toString()
-    data_windows = [
-        ln for ln in plan.splitlines()
-        if "Window" in ln and ("row_number" in ln or "sum(cnt" in ln)
-    ]
-    assert data_windows and all("_pid" in ln for ln in data_windows), data_windows
+    # the rank is a running sum(1) in the same Window as the running
+    # count, so every Window line is checked (the #shards-row offsets
+    # window is ordered by _pid too)
+    windows = [ln for ln in plan.splitlines() if "Window" in ln]
+    assert windows and all("_pid" in ln for ln in windows), windows
+    assert any("sum(1)" in ln and "sum(cnt" in ln for ln in windows), windows
 
     pb = QUERIES["k_perplexity_buckets"](spark, SF_DIR)
     pplan = pb._jdf.queryExecution().executedPlan().toString()
@@ -666,10 +669,9 @@ def test_round5d_new_ops_plan_shapes(spark):
 
     pareto = QUERIES["r_pareto_deciles"](spark, SF_DIR)
     pplan = pareto._jdf.queryExecution().executedPlan().toString()
-    data_windows = [
-        ln for ln in pplan.splitlines() if "Window" in ln and "row_number" in ln
-    ]
-    assert data_windows and all("_pid" in ln for ln in data_windows), data_windows
+    windows = [ln for ln in pplan.splitlines() if "Window" in ln]
+    assert windows and all("_pid" in ln for ln in windows), windows
+    assert any("sum(1)" in ln for ln in windows), windows
 
 
 def test_round5e_new_ops_plan_shapes(spark):
@@ -1231,7 +1233,6 @@ _HARD_BROADCAST_SITES = {
     ("llmdata/pipeline.py", "k_corpus_build_pipeline", "quota"): "domain",
     ("llmdata/pipeline.py", "k_corpus_build_pipeline", "tot"): "scalar",
     ("llmdata/pipeline.py", "k_corpus_build_pipeline", "tw"): "scalar",
-    ("llmdata/pipeline.py", "k_pack_sequences", "offsets"): "partition",
     ("llmdata/pipeline.py", "k_tokenize_capped_vocab", "vocab"): "cap",
     ("llmdata/sampling.py", "k_domain_mixture", "quota"): "domain",
     ("llmdata/sampling.py", "k_dsir_importance_weights", "terms"): "cap",
@@ -1248,7 +1249,6 @@ _HARD_BROADCAST_SITES = {
     ("llmdata/similarity.py", "k_semantic_outlier", "cent"): "cap",
     ("llmdata/textstats.py", "k_bm25_topk", "stats"): "scalar",
     ("llmdata/textstats.py", "k_unigram_logprob", "tot"): "scalar",
-    ("llmdata/textstats.py", "k_vocab_coverage", "offsets"): "partition",
     ("llmdata/textstats.py", "k_vocab_coverage", "total"): "scalar",
     ("llmdata/textstats.py", "k_winsorize_clip", "q"): "scalar",
     ("operators/aggregates.py", "d_count_min_sketch", "cells"): "cap",
@@ -1267,7 +1267,7 @@ _HARD_BROADCAST_SITES = {
     ("operators/joins.py", "c_join_multiway", "n"): "domain",
     ("operators/joins.py", "c_join_multiway", "r"): "domain",
     ("operators/joins.py", "c_join_null_safe", "dim"): "domain",
-    ("operators/relational.py", "global_row_number", "offsets"): "partition",
+    ("operators/relational.py", "global_running_sums", "offsets"): "partition",
     ("operators/reports.py", "r_ads_daily_report", "n"): "domain",
     ("operators/reports.py", "r_dq_anomaly_zscore", "s"): "scalar",
     ("operators/reports.py", "r_dq_referential", "n"): "domain",

@@ -37,7 +37,7 @@ events_strategy = st.lists(
 
 def _spark_asof(spark, rows, chunk_days=30):
     """The c_join_asof union + forward-fill formulation applied to
-    ad-hoc rows, through the REAL chunked helper (r8): chunk_days=None
+    ad-hoc rows, through the REAL chunked helper: chunk_days=None
     exercises the classic single-window form, an int the chunked one."""
     from opay_datalake_script_spark.operators.windows import (
         with_chunked_last_nonnull,
@@ -653,6 +653,62 @@ def test_min_label_components_round_cap(spark):
     assert {r["comp"] for r in got} == {0} and len(got) == 4
     with pytest.raises(RuntimeError, match="did not converge within 4 rounds"):
         min_label_components(*path(5), max_rounds=4)
+
+
+@st.composite
+def _grouped_measures(draw):
+    """(g, o, v) rows: group 0 holds most rows, so with 4 range shards it
+    spans several of them; group 1 is small and group 2 is one row, so it
+    sits in one shard. o is unique (the total order); v is drawn from
+    0..3 and group 0's first row is always 0."""
+    sizes = [
+        draw(st.integers(min_value=8, max_value=30)),
+        draw(st.integers(min_value=0, max_value=5)),
+        1,
+    ]
+    orders = draw(
+        st.lists(
+            st.integers(min_value=-1000, max_value=1000),
+            min_size=sum(sizes),
+            max_size=sum(sizes),
+            unique=True,
+        )
+    )
+    vals = draw(
+        st.lists(
+            st.integers(min_value=0, max_value=3),
+            min_size=sum(sizes),
+            max_size=sum(sizes),
+        )
+    )
+    vals[0] = 0
+    groups = [g for g, n in enumerate(sizes) for _ in range(n)]
+    return list(zip(groups, orders, vals))
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(rows=_grouped_measures())
+def test_global_running_sums_by_group_matches_cumsum(spark, rows):
+    """`global_running_sums(..., by=["g"])` must equal a per-group cumsum
+    in o order, and a running sum of 1 must equal the per-group
+    enumerate position, whichever shards each group's rows land in."""
+    from opay_datalake_script_spark.operators.relational import global_running_sums
+
+    want = {}
+    for g in {r[0] for r in rows}:
+        cum = 0
+        for i, (_, o, v) in enumerate(sorted(r for r in rows if r[0] == g)):
+            cum += v
+            want[o] = (cum, i + 1)
+    df = spark.createDataFrame(rows, "g long, o long, v long")
+    got = global_running_sums(
+        df, ["o"], {"s": F.col("v"), "rn": F.lit(1)}, by=["g"], parts=4
+    )
+    assert {r["o"]: (r["s"], r["rn"]) for r in got.collect()} == want
 
 
 @settings(
@@ -1987,7 +2043,7 @@ def test_chunk_family_pre_epoch_floor_division(spark):
 
 
 def test_chunk_helper_name_guard(spark):
-    """The chunk helpers inject generated internal columns (_m_<out>,
+    """The chunk helpers inject generated internal columns (_l_<out>,
     _lag_<out>, _tr, _cr, ...) plus the caller's output names; a caller
     column with one of those names must raise loudly instead of
     producing ambiguous-column errors or silently wrong selects."""
@@ -2009,7 +2065,7 @@ def test_chunk_helper_name_guard(spark):
     bad = ev.withColumn("_lag_p", F.lit(0))
     with pytest.raises(ValueError, match="internals"):
         with_chunked_shifts(bad, "user_id", "ts", "event_id", lags={"p": "event_id"})
-    bad = ev.withColumn("_m_cum", F.lit(0))
+    bad = ev.withColumn("_l_cum", F.lit(0))
     with pytest.raises(ValueError, match="internals"):
         with_chunked_running_sums(bad, "user_id", "ts", "event_id", {"cum": F.lit(1)})
     bad = ev.withColumn("_cr", F.lit(0))
@@ -2109,7 +2165,7 @@ def test_banded_point_join_equals_naive_theta(spark):
         assert len(got) == len(set(got)), f"half_width={hw}: duplicate pairs"
 
 
-def test_chunked_prefix_union_hll_error_bound_high_cardinality(spark):
+def test_hll_distinct_scan_error_bound_high_cardinality(spark):
     """The accepted-error contract's HARD end: at the fixture domain the
     HLL running distinct is exactly the exact count (pinned above), but
     the variant exists FOR high cardinality — so pin DataSketches'
@@ -2124,7 +2180,8 @@ def test_chunked_prefix_union_hll_error_bound_high_cardinality(spark):
     import datetime as dtm
 
     from opay_datalake_script_spark.operators.windows import (
-        chunked_prefix_union,
+        chunked_scan,
+        hll_distinct_scan,
     )
 
     n = 20_000
@@ -2136,15 +2193,9 @@ def test_chunked_prefix_union_hll_error_bound_high_cardinality(spark):
     ev = spark.createDataFrame(
         rows, "k long, rid long, ts timestamp, v string"
     )
-    est = chunked_prefix_union(
-        ev, key="k", row_id="rid", ts="ts", out="est", chunk_days=30,
-        local_agg=lambda w: F.hll_sketch_agg("v").over(w),
-        chunk_agg=lambda: F.hll_sketch_agg("v"),
-        prefix_agg=lambda w, c: F.hll_union_agg(c).over(w),
-        combine=lambda p, l: F.when(
-            p.isNull(), F.hll_sketch_estimate(l)
-        ).otherwise(F.hll_sketch_estimate(F.hll_union(p, l))),
-    )
+    est = chunked_scan(
+        ev, "k", ["ts", "rid"], {"sk": hll_distinct_scan("v")}, chunk_days=30
+    ).select("rid", F.hll_sketch_estimate("sk").alias("est"))
     got = {r.rid: r.est for r in est.collect()}
     assert len(got) == n
     # true running distinct of i // 2 over the first rid+1 rows
